@@ -52,7 +52,8 @@ object Tables {
 
   /** Session defaults shared by Verify / Bench / tests: UTC, modest shuffle
     * parallelism for local mode, AQE on (scale-out posture: skew joins and
-    * runtime coalescing matter at 100 TB, cost nothing here).
+    * runtime coalescing matter at 100 TB, cost nothing here), and
+    * `LocalFs.scala`'s fork-free filesystem for `file:` paths.
     */
   def session(master: String, shufflePartitions: Int): SparkSession = {
     val spark = SparkSession.builder()
@@ -75,6 +76,11 @@ object Tables {
       // builds read the events fixture at all
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.GraftExtensions")
+      // local files through both Hadoop APIs without a shell process per
+      // file (see ForkFreeRawLocalFileSystem); other schemes keep Hadoop's
+      .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[ForkFreeLocalFs].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

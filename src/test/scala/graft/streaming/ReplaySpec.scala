@@ -28,7 +28,7 @@ class ReplaySpec extends SparkSpec {
       .option("checkpointLocation",
         Files.createTempDirectory("graft_replay_ck").toString)
       .start()
-    q.awaitTermination(120000)
+    try assert(q.awaitTermination(120000), "replay did not drain") finally q.stop()
 
     assert(rows === snaps.count())
     assert(batches >= 4, s"expected >=4 paced batches, got $batches")
@@ -59,7 +59,7 @@ class ReplaySpec extends SparkSpec {
       .option("checkpointLocation",
         Files.createTempDirectory("graft_replay2_ck").toString)
       .start()
-    q.awaitTermination(120000)
+    try assert(q.awaitTermination(120000), "replay did not drain") finally q.stop()
     // the thunk must have been invoked once per micro-batch (2 slices,
     // maxFilesPerTrigger=1 → ≥2 batches), not once at composition time
     assert(dimReads >= 2, s"dimension read $dimReads times, expected per-batch")

@@ -41,7 +41,8 @@ class StreamScannerSpec extends SparkSpec {
       .outputMode(OutputMode.Append())
       .trigger(Trigger.AvailableNow())
       .start()
-    try q.awaitTermination(180000) finally q.stop()
+    try assert(q.awaitTermination(180000), "pair scan did not drain")
+    finally q.stop()
 
     val rows = spark.table("ss_scan")
       .filter($"kalshi_ticker" === "K1" && $"profit_margin" > 0.1)
@@ -107,8 +108,8 @@ class StreamScannerSpec extends SparkSpec {
         .trigger(Trigger.AvailableNow())
         .option("checkpointLocation", ck)
         .start()
-      q.awaitTermination(180000)
-      q.stop()
+      try assert(q.awaitTermination(180000), "pair scan did not drain")
+      finally q.stop()
     }
     // restarted path: two slices (one completed join), die, resume with
     // the SAME checkpoint once the rest has arrived
@@ -141,17 +142,25 @@ class StreamScannerSpec extends SparkSpec {
   test("flatMapGroupsWithState keeps the newest value per series (TTL state)") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[SnapIn]
-    mem.addData(
+    val end = mem.addData(
       SnapIn("T1", "kalshi", ts(10), 1, "{}"),
       SnapIn("T1", "kalshi", ts(50), 2, "{}"),
       SnapIn("T2", "kalshi", ts(20), 3, "{}"),
-      SnapIn("T1", "kalshi", ts(30), 4, "{}")) // out-of-order, must lose
+      SnapIn("T1", "kalshi", ts(30), 4, "{}")).json // out-of-order, must lose
+    // a processing-time timeout keeps no-data batches running, so this
+    // query neither terminates (AvailableNow) nor goes idle
+    // (processAllAvailable): stop once a completed batch has read the input
     val q = StreamScanner.latestWithTtl(mem.toDS(), ttlMs = 60000)
       .writeStream.format("memory").queryName("ttl_latest")
       .outputMode(OutputMode.Update())
-      .trigger(Trigger.AvailableNow())
       .start()
-    try q.awaitTermination(180000) finally q.stop()
+    try {
+      def processed = Option(q.lastProgress).exists(_.sources.head.endOffset == end)
+      val deadline = System.nanoTime() + 180000000000L
+      while (!processed && q.isActive && System.nanoTime() < deadline)
+        q.awaitTermination(50)
+      assert(processed, "the input was not processed within 180 s")
+    } finally q.stop()
 
     val last = spark.table("ttl_latest")
       .groupBy("ticker").agg(org.apache.spark.sql.functions.max_by(

@@ -102,7 +102,7 @@ class StreamingSpec extends SparkSpec {
       mem.addData(
         Snap(Timestamp.valueOf("2024-01-01 10:00:00"), 1, "T1", "kalshi", "{}"),
         Snap(Timestamp.valueOf("2024-01-02 10:00:00"), 2, "0xc1", "polymarket", "{}"))
-      q.awaitTermination(60000)
+      assert(q.awaitTermination(60000), "bifurcated lane did not drain")
 
       assert(tradingRows === 2L) // trading lane saw every row
       val stored = spark.read.parquet(outDir)
