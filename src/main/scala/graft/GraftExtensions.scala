@@ -2,13 +2,16 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+
+import graft.functions._
 
 /** Engine extensions — registered on every session via
   * `spark.sql.extensions=graft.GraftExtensions` (see `Tables.session`).
-  * Currently one native function: `long_dot` (integer array dot product,
-  * `functions/LongDotProduct.scala`). */
+  * Injects graft's native SQL functions, one per row of
+  * [[GraftExtensions.sqlFunctions]]. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  import GraftExtensions._
 
   /** Wrong-arity calls surface as the same AnalysisException (error class
     * WRONG_NUM_ARGS) users get from builtin functions during resolution —
@@ -29,207 +32,103 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     new ExpressionInfo(className, null, name, usage,
       "", "", "", "", "", "", "built-in")
 
-  private def checkArity(name: String, expected: Int,
-                         children: Seq[Expression]): Unit =
-    if (children.length != expected)
-      wrongNumArgs(name, expected.toString, children.length)
+  override def apply(ext: SparkSessionExtensions): Unit =
+    sqlFunctions.foreach { f =>
+      ext.injectFunction((
+        FunctionIdentifier(f.name),
+        info(f.cls.getName, f.name, f.usage),
+        (children: Seq[Expression]) => {
+          if (!f.arity.accepts(children.length))
+            wrongNumArgs(f.name, f.arity.expected, children.length)
+          f.build(children)
+        }))
+    }
+}
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("long_dot"),
-      info(classOf[functions.LongDotProduct].getName,
-        "long_dot", "long_dot(a, b) - integer dot product of two bigint arrays"),
-      (children: Seq[Expression]) => {
-        checkArity("long_dot", 2, children)
-        functions.LongDotProduct(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("count_in"),
-      info(classOf[functions.CountInSet].getName,
-        "count_in", "count_in(arr, 'a', 'b', ...) - count of arr elements in the constant set"),
-      (children: Seq[Expression]) => functions.CountInSet(children)))
-    ext.injectFunction((
-      FunctionIdentifier("simhash16"),
-      info(classOf[functions.SimHash16].getName,
-        "simhash16", "simhash16(arr) - 16-bit nibble-majority SimHash of an array of hex digests"),
-      (children: Seq[Expression]) => {
-        checkArity("simhash16", 1, children)
-        functions.SimHash16(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      info(classOf[functions.SimHash64].getName,
-        "simhash64", "simhash64(arr) - 64-bit nibble-bit-majority SimHash of an array of hex digests"),
-      (children: Seq[Expression]) => {
-        checkArity("simhash64", 1, children)
-        functions.SimHash64(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("byte_simhash32"),
-      info(classOf[functions.ByteSimHash32].getName,
-        "byte_simhash32", "byte_simhash32(payload) - 32-bit SimHash over dense 4-byte shingles of a binary payload"),
-      (children: Seq[Expression]) => {
-        checkArity("byte_simhash32", 1, children)
-        functions.ByteSimHash32(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("byte_simhash64"),
-      info(classOf[functions.ByteSimHash64].getName,
-        "byte_simhash64", "byte_simhash64(payload) - 64-bit SimHash over dense 4-byte shingles of a binary payload"),
-      (children: Seq[Expression]) => {
-        checkArity("byte_simhash64", 1, children)
-        functions.ByteSimHash64(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("byte_hist16"),
-      info(classOf[functions.ByteHist16].getName,
-        "byte_hist16", "byte_hist16(payload) - 16-bin low-nibble byte histogram of a binary payload as array<bigint>"),
-      (children: Seq[Expression]) => {
-        checkArity("byte_hist16", 1, children)
-        functions.ByteHist16(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("jaccard_sim"),
-      info(classOf[functions.ArrayJaccard].getName,
-        "jaccard_sim", "jaccard_sim(a, b) - set-semantics Jaccard similarity of two string arrays"),
-      (children: Seq[Expression]) => {
-        checkArity("jaccard_sim", 2, children)
-        functions.ArrayJaccard(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("word_shingles"),
-      info(classOf[functions.WordShingles].getName,
-        "word_shingles", "word_shingles(text) - distinct 3-word shingles of a normalized string"),
-      (children: Seq[Expression]) => {
-        if (children.length != 1 && children.length != 2)
-          wrongNumArgs("word_shingles", "1 or 2", children.length)
-        functions.WordShingles(children.head,
-          children.drop(1).headOption.getOrElse(
-            org.apache.spark.sql.catalyst.expressions.Literal(3)))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("word_shingles_all"),
-      info(classOf[functions.WordShinglesAll].getName,
-        "word_shingles_all",
-        "word_shingles_all(text, n) - ALL n-word shingles in positional order"),
-      (children: Seq[Expression]) => {
-        checkArity("word_shingles_all", 2, children)
-        functions.WordShinglesAll(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_bands"),
-      info(classOf[functions.MinhashBands].getName,
-        "minhash_bands", "minhash_bands(shingles) - the 4 LSH band signatures (8 md5-slice minhashes)"),
-      (children: Seq[Expression]) => {
-        checkArity("minhash_bands", 1, children)
-        functions.MinhashBands(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("hamming_near_pairs"),
-      info(classOf[functions.HammingNearPairs].getName,
-        "hamming_near_pairs",
-        "hamming_near_pairs(members, maxHamming) - value-ordered near pairs (id_a, id_b, hamming) within one banded bucket"),
-      (children: Seq[Expression]) => {
-        checkArity("hamming_near_pairs", 2, children)
-        functions.HammingNearPairs(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("cosine_near_pairs"),
-      info(classOf[functions.CosineNearPairs].getName,
-        "cosine_near_pairs",
-        "cosine_near_pairs(members, threshold) - value-ordered pairs (id_a, id_b, cosine) at cosine >= threshold within one capped bucket"),
-      (children: Seq[Expression]) => {
-        checkArity("cosine_near_pairs", 2, children)
-        functions.CosineNearPairs(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("nearest_cell"),
-      info(classOf[functions.NearestCell].getName,
-        "nearest_cell", "nearest_cell(v, flat, cells, c2s) - IVF cell argmin by exact integer distance"),
-      (children: Seq[Expression]) => {
-        checkArity("nearest_cell", 4, children)
-        functions.NearestCell(children.head, children(1), children(2),
-          children(3))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("bpe_count"),
-      info(classOf[functions.BpeCount].getName,
-        "bpe_count", "bpe_count(text, 'piece', ...) - greedy longest-match subword count against a constant merge vocab"),
-      (children: Seq[Expression]) => {
-        if (children.length < 2)
-          wrongNumArgs("bpe_count", "2 or more", children.length)
-        functions.BpeCount(children.head, children.tail, Nil)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("bpe_split"),
-      info(classOf[functions.BpeSplit].getName,
-        "bpe_split", "bpe_split(text, 'piece', ...) - greedy longest-match subword tokenization against a constant merge vocab"),
-      (children: Seq[Expression]) => {
-        if (children.length < 2)
-          wrongNumArgs("bpe_split", "2 or more", children.length)
-        functions.BpeSplit(children.head, children.tail, Nil)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("norm_text"),
-      info(classOf[functions.NormText].getName,
-        "norm_text", "norm_text(s) - lower + trim + collapse whitespace runs to one space"),
-      (children: Seq[Expression]) => {
-        checkArity("norm_text", 1, children)
-        functions.NormText(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("first_codepoint"),
-      info(classOf[functions.FirstCodePoint].getName,
-        "first_codepoint",
-        "first_codepoint(s) - Unicode code point of the first character (-1 on empty, the DuckDB unicode() convention)"),
-      (children: Seq[Expression]) => {
-        checkArity("first_codepoint", 1, children)
-        functions.FirstCodePoint(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("codepoint_char"),
-      info(classOf[functions.CodePointChar].getName,
-        "codepoint_char",
-        "codepoint_char(cp) - single-character string of a Unicode code point (the DuckDB chr() convention; inverse of first_codepoint)"),
-      (children: Seq[Expression]) => {
-        checkArity("codepoint_char", 1, children)
-        functions.CodePointChar(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("kalshi_max_cents"),
-      info(classOf[functions.KalshiExtremeCents].getName,
-        "kalshi_max_cents",
-        "kalshi_max_cents(json, side) - best (max) integer-cent price of a Kalshi book side"),
-      (children: Seq[Expression]) => {
-        checkArity("kalshi_max_cents", 2, children)
-        functions.KalshiExtremeCents(children.head, children(1), isMax = true)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("kalshi_min_cents"),
-      info(classOf[functions.KalshiExtremeCents].getName,
-        "kalshi_min_cents",
-        "kalshi_min_cents(json, side) - worst (min) integer-cent price of a Kalshi book side"),
-      (children: Seq[Expression]) => {
-        checkArity("kalshi_min_cents", 2, children)
-        functions.KalshiExtremeCents(children.head, children(1), isMax = false)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("poly_max_price"),
-      info(classOf[functions.PolyExtremePrice].getName,
-        "poly_max_price",
-        "poly_max_price(json, side) - best (max) price of a Polymarket book side"),
-      (children: Seq[Expression]) => {
-        checkArity("poly_max_price", 2, children)
-        functions.PolyExtremePrice(children.head, children(1), isMax = true)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("poly_min_price"),
-      info(classOf[functions.PolyExtremePrice].getName,
-        "poly_min_price",
-        "poly_min_price(json, side) - worst (min) price of a Polymarket book side"),
-      (children: Seq[Expression]) => {
-        checkArity("poly_min_price", 2, children)
-        functions.PolyExtremePrice(children.head, children(1), isMax = false)
-      }))
-  }
+object GraftExtensions {
+
+  /** The argument counts a function accepts, and how WRONG_NUM_ARGS
+    * words them (`expectedNum`). */
+  private[graft] final case class Arity(accepts: Int => Boolean, expected: String)
+
+  private def exactly(n: Int) = Arity(_ == n, n.toString)
+  private val AnyNumber = Arity(_ => true, "any")
+
+  /** One native SQL function: its name, implementing class, usage text,
+    * accepted arity and the builder from its (arity-checked) arguments. */
+  private[graft] final case class Fn(
+      name: String, cls: Class[_ <: Expression], usage: String,
+      arity: Arity, build: Seq[Expression] => Expression)
+
+  private[graft] val sqlFunctions: Seq[Fn] = Seq(
+    Fn("long_dot", classOf[LongDotProduct],
+      "long_dot(a, b) - integer dot product of two bigint arrays",
+      exactly(2), c => LongDotProduct(c(0), c(1))),
+    Fn("count_in", classOf[CountInSet],
+      "count_in(arr, 'a', 'b', ...) - count of arr elements in the constant set",
+      AnyNumber, c => CountInSet(c)),
+    Fn("simhash16", classOf[HexSimHash],
+      "simhash16(arr) - 16-bit nibble-majority SimHash of an array of hex digests",
+      exactly(1), c => HexSimHash(c(0), 16)),
+    Fn("simhash64", classOf[HexSimHash],
+      "simhash64(arr) - 64-bit nibble-bit-majority SimHash of an array of hex digests",
+      exactly(1), c => HexSimHash(c(0), 64)),
+    Fn("byte_simhash32", classOf[ByteSimHash],
+      "byte_simhash32(payload) - 32-bit SimHash over dense 4-byte shingles of a binary payload",
+      exactly(1), c => ByteSimHash(c(0), 32)),
+    Fn("byte_simhash64", classOf[ByteSimHash],
+      "byte_simhash64(payload) - 64-bit SimHash over dense 4-byte shingles of a binary payload",
+      exactly(1), c => ByteSimHash(c(0), 64)),
+    Fn("byte_hist16", classOf[ByteHist16],
+      "byte_hist16(payload) - 16-bin low-nibble byte histogram of a binary payload as array<bigint>",
+      exactly(1), c => ByteHist16(c(0))),
+    Fn("jaccard_sim", classOf[ArrayJaccard],
+      "jaccard_sim(a, b) - set-semantics Jaccard similarity of two string arrays",
+      exactly(2), c => ArrayJaccard(c(0), c(1))),
+    Fn("word_shingles", classOf[WordShingles],
+      "word_shingles(text) - distinct 3-word shingles of a normalized string",
+      Arity(n => n == 1 || n == 2, "1 or 2"),
+      c => WordShingles(c(0), c.lift(1).getOrElse(Literal(3)))),
+    Fn("word_shingles_all", classOf[WordShinglesAll],
+      "word_shingles_all(text, n) - ALL n-word shingles in positional order",
+      exactly(2), c => WordShinglesAll(c(0), c(1))),
+    Fn("minhash_bands", classOf[MinhashBands],
+      "minhash_bands(shingles) - the 4 LSH band signatures (8 md5-slice minhashes)",
+      exactly(1), c => MinhashBands(c(0))),
+    Fn("hamming_near_pairs", classOf[HammingNearPairs],
+      "hamming_near_pairs(members, maxHamming) - value-ordered near pairs (id_a, id_b, hamming) within one banded bucket",
+      exactly(2), c => HammingNearPairs(c(0), c(1))),
+    Fn("cosine_near_pairs", classOf[CosineNearPairs],
+      "cosine_near_pairs(members, threshold) - value-ordered pairs (id_a, id_b, cosine) at cosine >= threshold within one capped bucket",
+      exactly(2), c => CosineNearPairs(c(0), c(1))),
+    Fn("nearest_cell", classOf[NearestCell],
+      "nearest_cell(v, flat, cells, c2s) - IVF cell argmin by exact integer distance",
+      exactly(4), c => NearestCell(c(0), c(1), c(2), c(3))),
+    Fn("bpe_count", classOf[BpeCount],
+      "bpe_count(text, 'piece', ...) - greedy longest-match subword count against a constant merge vocab",
+      Arity(_ >= 2, "2 or more"), c => BpeCount(c.head, c.tail, Nil)),
+    Fn("bpe_split", classOf[BpeSplit],
+      "bpe_split(text, 'piece', ...) - greedy longest-match subword tokenization against a constant merge vocab",
+      Arity(_ >= 2, "2 or more"), c => BpeSplit(c.head, c.tail, Nil)),
+    Fn("norm_text", classOf[NormText],
+      "norm_text(s) - lower + trim + collapse whitespace runs to one space",
+      exactly(1), c => NormText(c(0))),
+    Fn("first_codepoint", classOf[FirstCodePoint],
+      "first_codepoint(s) - Unicode code point of the first character (-1 on empty, the DuckDB unicode() convention)",
+      exactly(1), c => FirstCodePoint(c(0))),
+    Fn("codepoint_char", classOf[CodePointChar],
+      "codepoint_char(cp) - single-character string of a Unicode code point (the DuckDB chr() convention; inverse of first_codepoint)",
+      exactly(1), c => CodePointChar(c(0))),
+    Fn("kalshi_max_cents", classOf[BookExtreme],
+      "kalshi_max_cents(json, side) - best (max) integer-cent price of a Kalshi book side",
+      exactly(2), c => BookExtreme(c(0), c(1), BookExtreme.Kalshi, isMax = true)),
+    Fn("kalshi_min_cents", classOf[BookExtreme],
+      "kalshi_min_cents(json, side) - worst (min) integer-cent price of a Kalshi book side",
+      exactly(2), c => BookExtreme(c(0), c(1), BookExtreme.Kalshi, isMax = false)),
+    Fn("poly_max_price", classOf[BookExtreme],
+      "poly_max_price(json, side) - best (max) price of a Polymarket book side",
+      exactly(2), c => BookExtreme(c(0), c(1), BookExtreme.Polymarket, isMax = true)),
+    Fn("poly_min_price", classOf[BookExtreme],
+      "poly_min_price(json, side) - worst (min) price of a Polymarket book side",
+      exactly(2), c => BookExtreme(c(0), c(1), BookExtreme.Polymarket, isMax = false)))
 }

@@ -14,7 +14,8 @@ object ProbeJobs {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1).toSeq
-    val spark = sources.Tables.session("local[32]", 32)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = sources.Tables.session(s"local[$cpus]", cpus)
     try graft.sources.Snapshots.store(spark, sfDir)
       .write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }

@@ -8,6 +8,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * this object is the single aggregation point the driver introspects.
   */
 object SparkEntry {
+  private[graft] type Query = (SparkSession, String) => DataFrame
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {
     // the driver may hand us a session built without Tables.session's
@@ -21,52 +23,37 @@ object SparkEntry {
       spark, "/root/testdata/sf0.001")
   }
 
+  /** Each functional module's (queries, oracle) registry pair, listed
+    * once; [[queries]] and [[oracleSql]] are their unions. */
+  private[graft] def modules: Seq[(Map[String, Query], Map[String, String])] =
+    Seq(
+      analytics.AnalyticsQueries.queries -> analytics.AnalyticsQueries.oracle,
+      analytics.WindowStats.queries -> analytics.WindowStats.oracle,
+      analytics.EventAnalytics.queries -> analytics.EventAnalytics.oracle,
+      text.Vocab.queries -> text.Vocab.oracle,
+      text.LmStore.queries -> text.LmStore.oracle,
+      relational.RelationalQueries.queries -> relational.RelationalQueries.oracle,
+      scanner.PairScan.queries -> scanner.PairScan.oracle,
+      ledger.Ledger.queries -> ledger.Ledger.oracle,
+      text.TextOps.queries -> text.TextOps.oracle,
+      text.BpeMerges.queries -> text.BpeMerges.oracle,
+      text.TokenIdStore.queries -> text.TokenIdStore.oracle,
+      text.NearDup.queries -> text.NearDup.oracle,
+      text.Curation.queries -> text.Curation.oracle,
+      text.Boilerplate.queries -> text.Boilerplate.oracle,
+      text.SpanDedup.queries -> text.SpanDedup.oracle,
+      operators.TemporalJoins.queries -> operators.TemporalJoins.oracle,
+      plans.PlanQueries.queries -> plans.PlanQueries.oracle,
+      ann.Similarity.queries -> ann.Similarity.oracle,
+      multimodal.Multimodal.queries -> multimodal.Multimodal.oracle,
+      sinks.SinkQueries.queries -> sinks.SinkQueries.oracle,
+      schema.SchemaQueries.queries -> schema.SchemaQueries.oracle)
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    analytics.AnalyticsQueries.queries ++
-      analytics.WindowStats.queries ++
-      analytics.EventAnalytics.queries ++
-      text.Vocab.queries ++
-      text.LmStore.queries ++
-      relational.RelationalQueries.queries ++
-      scanner.PairScan.queries ++
-      ledger.Ledger.queries ++
-      text.TextOps.queries ++
-      text.BpeMerges.queries ++
-      text.TokenIdStore.queries ++
-      text.NearDup.queries ++
-      text.Curation.queries ++
-      text.Boilerplate.queries ++
-      text.SpanDedup.queries ++
-      operators.TemporalJoins.queries ++
-      plans.PlanQueries.queries ++
-      ann.Similarity.queries ++
-      multimodal.Multimodal.queries ++
-      sinks.SinkQueries.queries ++
-      schema.SchemaQueries.queries
+    modules.map(_._1).reduce(_ ++ _)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    analytics.AnalyticsQueries.oracle ++
-      analytics.WindowStats.oracle ++
-      analytics.EventAnalytics.oracle ++
-      text.Vocab.oracle ++
-      text.LmStore.oracle ++
-      relational.RelationalQueries.oracle ++
-      scanner.PairScan.oracle ++
-      ledger.Ledger.oracle ++
-      text.TextOps.oracle ++
-      text.BpeMerges.oracle ++
-      text.TokenIdStore.oracle ++
-      text.NearDup.oracle ++
-      text.Curation.oracle ++
-      text.Boilerplate.oracle ++
-      text.SpanDedup.oracle ++
-      operators.TemporalJoins.oracle ++
-      plans.PlanQueries.oracle ++
-      ann.Similarity.oracle ++
-      multimodal.Multimodal.oracle ++
-      sinks.SinkQueries.oracle ++
-      schema.SchemaQueries.oracle
+  def oracleSql: Map[String, String] = modules.map(_._2).reduce(_ ++ _)
 }

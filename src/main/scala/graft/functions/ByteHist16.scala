@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 /** 16-bin LOW-NIBBLE byte histogram of a binary payload:
   * `byte_hist16(payload)` — bin k counts the bytes whose low nibble
   * (`b & 0xF`) is k; returns the 16 counts as `array<bigint>`. One
-  * codegen'd integer pass over the bytes (the [[ByteSimHash32]]
+  * codegen'd integer pass over the bytes (the [[ByteSimHash]]
   * discipline — an HOF spelling would re-scan the payload per bin,
   * 16 interpreted passes where this is one).
   *

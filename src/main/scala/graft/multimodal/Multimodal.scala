@@ -163,7 +163,7 @@ object Multimodal {
     * a byte-shingle SimHash: every dense 4-byte window of the payload
     * votes per bit into a 32-bit signature via the codegen'd
     * `byte_simhash32` kernel (one integer-arithmetic pass over the
-    * bytes; `functions/ByteSimHash32.scala` documents why not
+    * bytes; `functions/ByteSimHash.scala` documents why not
     * md5-per-shingle) — the byte-level analog of the text family's token
     * SimHash, robust to local edits (a changed region flips only its own
     * windows' votes).
@@ -214,7 +214,7 @@ object Multimodal {
 
   /** 64-bit SCALE form of [[mediaDedupNear]] — the width its scaladoc
     * names for ~10⁹ assets: `byte_simhash64` signatures
-    * (`functions/ByteSimHash64.scala`; low half equals the 32-bit
+    * (`functions/ByteSimHash.scala`; low half equals the 32-bit
     * signature), 4×16-bit bands with EXACT pigeonhole recall at the
     * default Hamming≤3, and — new vs the 32-bit view — the
     * family-shared sub-salt cap on oversized band buckets. The plan is

@@ -513,9 +513,10 @@ object NearDup {
     * sig16 = the even bits of sig64's low 32 bits, compressed — five
     * mask/shift steps of the classic parallel bit-compress (Hacker's
     * Delight §7-4), pure long arithmetic inside whole-stage codegen.
-    * [[graft.functions.SimHash16]] stays registered as the independent
-    * definitional kernel; TextSpec cross-checks this derivation against
-    * it so the two definitions cannot drift apart silently. */
+    * `simhash16` ([[graft.functions.HexSimHash]] at 16 bits) stays
+    * registered as the independent definitional kernel; TextSpec
+    * cross-checks this derivation against it so the two definitions
+    * cannot drift apart silently. */
   def simhash16From64(sig64: Column): Column =
     Seq((1, 0x33333333L), (2, 0x0F0F0F0FL), (4, 0x00FF00FFL),
       (8, 0x0000FFFFL))
@@ -691,7 +692,7 @@ object NearDup {
 
   /** 64-bit SimHash signatures — the SCALE form of [[simhash]]: same
     * distinct-token vote discipline, but the `simhash64` kernel
-    * (`functions/SimHash64.scala`) slices 64 nibble-BIT votes from each
+    * (`functions/HexSimHash.scala`) slices 64 nibble-BIT votes from each
     * token's md5 (2 bits per nibble × 32 nibbles) instead of 16
     * nibble-parity votes. 16 bits = 65,536 distinct signatures: at ~10⁶
     * docs the signature-grouped keeper merges unrelated docs by

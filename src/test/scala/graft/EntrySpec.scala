@@ -19,6 +19,17 @@ class EntrySpec extends SparkSpec {
     assert((o -- q).isEmpty, s"oracles without a query: ${o -- q}")
   }
 
+  test("no query or oracle name is registered by two modules") {
+    // queries and oracleSql are unions of the modules' maps, and `++`
+    // keeps the last entry for a repeated key without a word
+    def repeated(names: Seq[String]) =
+      names.groupBy(identity).collect { case (n, ns) if ns.size > 1 => n }
+    val qs = repeated(SparkEntry.modules.flatMap(_._1.keys))
+    assert(qs.isEmpty, s"query names registered twice: $qs")
+    val os = repeated(SparkEntry.modules.flatMap(_._2.keys))
+    assert(os.isEmpty, s"oracle names registered twice: $os")
+  }
+
   test("entry self-provisions its read confs and returns rows") {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
     spark.conf.set("spark.sql.session.timeZone", "America/Chicago")

@@ -38,7 +38,7 @@ class ByteSimHash32Spec extends SparkSpec {
   test("codegen and interpreted eval agree") {
     import org.apache.spark.sql.catalyst.expressions.Literal
     val payload = "abcdefgh repeated content abcdefgh".getBytes("UTF-8")
-    val expr = ByteSimHash32(Literal(payload))
+    val expr = ByteSimHash(Literal(payload), 32)
     // interpreted path directly; the DataFrame path above ran codegen
     assert(expr.eval(null) === model(payload))
   }

@@ -49,7 +49,7 @@ class ByteSimHash64Spec extends SparkSpec {
   test("codegen and interpreted eval agree; edges; local-edit stability") {
     import org.apache.spark.sql.catalyst.expressions.Literal
     val payload = "abcdefgh repeated content abcdefgh".getBytes("UTF-8")
-    assert(ByteSimHash64(Literal(payload)).eval(null) === model(payload))
+    assert(ByteSimHash(Literal(payload), 64).eval(null) === model(payload))
     val r = spark.sql(
       """SELECT byte_simhash64(CAST(NULL AS BINARY)) AS a,
         |       byte_simhash64(CAST('abc' AS BINARY)) AS b""".stripMargin)

@@ -1,0 +1,87 @@
+package graft.functions
+
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.functions._
+
+import graft.SparkSpec
+
+/** The width- and venue-parameterized kernels splice their parameter
+  * into generated Java as literals, so the generated code and the
+  * interpreted `eval` are two implementations of each SQL function. For
+  * every width and venue, the codegen'd DataFrame result must equal
+  * interpreted `eval` row by row on fixture inputs. */
+class KernelParitySpec extends SparkSpec {
+
+  private val sf = "/root/testdata/sf0.001"
+
+  /** Runs `name(x, extra...)` codegen'd over `in`'s single column `x`
+    * (codegen failures throw instead of falling back), checks the
+    * kernel sits inside a whole-stage codegen stage, and compares every
+    * row with `kernel(literal args).eval`. */
+  private def assertParity(name: String, in: DataFrame, extra: String*)(
+      kernel: Seq[Expression] => Expression): Unit = {
+    val confs = Seq("spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val xType = in.schema("x").dataType
+      val df = in.select(col("x"),
+        call_function(name, (col("x") +: extra.map(lit)): _*))
+      val fused = df.queryExecution.executedPlan.collect {
+        case w: WholeStageCodegenExec => w
+      }.exists(_.child.exists(
+        _.expressions.exists(_.exists(_.prettyName == name))))
+      assert(fused, s"$name is not whole-stage codegen'd:\n" +
+        df.queryExecution.executedPlan)
+      val rows = df.collect()
+      assert(rows.count(!_.isNullAt(1)) > 0, s"$name gave only nulls")
+      val bad = rows.filterNot { r =>
+        kernel(Literal.create(r.get(0), xType) +: extra.map(Literal(_)))
+          .eval(null) == r.get(1)
+      }
+      assert(bad.isEmpty, s"$name($extra): codegen != eval on " +
+        bad.take(3).map(_.get(0)).mkString("; "))
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  private def docs: DataFrame = spark.read.parquet(s"$sf/documents.parquet")
+
+  test("simhash16 and simhash64: codegen equals eval on fixture md5 arrays") {
+    val words: Column = array_distinct(
+      split(graft.text.TextOps.norm(col("text")), " "))
+    // checkpointed so the kernel's project reads an RDD scan, not the
+    // interpreted md5 transform
+    val lh = docs.select(transform(words, t => md5(t.cast("binary"))).as("x"))
+      .localCheckpoint()
+    assertParity("simhash16", lh)(c => HexSimHash(c.head, 16))
+    assertParity("simhash64", lh)(c => HexSimHash(c.head, 64))
+  }
+
+  test("byte_simhash32 and byte_simhash64: codegen equals eval on fixture text bytes") {
+    val bytes = docs.select(col("text").cast("binary").as("x"))
+    assertParity("byte_simhash32", bytes)(c => ByteSimHash(c.head, 32))
+    assertParity("byte_simhash64", bytes)(c => ByteSimHash(c.head, 64))
+  }
+
+  test("book extremes: codegen equals eval for both venues and sides on snapshot books") {
+    // both venues' books: each reader also meets the other venue's
+    // payloads, which must read as null on both paths
+    val books = graft.sources.Snapshots.store(spark, sf)
+      .select(col("full_orderbook").as("x"))
+    import BookExtreme.{Kalshi, Polymarket}
+    for ((name, venue, isMax, sides) <- Seq(
+           ("kalshi_max_cents", Kalshi, true, Seq("yes", "no")),
+           ("kalshi_min_cents", Kalshi, false, Seq("yes", "no")),
+           ("poly_max_price", Polymarket, true, Seq("bids", "asks")),
+           ("poly_min_price", Polymarket, false, Seq("bids", "asks")));
+         side <- sides)
+      assertParity(name, books, side)(c =>
+        BookExtreme(c(0), c(1), venue, isMax))
+  }
+}
