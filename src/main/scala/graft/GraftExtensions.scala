@@ -52,7 +52,7 @@ object GraftExtensions {
   private[graft] final case class Arity(accepts: Int => Boolean, expected: String)
 
   private def exactly(n: Int) = Arity(_ == n, n.toString)
-  private val AnyNumber = Arity(_ => true, "any")
+  private val TwoOrMore = Arity(_ >= 2, "2 or more")
 
   /** One native SQL function: its name, implementing class, usage text,
     * accepted arity and the builder from its (arity-checked) arguments. */
@@ -66,7 +66,7 @@ object GraftExtensions {
       exactly(2), c => LongDotProduct(c(0), c(1))),
     Fn("count_in", classOf[CountInSet],
       "count_in(arr, 'a', 'b', ...) - count of arr elements in the constant set",
-      AnyNumber, c => CountInSet(c)),
+      TwoOrMore, c => CountInSet(c)),
     Fn("simhash16", classOf[HexSimHash],
       "simhash16(arr) - 16-bit nibble-majority SimHash of an array of hex digests",
       exactly(1), c => HexSimHash(c(0), 16)),
@@ -106,10 +106,10 @@ object GraftExtensions {
       exactly(4), c => NearestCell(c(0), c(1), c(2), c(3))),
     Fn("bpe_count", classOf[BpeCount],
       "bpe_count(text, 'piece', ...) - greedy longest-match subword count against a constant merge vocab",
-      Arity(_ >= 2, "2 or more"), c => BpeCount(c.head, c.tail, Nil)),
+      TwoOrMore, c => BpeCount(c.head, c.tail, Nil)),
     Fn("bpe_split", classOf[BpeSplit],
       "bpe_split(text, 'piece', ...) - greedy longest-match subword tokenization against a constant merge vocab",
-      Arity(_ >= 2, "2 or more"), c => BpeSplit(c.head, c.tail, Nil)),
+      TwoOrMore, c => BpeSplit(c.head, c.tail, Nil)),
     Fn("norm_text", classOf[NormText],
       "norm_text(s) - lower + trim + collapse whitespace runs to one space",
       exactly(1), c => NormText(c(0))),

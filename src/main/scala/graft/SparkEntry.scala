@@ -10,7 +10,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object SparkEntry {
   private[graft] type Query = (SparkSession, String) => DataFrame
 
-  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
+  /** Flagship query on the sf0.001 fixture; callers smoke-check rows > 0.
+    *
+    * It sets the read confs it needs on the caller's session, but not the
+    * filesystem: a session built without `Tables.session` keeps Hadoop's
+    * own `file:` filesystem, which without libhadoop starts a
+    * `chmod`/`readlink` process per local file it creates or renames.
+    * Setting the fork-free one here would do nothing once anything has
+    * touched `file:`, because Hadoop's `FileSystem` cache keeps the
+    * instance it made first. Build the session with `Tables.session` to
+    * get the fork-free filesystem. */
   def entry(spark: SparkSession): DataFrame = {
     // the driver may hand us a session built without Tables.session's
     // confs. events.parquet is TIMESTAMP(NANOS): older Spark 4.x builds

@@ -64,12 +64,14 @@ object StreamBench {
 
     // --- stream-stream pair-scan probe (r9) -------------------------------
     // The core join (J1) as a production lane: both venue legs replayed
-    // from the same paced snapshot stream through the watermarked
-    // ±60 s interval join (StreamScanner.scan). Throughput is
-    // input-based (the join consumes every snapshot row); the state
-    // numbers come from the query's own progress — numRowsTotal /
-    // memoryUsedBytes of the join's state store at the 60 s watermark,
-    // the figure that bounds executor memory at scale.
+    // from the same paced snapshot stream through the keyed ±60 s pair
+    // scan (StreamScanner.scan). Throughput is input-based (the scan
+    // consumes every snapshot row); the state numbers come from the
+    // query's own progress — numRowsTotal / memoryUsedBytes of the
+    // operator's state store at the 60 s watermark, memoryUsedBytes being
+    // the figure that bounds executor memory at scale. numRowsTotal counts
+    // keys (one row per Kalshi ticker holding both legs' rows), not held
+    // snapshot rows.
     if (want("pairscan")) {
       val snaps = Snapshots.store(spark, sfDir)
       val total = snaps.count()

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.sql.Timestamp
+import java.time.Instant
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
@@ -9,15 +10,22 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import graft.functions.Books
 
 /** Streaming form of the opportunity scanner (SURVEY §7.1 step 6): the
-  * 60 s `pair_complete` gate becomes a watermarked stream-stream
-  * time-interval join — Spark's state store holds each leg for exactly
-  * the freshness window, then evicts.
+  * 60 s `pair_complete` gate becomes one keyed stateful operator, the
+  * shape of the reference's per-ticker latest-value cache
+  * (`current_kalshi_data` / `current_polymarket_data`).
   *
-  * Shape: kalshi leg ⋈ polymarket leg on the pair key with
-  * `p.ts BETWEEN k.ts - W AND k.ts + W`; watermarks on both legs bound
-  * state (ST2), margins and thresholds are the same codegen'd arithmetic
-  * as the batch scanner, so streaming and batch scans agree row-for-row
-  * on the same inputs.
+  * Shape: the Kalshi leg and the Polymarket leg (routed onto the Kalshi
+  * ticker through the broadcast pairs dimension) are unioned and grouped
+  * by `kalshi_ticker` into one `flatMapGroupsWithState` with an event-time
+  * timeout: one shuffle and one state store per shuffle partition. A key's
+  * state holds each leg's rows still inside `ts + W`; each new row pairs
+  * with the other leg's held rows and new rows, so the operator emits
+  * exactly the pairs `p.ts BETWEEN k.ts - W AND k.ts + W` of an interval
+  * join over the same watermarked legs. Rows behind the watermark are
+  * dropped on the way in (ST2), and a held row leaves the state once
+  * `ts + W` falls behind the watermark. Margins and thresholds are the same
+  * codegen'd arithmetic as the batch scanner, applied after the operator,
+  * so streaming and batch scans agree row-for-row on the same inputs.
   */
 object StreamScanner {
 
@@ -40,25 +48,81 @@ object StreamScanner {
         col("pb.yes_price").as("p_yes"), col("pb.no_price").as("p_no"))
       .withWatermark("p_ts", lateness)
 
-  /** Stream-stream scan: join legs through the (broadcast) pairs
-    * dimension key mapping with a ±`windowSec` event-time bound, emit
-    * thresholded best-side opportunities. `pairs` maps kalshi_ticker ↔
+  /** One leg's row on the pair key: a Kalshi row (`kalshi`, best bids in
+    * `yes`/`no`) or a routed Polymarket row (`condition_id`, prices in
+    * `yes`/`no`). Prices stay boxed: a missing side is null, as in SQL. */
+  case class Leg(kalshi_ticker: String, kalshi: Boolean, ts: Instant,
+                 yes: java.lang.Double, no: java.lang.Double,
+                 condition_id: String)
+
+  /** A key's state: each leg's rows still inside `ts + W`. */
+  case class Held(k: Seq[Leg], p: Seq[Leg])
+
+  /** One (Kalshi, Polymarket) pair inside the window. */
+  case class Pair(kalshi_ticker: String, condition_id: String,
+                  k_ts: Instant, p_ts: Instant,
+                  k_yes_bid: java.lang.Double, k_no_bid: java.lang.Double,
+                  p_yes: java.lang.Double, p_no: java.lang.Double)
+
+  private def micros(t: Instant): Long =
+    t.getEpochSecond * 1000000L + t.getNano / 1000
+
+  /** The operator's per-key step, for new rows and timeouts alike: pair
+    * each new row with the other leg's held rows (new Kalshi rows) or held
+    * and new rows (new Polymarket rows), so each new×new pair is emitted
+    * once; then hold what is still inside `ts + W` and time the key out at
+    * the earliest expiry. Rows behind the watermark never get here: with
+    * an event-time timeout the operator drops them on the way in. Pairing
+    * runs before eviction because the late-row cut is the previous
+    * batch's watermark, so a row admitted this batch may still meet one
+    * this batch's watermark expires. */
+  private def pairUp(windowUs: Long)(key: String, rows: Iterator[Leg],
+                                     state: GroupState[Held]): Iterator[Pair] = {
+    if (key == null) return Iterator.empty // an equi-key never matches null
+    val held = state.getOption.getOrElse(Held(Nil, Nil))
+    val (newK, newP) = rows.filter(_.ts != null).toSeq.partition(_.kalshi)
+    val allK = held.k ++ newK
+    val allP = held.p ++ newP
+    def pair(k: Leg, p: Leg): Option[Pair] =
+      if (math.abs(micros(p.ts) - micros(k.ts)) > windowUs) None
+      else Some(Pair(key, p.condition_id, k.ts, p.ts, k.yes, k.no, p.yes, p.no))
+    val out = newK.flatMap(k => held.p.flatMap(pair(k, _))) ++
+      newP.flatMap(p => allK.flatMap(pair(_, p)))
+    val wmUs = state.getCurrentWatermarkMs() * 1000L
+    def live(l: Leg): Boolean = micros(l.ts) + windowUs > wmUs
+    val keep = Held(allK.filter(live), allP.filter(live))
+    if (keep.k.isEmpty && keep.p.isEmpty) state.remove()
+    else {
+      state.update(keep)
+      // fires once the watermark reaches the earliest `ts + W` (ms)
+      val expiryUs = (keep.k ++ keep.p).map(l => micros(l.ts)).min + windowUs
+      state.setTimeoutTimestamp(math.max(1L, Math.floorDiv(expiryUs - 1, 1000L)))
+    }
+    out.iterator
+  }
+
+  /** Stream-stream scan: route the Polymarket leg onto the Kalshi ticker
+    * through the (broadcast) pairs dimension, pair the legs within
+    * ±`windowSec` of event time in one keyed operator, emit thresholded
+    * best-side opportunities. `pairs` maps kalshi_ticker ↔
     * polymarket_condition_id (static dimension). */
   def scan(kalshi: DataFrame, poly: DataFrame, pairs: DataFrame,
            windowSec: Long = 60, minProfitThreshold: Double = 0.02)
   : DataFrame = {
+    import kalshi.sparkSession.implicits._
     // route the poly leg onto the kalshi ticker via the dimension (J2/J3)
     val routedPoly = poly.join(broadcast(pairs),
       col("condition_id") === col("polymarket_condition_id"))
-      .select(col("kalshi_ticker").as("p_kalshi_ticker"),
-        col("condition_id"), col("p_ts"), col("p_yes"), col("p_no"))
+    val legs = kalshi.select(col("kalshi_ticker"), lit(true).as("kalshi"),
+      col("k_ts").as("ts"), col("k_yes_bid").as("yes"),
+      col("k_no_bid").as("no"), lit(null).cast("string").as("condition_id"))
+      .union(routedPoly.select(col("kalshi_ticker"), lit(false).as("kalshi"),
+        col("p_ts").as("ts"), col("p_yes").as("yes"), col("p_no").as("no"),
+        col("condition_id")))
 
-    val joined = kalshi.join(routedPoly,
-      col("kalshi_ticker") === col("p_kalshi_ticker") &&
-        col("p_ts") >= col("k_ts") - expr(s"INTERVAL $windowSec SECONDS") &&
-        col("p_ts") <= col("k_ts") + expr(s"INTERVAL $windowSec SECONDS"))
-
-    joined
+    legs.as[Leg].groupByKey(_.kalshi_ticker)
+      .flatMapGroupsWithState(OutputMode.Append(),
+        GroupStateTimeout.EventTimeTimeout())(pairUp(windowSec * 1000000L))
       .withColumn("m_yes", (col("k_yes_bid") - col("p_yes")) / col("p_yes"))
       .withColumn("m_no", (col("k_no_bid") - col("p_no")) / col("p_no"))
       .withColumn("direction",

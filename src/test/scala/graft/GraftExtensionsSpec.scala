@@ -8,10 +8,10 @@ import org.apache.spark.sql.AnalysisException
 class GraftExtensionsSpec extends SparkSpec {
 
   /** (name, expectedNum text of WRONG_NUM_ARGS, argument counts that
-    * must raise it); `count_in` takes any number of arguments. */
+    * must raise it). */
   private val registered: Seq[(String, String, Seq[Int])] = Seq(
     ("long_dot", "2", Seq(1, 3)),
-    ("count_in", "any", Nil),
+    ("count_in", "2 or more", Seq(0, 1)),
     ("simhash16", "1", Seq(0, 2)),
     ("simhash64", "1", Seq(0, 2)),
     ("byte_simhash32", "1", Seq(0, 2)),

@@ -7,16 +7,18 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** The width- and venue-parameterized kernels splice their parameter
-  * into generated Java as literals, so the generated code and the
-  * interpreted `eval` are two implementations of each SQL function. For
-  * every width and venue, the codegen'd DataFrame result must equal
-  * interpreted `eval` row by row on fixture inputs. */
+/** Each native kernel's generated code and its interpreted `eval` are two
+  * implementations of one SQL function (the width- and venue-parameterized
+  * ones splice their parameter into the Java as literals). For every
+  * kernel, width and venue, the codegen'd DataFrame result must equal
+  * interpreted `eval` row by row on fixture inputs. The inputs are scans
+  * (parquet or a checkpoint): over a local `Seq` the optimizer folds the
+  * projection interpreted and no generated code runs. */
 class KernelParitySpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
-  /** Runs `name(x, extra...)` codegen'd over `in`'s single column `x`
+  /** Runs `name(c1, ..., cn, extra...)` codegen'd over `in`'s columns
     * (codegen failures throw instead of falling back), checks the
     * kernel sits inside a whole-stage codegen stage, and compares every
     * row with `kernel(literal args).eval`. */
@@ -27,9 +29,9 @@ class KernelParitySpec extends SparkSpec {
     val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
-      val xType = in.schema("x").dataType
-      val df = in.select(col("x"),
-        call_function(name, (col("x") +: extra.map(lit)): _*))
+      val args = in.columns.toSeq.map(col)
+      val df = in.select(args :+ call_function(name, args ++ extra.map(lit): _*): _*)
+      val n = args.size
       val fused = df.queryExecution.executedPlan.collect {
         case w: WholeStageCodegenExec => w
       }.exists(_.child.exists(
@@ -37,10 +39,11 @@ class KernelParitySpec extends SparkSpec {
       assert(fused, s"$name is not whole-stage codegen'd:\n" +
         df.queryExecution.executedPlan)
       val rows = df.collect()
-      assert(rows.count(!_.isNullAt(1)) > 0, s"$name gave only nulls")
+      assert(rows.count(!_.isNullAt(n)) > 0, s"$name gave only nulls")
       val bad = rows.filterNot { r =>
-        kernel(Literal.create(r.get(0), xType) +: extra.map(Literal(_)))
-          .eval(null) == r.get(1)
+        kernel(in.schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+          Literal.create(r.get(i), f.dataType)
+        } ++ extra.map(Literal(_))).eval(null) == r.get(n)
       }
       assert(bad.isEmpty, s"$name($extra): codegen != eval on " +
         bad.take(3).map(_.get(0)).mkString("; "))
@@ -83,5 +86,23 @@ class KernelParitySpec extends SparkSpec {
          side <- sides)
       assertParity(name, books, side)(c =>
         BookExtreme(c(0), c(1), venue, isMax))
+  }
+
+  test("long_dot: codegen equals eval on quantized fixture embeddings") {
+    // equal lengths (a vector against its reverse) and unequal ones (the
+    // dot product runs over the shorter), checkpointed like the md5 arrays
+    val q = transform(col("embedding"), e => round(e * 1000).cast("long"))
+    val vecs = spark.read.parquet(s"$sf/embeddings.parquet").select(q.as("x"),
+      when(col("vec_id") % 2 === 0, reverse(q))
+        .otherwise(slice(reverse(q), 1, 5)).as("y"))
+      .localCheckpoint()
+    assertParity("long_dot", vecs)(c => LongDotProduct(c(0), c(1)))
+  }
+
+  test("count_in: codegen equals eval on fixture word arrays") {
+    val words = docs.select(split(graft.text.TextOps.norm(col("text")), " ").as("x"))
+      .localCheckpoint()
+    assertParity("count_in", words, "scan", "sort", "the", "zzz")(CountInSet(_))
+    assertParity("count_in", words, "window")(CountInSet(_))
   }
 }

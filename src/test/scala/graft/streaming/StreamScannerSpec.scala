@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
@@ -137,6 +138,145 @@ class StreamScannerSpec extends SparkSpec {
     assert(resumed.forall(r => r._3 == "yes" &&
       math.abs(r._4 - 0.125) < 1e-12))
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
+  }
+
+  // --- edge cases of the pair window, the watermark and the state -----
+  // The expected pairs are literals: the interval join the operator
+  // replaced emitted exactly these on the same inputs.
+
+  private val W = 60000000L // the scan's default ±60 s, in µs
+  private val T0 = 1000000000L // 1,000 s, in µs
+  private def tsUs(us: Long) = {
+    val t = new Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
+    t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
+    t
+  }
+  private def kAt(us: Long, ticker: String = "K1") =
+    Snap(tsUs(us), us, ticker, "kalshi", """{"yes":[[45,100]],"no":[[54,100]]}""")
+  private def pAt(us: Long, cond: String = "0xc1") =
+    Snap(tsUs(us), us, cond, "polymarket",
+      s"""{"condition_id":"$cond","yes_price":0.4,"no_price":0.6,"orderbook":{"bids":[],"asks":[]}}""")
+
+  /** Each batch as one parquet file, all present when the query starts,
+    * read one file per micro-batch. */
+  private def fileFeed(dir: java.io.File, batches: Seq[Seq[Snap]]): DataFrame = {
+    batches.zipWithIndex.foreach { case (b, i) =>
+      val tmp = new java.io.File(dir, s".tmp$i")
+      b.toDF().coalesce(1).write.parquet(tmp.getPath)
+      val dst = new java.io.File(dir, f"b$i%03d.parquet")
+      assert(tmp.listFiles().find(_.getName.endsWith(".parquet")).get.renameTo(dst))
+      dst.setLastModified(1700000000000L + i * 60000L)
+      org.apache.commons.io.FileUtils.deleteQuietly(tmp)
+    }
+    Replay.paced(spark, dir.getPath, Seq.empty[Snap].toDF().schema, 1)
+  }
+
+  /** Feeds each of `batches` as one micro-batch of the scan (memory sink)
+    * and returns the emitted (k_ts, p_ts) pairs in µs, sorted, with the
+    * state rows each progress reported. From a memory stream each batch
+    * is followed by the no-data batch a watermark change runs; from files
+    * the data batches run back to back, so a batch admits rows behind the
+    * watermark its predecessor advanced (the late-row cut is the watermark
+    * of the batch before). */
+  private def scanBatches(name: String, batches: Seq[Seq[Snap]],
+                          asFiles: Boolean = false)
+  : (Seq[(Long, Long)], Seq[Long]) = {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Snap]
+    val dir = java.nio.file.Files.createTempDirectory("scan_edge_").toFile
+    val df = if (asFiles) fileFeed(dir, batches) else mem.toDF()
+    val q = StreamScanner.scan(
+      StreamScanner.kalshiLeg(df), StreamScanner.polyLeg(df), pairs)
+      .writeStream.format("memory").queryName(name)
+      .outputMode(OutputMode.Append()).start()
+    try {
+      if (asFiles) q.processAllAvailable()
+      else batches.foreach { b => mem.addData(b); q.processAllAvailable() }
+    } finally {
+      q.stop()
+      org.apache.commons.io.FileUtils.deleteQuietly(dir)
+    }
+    val rows = spark.table(name).collect()
+    assert(rows.forall(r => r.getAs[String]("kalshi_ticker") == "K1" &&
+      r.getAs[String]("condition_id") == "0xc1" &&
+      r.getAs[String]("direction") == "yes" &&
+      math.abs(r.getAs[Double]("profit_margin") - 0.125) < 1e-12), rows.toSeq)
+    def us(t: Timestamp) = Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
+    (rows.toSeq.map(r => (us(r.getAs[Timestamp]("k_ts")), us(r.getAs[Timestamp]("p_ts"))))
+      .sorted, q.recentProgress.toSeq.flatMap(_.stateOperators.headOption.map(_.numRowsTotal)))
+  }
+
+  test("a pair exactly ±W apart joins, held on either leg") {
+    // the p at k - W arrives a batch before k and is held; the p at
+    // k + W arrives in k's batch
+    val (out, _) = scanBatches("edge_w",
+      Seq(Seq(pAt(T0 - W)), Seq(kAt(T0), pAt(T0 + W))))
+    assert(out === Seq((T0, T0 - W), (T0, T0 + W)))
+  }
+
+  test("a pair W + 1 µs apart does not join") {
+    val (out, _) = scanBatches("edge_w1",
+      Seq(Seq(pAt(T0 - W - 1)), Seq(kAt(T0), pAt(T0 + W + 1)),
+        Seq(pAt(T0 + W))))
+    assert(out === Seq((T0, T0 + W)))
+  }
+
+  test("both legs in one micro-batch emit each pair once") {
+    val (out, _) = scanBatches("edge_once",
+      Seq(Seq(kAt(T0), kAt(T0 + 1), pAt(T0 + 5000000L), pAt(T0 + 10000000L))))
+    assert(out === Seq((T0, T0 + 5000000L), (T0, T0 + 10000000L),
+      (T0 + 1, T0 + 5000000L), (T0 + 1, T0 + 10000000L)))
+  }
+
+  test("a leg held across three or more batches still pairs") {
+    val (out, _) = scanBatches("edge_held",
+      Seq(Seq(kAt(T0)), Seq(pAt(T0 + 1000000L, "0xdead")),
+        Seq(kAt(T0 + 2000000L, "KX")), Seq(pAt(T0 + 3000000L, "0xbeef")),
+        Seq(pAt(T0 + 50000000L))))
+    assert(out === Seq((T0, T0 + 50000000L)))
+  }
+
+  test("a Polymarket ticker outside pairs never pairs") {
+    val (out, _) = scanBatches("edge_unpaired",
+      Seq(Seq(kAt(T0), pAt(T0, "0xdead"), kAt(T0, "KX")),
+        Seq(pAt(T0 + 1000000L, "0xdead"), kAt(T0 + 1000000L, "0xdead"))))
+    assert(out.isEmpty)
+  }
+
+  test("a leg that arrives behind the watermark is dropped") {
+    // after the first batch the watermark is T0 - 60 s (= T0 - W) on both
+    // legs: a leg at exactly the watermark is late, one 1 µs after it is not
+    val (out, _) = scanBatches("edge_late",
+      Seq(Seq(kAt(T0), pAt(T0)),
+        Seq(kAt(T0 - W), kAt(T0 - W + 1), pAt(T0 - W), pAt(T0 - W + 1))))
+    assert(out === Seq((T0 - W + 1, T0 - W + 1), (T0 - W + 1, T0), (T0, T0 - W + 1),
+      (T0, T0)))
+  }
+
+  test("a held leg still pairs in the batch whose watermark expires it") {
+    // the third batch's eviction watermark is T0 + 60 s, which expires
+    // the held k at T0; its late-row cut is still T0 - 60 s, so the p at
+    // T0 + 30 s is admitted and must meet k before k is evicted
+    val (out, _) = scanBatches("edge_expiring",
+      Seq(Seq(kAt(T0), pAt(T0, "0xdead")),
+        Seq(kAt(T0 + 2 * W, "KX"), pAt(T0 + 2 * W, "0xdead")),
+        Seq(pAt(T0 + W / 2))), asFiles = true)
+    assert(out === Seq((T0, T0 + W / 2)))
+  }
+
+  test("state empties once the watermark passes every held leg (event-time timeout)") {
+    // the max policy lets a Polymarket row outside pairs advance the
+    // watermark alone, so no advancer is itself held; the held key then
+    // has no new rows and leaves the state through its timeout
+    val policy = "spark.sql.streaming.multipleWatermarkPolicy"
+    spark.conf.set(policy, "max")
+    val (out, stateRows) = try scanBatches("edge_evict",
+      Seq(Seq(kAt(T0), pAt(T0 + 10000000L)),
+        Seq(pAt(T0 + 10000000000L, "0xdead"))))
+    finally spark.conf.unset(policy)
+    assert(out === Seq((T0, T0 + 10000000L)))
+    assert(stateRows.head > 0, stateRows)
+    assert(stateRows.last === 0L, stateRows)
   }
 
   test("flatMapGroupsWithState keeps the newest value per series (TTL state)") {

@@ -93,15 +93,17 @@ class StreamingSpec extends SparkSpec {
     val outDir = Files.createTempDirectory("graft_storage").toString
     val ckDir = Files.createTempDirectory("graft_ck").toString
     var tradingRows = 0L
+    // enqueued before the start: AvailableNow fixes its end offset when the
+    // query thread starts, so data added after start() may never be read
+    mem.addData(
+      Snap(Timestamp.valueOf("2024-01-01 10:00:00"), 1, "T1", "kalshi", "{}"),
+      Snap(Timestamp.valueOf("2024-01-02 10:00:00"), 2, "0xc1", "polymarket", "{}"))
     val q = StreamingLanes.bifurcated(
       mem.toDF(), outDir,
       tradingLane = (df, _) => tradingRows += df.count(),
       trigger = Trigger.AvailableNow())
       .option("checkpointLocation", ckDir).start()
     try {
-      mem.addData(
-        Snap(Timestamp.valueOf("2024-01-01 10:00:00"), 1, "T1", "kalshi", "{}"),
-        Snap(Timestamp.valueOf("2024-01-02 10:00:00"), 2, "0xc1", "polymarket", "{}"))
       assert(q.awaitTermination(60000), "bifurcated lane did not drain")
 
       assert(tradingRows === 2L) // trading lane saw every row
