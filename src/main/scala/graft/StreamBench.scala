@@ -4,27 +4,22 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.sources.{Snapshots, Tables}
+import graft.sources.Tables
 import graft.streaming.{Replay, StreamingLanes}
 
-/** Streaming ingest throughput probe: replays the sf snapshot store
-  * through the full dual-lane pipeline (paced file stream → timing
-  * enrichment → partitioned parquet storage lane + trading-lane count)
-  * and prints one JSON line with rows/second.
-  *
-  * This is the engine-side number to hold against the reference's
-  * operational baseline (BASELINE.md: 8M+ messages/24h ≈ 93 msg/s
-  * sustained, batch_size 1000 / 5 s flush): the same at-least-once
-  * delivery discipline (checkpointed offsets + batch-id-tagged output),
-  * measured end-to-end including the storage write.
+/** Store-backed document-lane throughput probe: seeds each store with
+  * the accumulated corpus, replays the incoming split as a paced file
+  * stream through the lane, and prints one JSON line per lane with
+  * rows/second (appends included) after checking the lane is drift-free.
+  * The ingest and pair-scan lanes are measured by perfbench `stream`
+  * (open-loop latency with correctness gates), not here.
   *
   * Usage: SPARK_GRAFT_SF_DIR=... runMain graft.StreamBench [section...]
-  * With args, only the named sections run (ingest, pairscan, neardup,
-  * simhash, media, chunk, decontam, curation, curlm, fullcur,
-  * curprod, curgrid, cadence, tokmaint, lmlane, spanclean, ivf, medprod) — e.g.
+  * With args, only the named sections run (neardup, simhash, media,
+  * chunk, decontam, curation, curlm, fullcur, curprod, curgrid, cadence,
+  * tokmaint, lmlane, spanclean, ivf, medprod) — e.g.
   * `runMain graft.StreamBench curation` probes the composed curation
-  * lane alone against a (possibly synth-scaled) fixture dir without
-  * paying the full snapshot replay.
+  * lane alone against a (possibly synth-scaled) fixture dir.
   */
 object StreamBench {
   def main(args: Array[String]): Unit = {
@@ -35,78 +30,6 @@ object StreamBench {
     def want(section: String): Boolean = only.isEmpty || only(section)
 
     val work = Files.createTempDirectory("graft_streambench").toString
-    if (want("ingest")) {
-    // the real ingest data model: the staged market-snapshot store
-    val snaps = Snapshots.store(spark, sfDir)
-    val total = snaps.count()
-    Replay.stage(snaps, s"$work/in", slices = 64)
-    val schema = spark.read.parquet(s"$work/in").schema
-
-    var tradingRows = 0L
-    val stream = Replay.paced(spark, s"$work/in", schema,
-      maxFilesPerTrigger = 8)
-    val t0 = System.nanoTime()
-    val q = StreamingLanes.bifurcated(
-      stream, s"$work/store",
-      tradingLane = (df, _) => tradingRows += df.count(),
-      trigger = Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ck")
-      .start()
-    q.awaitTermination()
-    val secs = (System.nanoTime() - t0) / 1e9
-    val stored = spark.read.parquet(s"$work/store").count()
-    require(tradingRows == total && stored == total,
-      s"lane drift: staged $total, trading saw $tradingRows, stored $stored")
-    println(
-      s"""{"metric":"stream_ingest_rows_per_sec","value":${total / secs},""" +
-        s""""unit":"rows/sec","rows":$total,"secs":$secs,"sf":"$sfDir"}""")
-    }
-
-    // --- stream-stream pair-scan probe (r9) -------------------------------
-    // The core join (J1) as a production lane: both venue legs replayed
-    // from the same paced snapshot stream through the keyed ±60 s pair
-    // scan (StreamScanner.scan). Throughput is input-based (the scan
-    // consumes every snapshot row); the state numbers come from the
-    // query's own progress — numRowsTotal / memoryUsedBytes of the
-    // operator's state store at the 60 s watermark, memoryUsedBytes being
-    // the figure that bounds executor memory at scale. numRowsTotal counts
-    // keys (one row per Kalshi ticker holding both legs' rows), not held
-    // snapshot rows.
-    if (want("pairscan")) {
-      val snaps = Snapshots.store(spark, sfDir)
-      val total = snaps.count()
-      if (!new java.io.File(s"$work/in").exists())
-        Replay.stage(snaps, s"$work/in", slices = 64)
-      val schema = spark.read.parquet(s"$work/in").schema
-      val scanStream = Replay.paced(spark, s"$work/in", schema,
-        maxFilesPerTrigger = 8)
-      var outRows = 0L
-      val t1 = System.nanoTime()
-      val sq = graft.streaming.StreamScanner.scan(
-        graft.streaming.StreamScanner.kalshiLeg(scanStream),
-        graft.streaming.StreamScanner.polyLeg(scanStream),
-        Snapshots.pairs(spark))
-        .writeStream
-        .outputMode("append")
-        .foreachBatch((df: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], _: Long) => { outRows += df.count(); () })
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$work/ck_scan")
-        .start()
-      sq.awaitTermination()
-      val scanSecs = (System.nanoTime() - t1) / 1e9
-      val stateOps = sq.recentProgress.toSeq
-        .flatMap(p => Option(p.stateOperators).toSeq.flatten)
-      val stateRows =
-        if (stateOps.isEmpty) 0L else stateOps.map(_.numRowsTotal).max
-      val stateBytes =
-        if (stateOps.isEmpty) 0L else stateOps.map(_.memoryUsedBytes).max
-      println(
-        s"""{"metric":"stream_pairscan_rows_per_sec","value":${total / scanSecs},""" +
-          s""""unit":"rows/sec","rows":$total,"out_rows":$outRows,""" +
-          s""""secs":$scanSecs,"state_rows_max":$stateRows,""" +
-          s""""state_bytes_max":$stateBytes,"sf":"$sfDir"}""")
-    }
 
     // --- store-backed document ingestion lanes (r8) -----------------------
     // The production text-dedup loop over persisted state: seed each store
@@ -559,8 +482,8 @@ object StreamBench {
           idStorePath = Some(cadIds), seqShardPath = Some(cadShards))),
         ivf = Some(Maintenance.IvfCadence(cadIvf, cadCents,
           recallFloor = 0.5)),
-        compact = Seq((cadLedger, Seq("doc_id")), (cadIds,
-          Seq("doc_id", "token_idx", "vocab_version"))),
+        compact = Seq((cadLedger, Seq("doc_id")),
+          (cadIds, graft.text.TokenIdStore.key)),
         maxFiles = 64)
         .collect().map(r =>
           s"""{"protocol":"${r.getString(0)}","action":"${r.getString(1)

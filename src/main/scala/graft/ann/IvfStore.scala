@@ -30,13 +30,15 @@ import graft.sources.Staging
   * checkpoint commit re-appends — duplicate assignment rows would
   * duplicate top-k candidates, so production callers route appends
   * through a checkpointed `foreachBatch` lane and deduplicate on vec_id
-  * at compaction ([[compact]]), not at query time.
+  * at compaction ([[compact]], [[graft.sinks.KeyedStore]]), not at query
+  * time: a vec_id fully determines its assignment under fixed centroids,
+  * so key-dedup changes nothing a correct query observes.
   *
   * The stage keys are versioned (`_v1`): the staging fingerprint tracks
   * the FIXTURE, so any schema change to these frames must move to a
   * fresh key or a warm tmpdir would serve the old columns.
   */
-object IvfStore {
+object IvfStore extends graft.sinks.KeyedStore(Seq("vec_id")) {
 
   /** Stage the trained centroid frame for `corpus` once per
     * (key, kCells, fixture fingerprint); returns the store directory.
@@ -71,11 +73,6 @@ object IvfStore {
     }
   }
 
-  /** The assignment frame backing `path` — a plain parquet scan, no
-    * derivation in the plan. */
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
   /** The one-row packed broadcast form of a (cell, c) centroid frame —
     * what assignment joins against. */
   def packedRow(cents: DataFrame): DataFrame =
@@ -95,17 +92,7 @@ object IvfStore {
     * retraining. */
   def appendAssigned(path: String, batch: DataFrame,
                      centsRow: DataFrame): Unit =
-    assignBatch(batch, centsRow).write.mode("append").parquet(path)
-
-  /** Rewrite the assignment store as one row per vec_id, few large
-    * files — the maintenance call that makes replayed appends exact
-    * again (a vec_id fully determines its assignment under fixed
-    * centroids, so key-dedup changes nothing a correct query observes
-    * and removes the duplicate top-k candidates a replayed batch would
-    * introduce). Atomic-swap semantics:
-    * [[graft.sinks.StoreMaintenance]]. */
-  def compact(spark: SparkSession, path: String): Unit =
-    graft.sinks.StoreMaintenance.compactDistinct(spark, path, Seq("vec_id"))
+    append(path, assignBatch(batch, centsRow))
 
   private def fp(dir: String) = new java.io.File(dir, "embeddings.parquet")
 

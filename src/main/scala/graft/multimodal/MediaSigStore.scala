@@ -1,86 +1,16 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
-
-import graft.sources.Staging
-
-/** Persisted 64-bit byte-SimHash signature store for MEDIA assets — the
-  * [[graft.text.SimHashStore]] posture extended to the last dedup
-  * family that lacked it: sign every payload ONCE (the pass that reads
-  * every payload byte — the dominant cost of media near-dup at 10⁹
-  * assets), persist one (doc_id, simhash64) long per asset (8 bytes of
-  * state), and serve every later ingestion batch from a SCAN of signed
-  * state. Without the store, each session's near-dup query re-derives
-  * `byte_simhash64` over the full corpus — measured as the suite's
-  * single most expensive query at sf0.1 precisely because it is the
-  * one pass that cannot prune the payload column.
-  *
-  * The signature column is named `simhash64` deliberately: the
-  * incremental judge is the text family's shared banded core
-  * (`NearDup.simhashIncremental64BothSigs`), which is width- and
-  * modality-agnostic once signatures exist — media reuses the plan,
-  * the recall contract (4×16-bit bands, exact pigeonhole to Hamming 3)
-  * and the gated-compaction maintenance unchanged.
-  *
-  * Lifecycle mirrors the text stores: [[stagedCorpus]] once per
-  * fixture fingerprint, [[appendBatch]]/[[appendSigs]] per ingestion
-  * batch (parquet append only adds files), [[compact]] as the
-  * bounded-growth maintenance call (doc_id determines its signature,
-  * so key-dedup is observationally free).
-  */
-object MediaSigStore {
-
-  /** Stage the (doc_id, simhash64) frame of `store`'s assets once per
-    * (key, fixture fingerprint); returns the store directory. */
-  def stagedCorpus(key: String, fingerprintFile: java.io.File,
-                   store: DataFrame): String =
-    Staging.stage(s"media_sig_store_$key", fingerprintFile) { tmp =>
-      Multimodal.mediaSigs64(store).write.parquet(tmp)
-    }
-
-  /** The signature frame backing `path` — a plain parquet scan. */
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
-  /** Sign `batch` (an asset frame with doc_id + payload) and append its
-    * signatures to the store at `path`. */
-  def appendBatch(path: String, batch: DataFrame): Unit =
-    appendSigs(path, Multimodal.mediaSigs64(batch))
-
-  /** Append an ALREADY-derived (doc_id, simhash64) frame — the lane's
-    * entry, so a batch signed once for the verdict is not re-signed
-    * (re-signing would re-read every payload byte). */
-  def appendSigs(path: String, sigs: DataFrame): Unit =
-    sigs.write.mode("append").parquet(path)
-
-  /** One signature row per doc_id, few large files (atomic-swap
-    * semantics: [[graft.sinks.StoreMaintenance]]). */
-  def compact(spark: SparkSession, path: String): Unit =
-    graft.sinks.StoreMaintenance.compactDistinct(spark, path, Seq("doc_id"))
-
-  /** The staged store for the fixture's accumulated-corpus convention
-    * (doc_id % 10 < 8, matching the incremental query family). */
-  def fixtureCorpusStore(s: SparkSession, dir: String): String =
-    stagedCorpus(s"corpus_v1_$dir",
-      new java.io.File(dir, "documents.parquet"),
-      Multimodal.assetStore(s, dir).filter(col("doc_id") % 10 < 8))
-
-  /** The staged BENCHMARK media-signature store (doc_id < 10, the
-    * shared decontamination fixture convention) — STATIC judge state
-    * for media decontamination: the benchmark assets are signed once,
-    * ever, and only ever scanned (no appends, no compaction). */
-  def fixtureBenchmarkStore(s: SparkSession, dir: String): String =
-    stagedCorpus(s"benchmark_v1_$dir",
-      new java.io.File(dir, "documents.parquet"),
-      Multimodal.assetStore(s, dir).filter(col("doc_id") < 10))
-
-  /** The benchmark DELTA (doc_id ∈ [5, 10) — the text retro fixture's
-    * split convention): eval assets published AFTER the corpus store
-    * was signed, the input to [[Multimodal.mediaRetroSweep]]. */
-  def fixtureBenchmarkDeltaStore(s: SparkSession, dir: String): String =
-    stagedCorpus(s"benchmark_delta_v1_$dir",
-      new java.io.File(dir, "documents.parquet"),
-      Multimodal.assetStore(s, dir)
-        .filter(col("doc_id") >= 5 && col("doc_id") < 10))
-}
+/** Persisted 64-bit byte-SimHash signature store for MEDIA assets: every
+  * payload is signed ONCE (the pass that reads every payload byte, the
+  * dominant cost of media near-dup at 10⁹ assets) into one
+  * (doc_id, simhash64) long per asset, and its fixture stores split
+  * [[Multimodal.assetStore]]. The signature column is named `simhash64`
+  * deliberately: the incremental judge is the text family's shared
+  * banded core (`NearDup.simhashIncremental64BothSigs`), width- and
+  * modality-agnostic once signatures exist. The staging prefix is its
+  * own for the same reason: under [[graft.text.SimHashStore]]'s prefix
+  * the media judge would be served text signatures. Lifecycle and replay
+  * contract: [[graft.sinks.AppendStore]]. */
+object MediaSigStore extends graft.sinks.AppendStore(
+  "media_sig_store", Seq("doc_id"), Multimodal.mediaSigs64(_),
+  Multimodal.assetStore(_, _))

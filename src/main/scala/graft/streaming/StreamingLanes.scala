@@ -159,8 +159,8 @@ object StreamingLanes {
       // post-append is the lane's own maintenance window (no reader
       // holds a listing between micro-batches): compact only when the
       // appends have crossed the file-count threshold
-      val compacted = maxStoreFiles.exists(m => graft.sinks.StoreMaintenance
-        .compactIfNeeded(batch.sparkSession, storePath, m, Seq("doc_id")))
+      val compacted = maxStoreFiles.exists(m =>
+        SignatureStore.compactIfNeeded(batch.sparkSession, storePath, m))
       if (onStats != null)
         onStats(laneStats("neardup_store", batchId, verdict, compacted),
           batchId)
@@ -278,8 +278,8 @@ object StreamingLanes {
       else storeVerdict
       SimHashStore.appendSigs(storePath, isigs.join(
         verdict.filter(col("is_new")).select(col("doc_id")), "doc_id"))
-      val compacted = maxStoreFiles.exists(m => graft.sinks.StoreMaintenance
-        .compactIfNeeded(batch.sparkSession, storePath, m, Seq("doc_id")))
+      val compacted = maxStoreFiles.exists(m =>
+        SimHashStore.compactIfNeeded(batch.sparkSession, storePath, m))
       if (onStats != null)
         onStats(laneStats("simhash_store", batchId, verdict, compacted),
           batchId)
@@ -340,8 +340,8 @@ object StreamingLanes {
           else Nil): _*)
       MediaSigStore.appendSigs(storePath, isigs.join(
         verdict.filter(col("is_new")).select(col("doc_id")), "doc_id"))
-      val compacted = maxStoreFiles.exists(m => graft.sinks.StoreMaintenance
-        .compactIfNeeded(batch.sparkSession, storePath, m, Seq("doc_id")))
+      val compacted = maxStoreFiles.exists(m =>
+        MediaSigStore.compactIfNeeded(batch.sparkSession, storePath, m))
       if (onStats != null)
         onStats(laneStats("media_sig_store", batchId, verdict, compacted),
           batchId)
@@ -396,12 +396,10 @@ object StreamingLanes {
           IvfStore.read(spark, asgStorePath), centsRow,
           batch, maxHamming, threshold)
       MediaSigStore.appendSigs(sigStorePath, admittedSigs)
-      admittedAsg.write.mode("append").parquet(asgStorePath)
+      IvfStore.append(asgStorePath, admittedAsg)
       val compacted = maxStoreFiles.exists { m =>
-        val sigC = graft.sinks.StoreMaintenance.compactIfNeeded(
-          spark, sigStorePath, m, Seq("doc_id"))
-        val asgC = graft.sinks.StoreMaintenance.compactIfNeeded(
-          spark, asgStorePath, m, Seq("vec_id"))
+        val sigC = MediaSigStore.compactIfNeeded(spark, sigStorePath, m)
+        val asgC = IvfStore.compactIfNeeded(spark, asgStorePath, m)
         sigC || asgC
       }
       if (onStats != null)
@@ -453,12 +451,10 @@ object StreamingLanes {
           IvfStore.read(spark, asgStorePath), centsRow,
           batch, maxHamming, threshold)
       MediaSigStore.appendSigs(sigStorePath, admittedSigs)
-      admittedAsg.write.mode("append").parquet(asgStorePath)
+      IvfStore.append(asgStorePath, admittedAsg)
       val compacted = maxStoreFiles.exists { m =>
-        val sigC = graft.sinks.StoreMaintenance.compactIfNeeded(
-          spark, sigStorePath, m, Seq("doc_id"))
-        val asgC = graft.sinks.StoreMaintenance.compactIfNeeded(
-          spark, asgStorePath, m, Seq("vec_id"))
+        val sigC = MediaSigStore.compactIfNeeded(spark, sigStorePath, m)
+        val asgC = IvfStore.compactIfNeeded(spark, asgStorePath, m)
         sigC || asgC
       }
       if ((batchId + 1) % checkEvery == 0 &&
@@ -532,9 +528,8 @@ object StreamingLanes {
         verdict.filter(col("is_new"))
           .select(col("doc_id"), col("chunk_idx")),
         Seq("doc_id", "chunk_idx")))
-      val compacted = maxStoreFiles.exists(m => graft.sinks.StoreMaintenance
-        .compactIfNeeded(batch.sparkSession, storePath, m,
-          Seq("doc_id", "chunk_idx")))
+      val compacted = maxStoreFiles.exists(m =>
+        ChunkSigStore.compactIfNeeded(batch.sparkSession, storePath, m))
       if (onStats != null)
         onStats(laneStats("chunk_sig_store", batchId, verdict, compacted),
           batchId)
@@ -880,13 +875,13 @@ object StreamingLanes {
           .write.mode("append").parquet(lmLedgerPath)
       }
       val compacted = maxStoreFiles.exists { m =>
-        val sigC = graft.sinks.StoreMaintenance.compactIfNeeded(
-          spark, sigStorePath, m, Seq("doc_id"))
+        val sigC = SimHashStore.compactIfNeeded(spark, sigStorePath, m)
+        // the curated chunks have no store object: (doc_id, chunk_idx)
+        // determines a chunk's row
         val chkC = graft.sinks.StoreMaintenance.compactIfNeeded(
           spark, chunkStorePath, m, Seq("doc_id", "chunk_idx"))
         val quaC = qualityStorePath != null &&
-          graft.sinks.StoreMaintenance.compactIfNeeded(
-            spark, qualityStorePath, m, Seq("doc_id"))
+          QualityStore.compactIfNeeded(spark, qualityStorePath, m)
         sigC || chkC || quaC
       }
       if (onStats != null) {
@@ -941,8 +936,8 @@ object StreamingLanes {
         GramStore.read(batch.sparkSession, storePath), batch)
         .localCheckpoint(true)
       GramStore.appendCleaned(storePath, cleaned)
-      maxStoreFiles.foreach(m => graft.sinks.StoreMaintenance
-        .compactIfNeeded(batch.sparkSession, storePath, m))
+      maxStoreFiles.foreach(m =>
+        GramStore.compactIfNeeded(batch.sparkSession, storePath, m))
       process(cleaned, batchId)
       ()
     }
@@ -967,11 +962,11 @@ object StreamingLanes {
     vecs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       import graft.ann.IvfStore
       val assigned = IvfStore.assignBatch(batch, centsRow)
-      assigned.write.mode("append").parquet(storePath)
+      IvfStore.append(storePath, assigned)
       // vec_id-keyed gate: also sheds replayed-batch duplicate rows
-      // when it fires (IvfStore.compact semantics)
-      maxStoreFiles.foreach(m => graft.sinks.StoreMaintenance
-        .compactIfNeeded(batch.sparkSession, storePath, m, Seq("vec_id")))
+      // when it fires
+      maxStoreFiles.foreach(m =>
+        IvfStore.compactIfNeeded(batch.sparkSession, storePath, m))
       process(assigned, batchId)
       ()
     }
@@ -1025,9 +1020,9 @@ object StreamingLanes {
       val centsRow = IvfStore.packedRow(IvfStore.read(spark, centsPath))
       val assigned = IvfStore.assignBatch(batch, centsRow)
         .localCheckpoint(true)
-      assigned.write.mode("append").parquet(storePath)
-      maxStoreFiles.foreach(m => graft.sinks.StoreMaintenance
-        .compactIfNeeded(spark, storePath, m, Seq("vec_id")))
+      IvfStore.append(storePath, assigned)
+      maxStoreFiles.foreach(m =>
+        IvfStore.compactIfNeeded(spark, storePath, m))
       if ((batchId + 1) % checkEvery == 0)
         IvfMaintenance.retrainIfStale(spark, storePath, centsPath,
           recallFloor)

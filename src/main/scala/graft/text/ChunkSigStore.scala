@@ -1,86 +1,12 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
-
-import graft.sources.{Staging, Tables}
-
-/** Persisted CHUNK-granularity signature store — the [[SimHashStore]]
-  * posture at the granularity LLM pipelines dedupe and train on: one
-  * (doc_id, chunk_idx, simhash64) row per context window ever admitted
-  * (the 64-bit signature of the chunk's token set via the shared
-  * kernel). Serving every later ingestion batch from a SCAN of signed
-  * chunk state means the corpus text is chunked and tokenized exactly
-  * once; state is 8 bytes + the composite key per window — at stride s
-  * that is corpus_tokens/s rows, still orders of magnitude below the
-  * text it replaces.
-  *
-  * Lifecycle mirrors the doc-level stores: [[stagedCorpus]] once per
-  * fixture fingerprint, [[appendSigs]] per ingestion batch,
-  * [[compact]] keyed on (doc_id, chunk_idx) — a window's signature is
-  * determined by its key, so key-dedup is observationally free.
-  */
-object ChunkSigStore {
-
-  /** Stage `corpus`'s chunk-signature frame once per (key, granularity,
-    * fixture fingerprint); returns the store directory. Window/stride
-    * are PART OF THE STAGING KEY — two granularities staged under one
-    * key would otherwise silently share the first-staged store and
-    * judge w-token windows against differently-sized signatures. */
-  def stagedCorpus(key: String, fingerprintFile: java.io.File,
-                   corpus: DataFrame, window: Int = 32,
-                   stride: Int = 24): String =
-    Staging.stage(s"chunk_sig_store_${window}_${stride}_$key",
-      fingerprintFile) { tmp =>
-      NearDup.chunkSigs64(corpus, window, stride).write.parquet(tmp)
-    }
-
-  /** The chunk-signature frame backing `path` — a plain parquet scan. */
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
-  /** Append an ALREADY-derived (doc_id, chunk_idx, simhash64) frame —
-    * a batch chunked once for its verdict is not re-chunked here. */
-  def appendSigs(path: String, sigs: DataFrame): Unit =
-    sigs.write.mode("append").parquet(path)
-
-  /** One row per (doc_id, chunk_idx), few large files (atomic-swap
-    * semantics: [[graft.sinks.StoreMaintenance]]). */
-  def compact(spark: SparkSession, path: String): Unit =
-    graft.sinks.StoreMaintenance.compactDistinct(spark, path,
-      Seq("doc_id", "chunk_idx"))
-
-  /** The staged store for the fixture's accumulated-corpus convention
-    * (doc_id % 10 < 8, matching the incremental query family). */
-  def fixtureCorpusStore(s: SparkSession, dir: String): String =
-    stagedCorpus(s"corpus_v1_$dir",
-      new java.io.File(dir, "documents.parquet"),
-      Tables(s, dir, "documents").filter(col("doc_id") % 10 < 8))
-
-  /** The staged BENCHMARK chunk-signature store (doc_id < 10, the
-    * decontamination fixture convention) — STATIC judge state for the
-    * decontamination lane: the benchmark suite is chunked and signed
-    * once, ever, and the lane only ever scans it (no appends, so no
-    * compaction lifecycle either). */
-  def fixtureBenchmarkStore(s: SparkSession, dir: String): String =
-    stagedCorpus(s"benchmark_v1_$dir",
-      new java.io.File(dir, "documents.parquet"),
-      Tables(s, dir, "documents").filter(col("doc_id") < 10))
-
-  /** Benchmark-REFRESH fixture splits for the retro-active sweep
-    * ([[NearDup.retroSweep]]): the BASE suite (doc_id < 5) the lane
-    * originally judged against, and the DELTA (5 ≤ doc_id < 10)
-    * arriving at refresh time — together exactly the decontamination
-    * convention's doc_id < 10 benchmark, so base-then-delta replays
-    * the full suite arriving in two installments. */
-  def fixtureBenchmarkBaseStore(s: SparkSession, dir: String): String =
-    stagedCorpus(s"benchmark_base_v1_$dir",
-      new java.io.File(dir, "documents.parquet"),
-      Tables(s, dir, "documents").filter(col("doc_id") < 5))
-
-  def fixtureBenchmarkDeltaStore(s: SparkSession, dir: String): String =
-    stagedCorpus(s"benchmark_delta_v1_$dir",
-      new java.io.File(dir, "documents.parquet"),
-      Tables(s, dir, "documents")
-        .filter(col("doc_id") >= 5 && col("doc_id") < 10))
-}
+/** Persisted CHUNK-granularity signature store, at the granularity LLM
+  * pipelines dedupe and train on: one (doc_id, chunk_idx, simhash64) row
+  * per 32-token context window at stride 24 ever admitted, so the corpus
+  * text is chunked and tokenized exactly once. The granularity is part
+  * of the staging prefix: two granularities staged under one prefix
+  * would judge w-token windows against differently-sized signatures.
+  * Lifecycle and replay contract: [[graft.sinks.AppendStore]]. */
+object ChunkSigStore extends graft.sinks.AppendStore(
+  "chunk_sig_store_32_24", Seq("doc_id", "chunk_idx"),
+  NearDup.chunkSigs64(_, 32, 24))

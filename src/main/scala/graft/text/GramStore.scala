@@ -1,65 +1,29 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, explode}
 
-import graft.sources.Staging
-
-/** Persisted window-gram store for exact-substring dedup — the
-  * [[SignatureStore]] posture applied to [[SpanDedup]]: window the
-  * corpus once, append the grams of each admitted batch's CLEANED text,
-  * and clean every later batch against a plain SCAN of stored grams
-  * (zero re-windowing of accumulated corpus text).
-  *
-  * Rows are a single `gram` column. Membership is all the clean path
-  * reads, so duplicate rows are semantically harmless (they can only
-  * re-cover what they already cover) — which makes the store safe to
-  * append under the same replayed-batch semantics as the signature
-  * store: a batch re-appended after a failure between append and
-  * checkpoint commit changes nothing observable.
-  *
-  * Appending grams of the CLEANED text (not the raw batch) matters:
-  * stripped spans already exist in the store by definition, and the
-  * novel remainder is exactly what future batches must be cleaned
-  * against.
-  */
-object GramStore {
-
-  /** Stage `corpus`'s gram frame once per (key, fixture fingerprint);
-    * returns the store directory. */
-  def stagedCorpus(key: String, fingerprintFile: java.io.File,
-                   corpus: DataFrame): String =
-    Staging.stage(s"gram_store_$key", fingerprintFile) { tmp =>
-      SpanDedup.grams(corpus).write.parquet(tmp)
-    }
-
-  /** The gram frame backing `path` — a plain parquet scan. */
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+/** Persisted window-gram store for exact-substring dedup: [[SpanDedup]]'s
+  * windows as a single `gram` column, so every later batch is cleaned
+  * against a plain SCAN of stored grams. Membership is all the clean
+  * path reads, so the store compacts to its distinct rows (`Nil` key):
+  * a duplicate gram can only re-cover what it already covers.
+  * Lifecycle and replay contract: [[graft.sinks.AppendStore]]. */
+object GramStore extends graft.sinks.AppendStore(
+  "gram_store", Nil, SpanDedup.grams(_)) {
 
   /** Window `cleaned` (the output frame of
-    * [[SpanDedup.spanCleanAgainstGrams]]) and append its grams.
-    * Windows run PER SURVIVING CONTIGUOUS SEGMENT (`cleaned_segments`),
-    * not over the concatenated cleaned text: a token run bridging a
-    * removal seam never existed contiguously in any admitted document,
-    * so windowing the joined text would append phantom grams that could
-    * wrongly strip a later batch containing that seam sequence as novel
-    * text. Segments shorter than W tokens contribute no grams — those
-    * runs were never a full window in the admitted text either.
-    * Parquet append only adds files, so a concurrent reader sees either
-    * the old or the new listing. */
+    * [[SpanDedup.spanCleanAgainstGrams]]) and append its grams — the
+    * grams of the CLEANED text, since stripped spans are in the store by
+    * definition. Windows run PER SURVIVING CONTIGUOUS SEGMENT
+    * (`cleaned_segments`), not over the concatenated cleaned text: a
+    * token run bridging a removal seam never existed contiguously in any
+    * admitted document, so windowing the joined text would append
+    * phantom grams that could wrongly strip a later batch containing
+    * that seam sequence as novel text. Segments shorter than W tokens
+    * contribute no grams — those runs were never a full window in the
+    * admitted text either. */
   def appendCleaned(path: String, cleaned: DataFrame): Unit =
-    SpanDedup.grams(
-      cleaned.select(col("doc_id"),
-        explode(col("cleaned_segments")).as("text")))
-      .write.mode("append").parquet(path)
-
-  /** Rewrite the store as its DISTINCT grams, few large files — the
-    * maintenance call between lane restarts. Membership is the only
-    * thing the clean path reads, so distinct changes nothing observable
-    * while shedding the replayed-batch duplicates and per-micro-batch
-    * small files whose scan cost otherwise grows without bound
-    * (atomic-swap semantics: [[graft.sinks.StoreMaintenance]]). */
-  def compact(spark: SparkSession, path: String): Unit =
-    graft.sinks.StoreMaintenance.compactDistinct(spark, path)
+    appendBatch(path, cleaned.select(col("doc_id"),
+      explode(col("cleaned_segments")).as("text")))
 }

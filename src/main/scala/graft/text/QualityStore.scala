@@ -3,8 +3,6 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{Staging, Tables}
-
 /** Persisted per-source QUALITY state — the store-backed lifecycle the
   * dedup families already have ([[SimHashStore]] et al.), applied to
   * the curation lane's quality stage: one (doc_id, source, quality)
@@ -24,43 +22,24 @@ import graft.sources.{Staging, Tables}
   * mergeable sketch, the `approx_corpus_stats` pairing), or fold a
   * merged sketch into [[compact]] — the plan shape does not change.
   *
-  * Lifecycle: [[stagedCorpus]] once per fixture fingerprint,
-  * [[appendQualities]] per ingestion batch, [[compact]] keyed on
-  * doc_id (a doc's quality is determined by its text, so key-dedup is
-  * observationally free).
+  * Lifecycle and replay contract: [[graft.sinks.AppendStore]], keyed on
+  * doc_id (a doc's quality is determined by its text).
   */
-object QualityStore {
+object QualityStore extends graft.sinks.AppendStore("quality_store",
+  Seq("doc_id"), _.select(col("doc_id"), col("source"),
+    TextOps.qualityCol(col("text")).as("quality"))) {
 
   /** The (doc_id, source, quality) derivation this store persists —
     * the SAME composite score the per-source floor gates on
     * ([[TextOps.qualityCol]]). */
-  def qualityFrame(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), col("source"),
-      TextOps.qualityCol(col("text")).as("quality"))
-
-  /** Stage `corpus`'s quality frame once per (key, fixture
-    * fingerprint); returns the store directory. */
-  def stagedCorpus(key: String, fingerprintFile: java.io.File,
-                   corpus: DataFrame): String =
-    Staging.stage(s"quality_store_$key", fingerprintFile) { tmp =>
-      qualityFrame(corpus).write.parquet(tmp)
-    }
-
-  /** The quality frame backing `path` — a plain parquet scan. */
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+  def qualityFrame(docs: DataFrame): DataFrame = sign(docs)
 
   /** Append an ALREADY-derived (doc_id, source, quality) frame — the
     * lane's entry (survivors scored once for the gate are not
     * re-scored for the append). */
   def appendQualities(path: String, qualities: DataFrame): Unit =
-    qualities.select(col("doc_id"), col("source"), col("quality"))
-      .write.mode("append").parquet(path)
-
-  /** One quality row per doc_id, few large files (atomic-swap
-    * semantics: [[graft.sinks.StoreMaintenance]]). */
-  def compact(spark: SparkSession, path: String): Unit =
-    graft.sinks.StoreMaintenance.compactDistinct(spark, path, Seq("doc_id"))
+    append(path,
+      qualities.select(col("doc_id"), col("source"), col("quality")))
 
   /** Per-source floors from a store scan: the `p`-quantile of each
     * source's stored qualities, one tiny aggregate → a |sources|-row
@@ -220,11 +199,4 @@ object QualityStore {
         applyRetro(_, evictions))
     (evictions, verdicts)
   }
-
-  /** The staged store for the fixture's accumulated-corpus convention
-    * (doc_id % 10 < 8, matching the incremental query family). */
-  def fixtureCorpusStore(s: SparkSession, dir: String): String =
-    stagedCorpus(s"corpus_v1_$dir",
-      new java.io.File(dir, "documents.parquet"),
-      Tables(s, dir, "documents").filter(col("doc_id") % 10 < 8))
 }

@@ -1,76 +1,8 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
-
-import graft.sources.{Staging, Tables}
-
-/** Persisted MinHash signature store — "sign the corpus once, append per
-  * batch" (the reference's own derived-state posture: persist, re-read
-  * per refresh loop, `virginia/database/read_from.py:129-167`).
-  *
-  * The store is a plain parquet directory of [[NearDup.signatureFrame]]
-  * rows (doc_id, shingles, bsigs): narrow relative to the corpus text,
-  * splittable, and readable with zero recompute — an ingestion batch
-  * deduplicates against a SCAN of signed state instead of re-shingling
-  * and re-hashing the accumulated corpus per session. At 100 TB the
-  * corpus text is the expensive thing to touch; its signature store is
-  * orders of magnitude smaller and is the only thing the incremental
-  * path reads.
-  *
-  * Lifecycle:
-  *   - [[stagedCorpus]] signs a fixture-derived corpus ONCE per
-  *     (fixture fingerprint) via [[Staging]] — concurrent JVMs either
-  *     see a complete store or stage their own copy.
-  *   - [[appendBatch]] appends a new batch's signatures (survivors of
-  *     dedup) as new parquet files — never rewrites existing state, so
-  *     the store grows like a log, exactly how an ingestion pipeline
-  *     accumulates corpus state.
-  */
-object SignatureStore {
-
-  /** Stage `corpus`'s signature frame once per (key, fixture
-    * fingerprint); returns the store directory. */
-  def stagedCorpus(key: String, fingerprintFile: java.io.File,
-                   corpus: DataFrame): String =
-    Staging.stage(s"sig_store_$key", fingerprintFile) { tmp =>
-      NearDup.signatureFrame(corpus).write.parquet(tmp)
-    }
-
-  /** The signature frame backing `path` — a plain parquet scan, no
-    * derivation in the plan. */
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
-  /** Sign `batch` and append it to the store at `path`. Production
-    * callers pass the SURVIVORS of incremental dedup (`is_new` docs) so
-    * the store tracks exactly the retained corpus; parquet append only
-    * adds files, so a concurrent reader sees either the old or the new
-    * listing, never a torn file. */
-  def appendBatch(path: String, batch: DataFrame): Unit =
-    NearDup.signatureFrame(batch).write.mode("append").parquet(path)
-
-  /** Sign and append only the `is_new` docs of `verdict` (the output
-    * frame of [[NearDup.incrementalDedup]]) — the one-call form of the
-    * ingestion loop's tail. */
-  def appendSurvivors(path: String, batch: DataFrame,
-                      verdict: DataFrame): Unit =
-    appendBatch(path, batch.join(
-      verdict.filter(col("is_new")).select(col("doc_id")), "doc_id"))
-
-  /** Rewrite the store as one signature row per doc_id, few large
-    * files — the maintenance call between lane restarts. A doc_id fully
-    * determines its signature (same shingles, same band digests), so
-    * key-dedup changes nothing observable while shedding replayed-batch
-    * duplicates and per-micro-batch small files (atomic-swap semantics:
-    * [[graft.sinks.StoreMaintenance]]). */
-  def compact(spark: SparkSession, path: String): Unit =
-    graft.sinks.StoreMaintenance.compactDistinct(spark, path, Seq("doc_id"))
-
-  /** The staged store for the fixture's accumulated-corpus convention
-    * (doc_id % 10 < 8, matching the `dedup_incremental` query family). */
-  def fixtureCorpusStore(s: SparkSession, dir: String): String =
-    stagedCorpus(s"corpus_v1_$dir",
-      new java.io.File(dir, "documents.parquet"),
-      Tables(s, dir, "documents").filter(col("doc_id") % 10 < 8))
-}
+/** Persisted MinHash signature store: one [[NearDup.signatureFrame]] row
+  * (doc_id, shingles, bsigs) per admitted doc — narrow relative to the
+  * corpus text, splittable, and readable with zero recompute. Lifecycle
+  * and replay contract: [[graft.sinks.AppendStore]]. */
+object SignatureStore extends graft.sinks.AppendStore(
+  "sig_store", Seq("doc_id"), NearDup.signatureFrame(_))

@@ -1,78 +1,12 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
-
-import graft.sources.{Staging, Tables}
-
-/** Persisted 64-bit SimHash signature store — the [[SignatureStore]]
-  * posture for the SimHash family: sign the corpus once, append one
-  * (doc_id, simhash64) long per admitted doc, and serve every later
-  * ingestion batch from a SCAN of signed state. Narrowest of the three
-  * text-family stores (8 bytes of signature per doc vs MinHash's
-  * shingle+band arrays and the gram store's window rows), so at 100 TB
-  * the incremental path reads a frame orders of magnitude smaller than
-  * the corpus text it replaces.
-  *
-  * Lifecycle mirrors the signature store: [[stagedCorpus]] once per
-  * fixture fingerprint, [[appendBatch]]/[[appendSurvivors]] per
-  * ingestion batch (parquet append only adds files), [[compact]] as
-  * the bounded-growth maintenance call (doc_id determines its
-  * signature, so key-dedup is observationally free).
-  */
-object SimHashStore {
-
-  /** Stage `corpus`'s (doc_id, simhash64) frame once per (key, fixture
-    * fingerprint); returns the store directory. */
-  def stagedCorpus(key: String, fingerprintFile: java.io.File,
-                   corpus: DataFrame): String =
-    Staging.stage(s"simhash_store_$key", fingerprintFile) { tmp =>
-      NearDup.simhash64(corpus).write.parquet(tmp)
-    }
-
-  /** The signature frame backing `path` — a plain parquet scan. */
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
-  /** Sign `batch` and append its signatures to the store at `path`. */
-  def appendBatch(path: String, batch: DataFrame): Unit =
-    appendSigs(path, NearDup.simhash64(batch))
-
-  /** Append an ALREADY-derived (doc_id, simhash64) frame — the lane's
-    * entry, so a batch signed once for the verdict is not re-signed
-    * for the append. */
-  def appendSigs(path: String, sigs: DataFrame): Unit =
-    sigs.write.mode("append").parquet(path)
-
-  /** Sign and append only the `is_new` docs of `verdict` (the output of
-    * [[NearDup.simhashIncremental64]]). */
-  def appendSurvivors(path: String, batch: DataFrame,
-                      verdict: DataFrame): Unit =
-    appendBatch(path, batch.join(
-      verdict.filter(col("is_new")).select(col("doc_id")), "doc_id"))
-
-  /** One signature row per doc_id, few large files (atomic-swap
-    * semantics: [[graft.sinks.StoreMaintenance]]). */
-  def compact(spark: SparkSession, path: String): Unit =
-    graft.sinks.StoreMaintenance.compactDistinct(spark, path, Seq("doc_id"))
-
-  /** The staged store for the fixture's accumulated-corpus convention
-    * (doc_id % 10 < 8, matching the incremental query family). */
-  def fixtureCorpusStore(s: SparkSession, dir: String): String =
-    stagedCorpus(s"corpus_v1_$dir",
-      new java.io.File(dir, "documents.parquet"),
-      Tables(s, dir, "documents").filter(col("doc_id") % 10 < 8))
-
-  /** The staged BENCHMARK whole-doc signature store (doc_id < 10, the
-    * shared decontamination fixture convention) — STATIC judge state
-    * for the grid gate's FUZZY arm ([[graft.text.Curation]]'s
-    * `curation_lane_grid_twin`): benchmark docs signed once, ever,
-    * only ever scanned. The [[ChunkSigStore]] benchmark store holds
-    * the same docs at WINDOW granularity; this one catches the
-    * paraphrased whole-doc leakage whose every window drifts past the
-    * chunk radius while the doc signature stays within it. */
-  def fixtureBenchmarkStore(s: SparkSession, dir: String): String =
-    stagedCorpus(s"benchmark_v1_$dir",
-      new java.io.File(dir, "documents.parquet"),
-      Tables(s, dir, "documents").filter(col("doc_id") < 10))
-}
+/** Persisted 64-bit SimHash signature store: one (doc_id, simhash64) long
+  * per admitted doc, the narrowest of the text stores (8 bytes per doc
+  * against MinHash's shingle and band arrays and the gram store's window
+  * rows). Its benchmark fixture store is the grid gate's FUZZY arm
+  * (`curation_lane_grid_twin`): it catches paraphrased whole-doc
+  * leakage whose every window drifts past the [[ChunkSigStore]] radius
+  * while the doc signature stays within it. Lifecycle and replay
+  * contract: [[graft.sinks.AppendStore]]. */
+object SimHashStore extends graft.sinks.AppendStore(
+  "simhash_store", Seq("doc_id"), NearDup.simhash64(_))

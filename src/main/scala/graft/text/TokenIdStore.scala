@@ -32,8 +32,17 @@ import graft.sources.{Staging, Tables}
   * ([[StoreMaintenance.rewrite]]). Current-version rows are never
   * re-walked. Runs at maintenance cadence (after a vocabulary swap),
   * never per batch.
+  *
+  * Steady-state compaction ([[compact]], [[graft.sinks.KeyedStore]]) is
+  * keyed on (doc_id, token_idx, vocab_version): (doc_id, token_idx)
+  * determines piece_id under a fixed version, so key-dedup is
+  * observationally free. It is what sheds an at-least-once replay's
+  * duplicate CURRENT-version rows — [[renumberSweep]]'s rewrite only runs
+  * when some doc is stale, so a fully-migrated store still needs the
+  * ordinary compaction cadence.
   */
-object TokenIdStore {
+object TokenIdStore extends graft.sinks.KeyedStore(
+  Seq("doc_id", "token_idx", "vocab_version")) {
 
   /** Numericalize `docs` under `vocab`, tagging every id row with the
     * id-space version it was minted under — the append-side derivation
@@ -46,25 +55,9 @@ object TokenIdStore {
         lit(version).cast("int").as("vocab_version"))
 
   /** Append an already-numericalized frame — the ingest entry. */
-  def append(path: String, ids: DataFrame): Unit =
-    ids.select(col("doc_id"), col("token_idx"), col("piece_id"),
-      col("vocab_version")).write.mode("append").parquet(path)
-
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
-  /** Steady-state compaction — the maintenance entry every appendable
-    * store here carries: one row per (doc_id, token_idx,
-    * vocab_version), few large files ((doc_id, token_idx) determines
-    * piece_id under a fixed version, so key-dedup is observationally
-    * free). This is what sheds an at-least-once replay's duplicate
-    * CURRENT-version rows — [[renumberSweep]]'s rewrite only runs when
-    * some doc is stale, so a fully-migrated store still needs the
-    * ordinary compaction cadence. Atomic-swap semantics:
-    * [[StoreMaintenance]]. */
-  def compact(spark: SparkSession, path: String): Unit =
-    StoreMaintenance.compactDistinct(spark, path,
-      Seq("doc_id", "token_idx", "vocab_version"))
+  override def append(path: String, ids: DataFrame): Unit =
+    super.append(path, ids.select(col("doc_id"), col("token_idx"),
+      col("piece_id"), col("vocab_version")))
 
   /** The RE-NUMERICALIZATION sweep — run once after a vocabulary swap
     * moved the live store to id-space `version`: every doc whose

@@ -30,6 +30,24 @@ class EntrySpec extends SparkSpec {
     assert(os.isEmpty, s"oracle names registered twice: $os")
   }
 
+  test("README's query and SQL function counts match the registries") {
+    val readme = scala.io.Source.fromFile("README.md", "UTF-8")
+    val text = try readme.mkString finally readme.close()
+    def counts(phrase: String) =
+      (raw"(\d+)\s+" + phrase).r.findAllMatchIn(text)
+        .map(_.group(1).toInt).toSeq
+    val queries = counts("registered queries") ++ counts("query names")
+    assert(queries.nonEmpty, "README states no query count")
+    assert(queries.forall(_ == SparkEntry.queries.size),
+      s"README says $queries registered queries, " +
+        s"SparkEntry has ${SparkEntry.queries.size}")
+    val fns = counts(raw"native\s+codegen\s+SQL\s+functions")
+    assert(fns.nonEmpty, "README states no SQL function count")
+    assert(fns.forall(_ == GraftExtensions.sqlFunctions.size),
+      s"README says $fns native codegen SQL functions, " +
+        s"GraftExtensions registers ${GraftExtensions.sqlFunctions.size}")
+  }
+
   test("entry self-provisions its read confs and returns rows") {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
     spark.conf.set("spark.sql.session.timeZone", "America/Chicago")

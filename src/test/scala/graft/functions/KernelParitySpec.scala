@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
@@ -21,7 +22,9 @@ class KernelParitySpec extends SparkSpec {
   /** Runs `name(c1, ..., cn, extra...)` codegen'd over `in`'s columns
     * (codegen failures throw instead of falling back), checks the
     * kernel sits inside a whole-stage codegen stage, and compares every
-    * row with `kernel(literal args).eval`. */
+    * row with `kernel(literal args).eval`, converted to the Row's
+    * external type (strings, arrays). Doubles compare by `equals`, so a
+    * NaN matches a NaN. */
   private def assertParity(name: String, in: DataFrame, extra: String*)(
       kernel: Seq[Expression] => Expression): Unit = {
     val confs = Seq("spark.sql.codegen.fallback" -> "false",
@@ -41,9 +44,12 @@ class KernelParitySpec extends SparkSpec {
       val rows = df.collect()
       assert(rows.count(!_.isNullAt(n)) > 0, s"$name gave only nulls")
       val bad = rows.filterNot { r =>
-        kernel(in.schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+        val k = kernel(in.schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
           Literal.create(r.get(i), f.dataType)
-        } ++ extra.map(Literal(_))).eval(null) == r.get(n)
+        } ++ extra.map(Literal(_)))
+        java.util.Objects.equals(
+          CatalystTypeConverters.convertToScala(k.eval(null), k.dataType),
+          r.get(n))
       }
       assert(bad.isEmpty, s"$name($extra): codegen != eval on " +
         bad.take(3).map(_.get(0)).mkString("; "))
@@ -104,5 +110,37 @@ class KernelParitySpec extends SparkSpec {
       .localCheckpoint()
     assertParity("count_in", words, "scan", "sort", "the", "zzz")(CountInSet(_))
     assertParity("count_in", words, "window")(CountInSet(_))
+  }
+
+  test("byte_hist16 and norm_text: codegen equals eval on fixture text") {
+    assertParity("byte_hist16",
+      docs.select(col("text").cast("binary").as("x")))(c => ByteHist16(c.head))
+    assertParity("norm_text", docs.select(col("text").as("x")))(c =>
+      NormText(c.head))
+  }
+
+  test("jaccard_sim: codegen equals eval on fixture word arrays") {
+    // each doc's words against a slice of themselves and against the next
+    // doc's words; empty arrays included
+    val words = split(graft.text.TextOps.norm(col("text")), " ")
+    val pairs = docs.select(words.as("x"),
+      when(col("doc_id") % 3 === 0, slice(words, 2, 6))
+        .when(col("doc_id") % 3 === 1, array().cast("array<string>"))
+        .otherwise(reverse(words)).as("y"))
+      .localCheckpoint()
+    assertParity("jaccard_sim", pairs)(c => ArrayJaccard(c(0), c(1)))
+  }
+
+  test("first_codepoint and codepoint_char: codegen equals eval over scans") {
+    // every fixture word, the empty one included (-1)
+    val words = docs.select(explode(split(col("text"), " ")).as("x"))
+      .localCheckpoint()
+    assertParity("first_codepoint", words)(c => FirstCodePoint(c.head))
+    // scalar values from every plane, surrogates excluded (those throw on
+    // both paths); a range scan, so the project is generated code
+    val cps = spark.range(0, 0x110000, 997)
+      .filter(col("id") < 0xD800 || col("id") > 0xDFFF)
+      .select(col("id").cast("int").as("x"))
+    assertParity("codepoint_char", cps)(c => CodePointChar(c.head))
   }
 }
