@@ -2,14 +2,13 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract (SURVEY.md §7).
   *
-  * Each functional module contributes a (queries, oracle) registry pair;
-  * this object is the single aggregation point the driver introspects.
+  * Each functional module lists one [[QuerySpec]] per query; this object
+  * names each module once and is the single aggregation point the driver
+  * introspects.
   */
 object SparkEntry {
-  private[graft] type Query = (SparkSession, String) => DataFrame
-
   /** Flagship query on the sf0.001 fixture; callers smoke-check rows > 0.
     *
     * It sets the read confs it needs on the caller's session, but not the
@@ -32,37 +31,31 @@ object SparkEntry {
       spark, "/root/testdata/sf0.001")
   }
 
-  /** Each functional module's (queries, oracle) registry pair, listed
-    * once; [[queries]] and [[oracleSql]] are their unions. */
-  private[graft] def modules: Seq[(Map[String, Query], Map[String, String])] =
-    Seq(
-      analytics.AnalyticsQueries.queries -> analytics.AnalyticsQueries.oracle,
-      analytics.WindowStats.queries -> analytics.WindowStats.oracle,
-      analytics.EventAnalytics.queries -> analytics.EventAnalytics.oracle,
-      text.Vocab.queries -> text.Vocab.oracle,
-      text.LmStore.queries -> text.LmStore.oracle,
-      relational.RelationalQueries.queries -> relational.RelationalQueries.oracle,
-      scanner.PairScan.queries -> scanner.PairScan.oracle,
-      ledger.Ledger.queries -> ledger.Ledger.oracle,
-      text.TextOps.queries -> text.TextOps.oracle,
-      text.BpeMerges.queries -> text.BpeMerges.oracle,
-      text.TokenIdStore.queries -> text.TokenIdStore.oracle,
-      text.NearDup.queries -> text.NearDup.oracle,
-      text.Curation.queries -> text.Curation.oracle,
-      text.Boilerplate.queries -> text.Boilerplate.oracle,
-      text.SpanDedup.queries -> text.SpanDedup.oracle,
-      operators.TemporalJoins.queries -> operators.TemporalJoins.oracle,
-      plans.PlanQueries.queries -> plans.PlanQueries.oracle,
-      ann.Similarity.queries -> ann.Similarity.oracle,
-      multimodal.Multimodal.queries -> multimodal.Multimodal.oracle,
-      sinks.SinkQueries.queries -> sinks.SinkQueries.oracle,
-      schema.SchemaQueries.queries -> schema.SchemaQueries.oracle)
+  /** Every module that registers queries, each listed once; [[queries]]
+    * and [[oracleSql]] are views of their specs. */
+  private[graft] def modules: Seq[QueryModule] = Seq(
+    analytics.AnalyticsQueries, analytics.WindowStats,
+    analytics.EventAnalytics, text.Vocab, text.LmStore,
+    relational.RelationalQueries, scanner.PairScan, ledger.Ledger,
+    text.TextOps, text.BpeMerges, text.TokenIdStore, text.NearDup,
+    text.Curation, text.Boilerplate, text.SpanDedup,
+    operators.TemporalJoins, plans.PlanQueries, ann.Similarity,
+    multimodal.Multimodal, sinks.SinkQueries, schema.SchemaQueries)
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.map(_._1).reduce(_ ++ _)
+    modules.map(_.queries).reduce(_ ++ _)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = modules.map(_._2).reduce(_ ++ _)
+    * the same parquet tables. */
+  def oracleSql: Map[String, String] =
+    modules.flatMap(_.specs.map(s => s.name -> s.oracle)).toMap
+
+  /** Fails, listing them, if any of `names` is not a registered query. */
+  private[graft] def requireRegistered(names: Iterable[String]): Unit = {
+    val registered = queries.keySet
+    val unknown = names.filterNot(registered).toSeq.distinct.sorted
+    require(unknown.isEmpty,
+      s"not registered queries: ${unknown.mkString(", ")}")
+  }
 }

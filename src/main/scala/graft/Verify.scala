@@ -6,8 +6,11 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional name filter (args 2..): verify only those queries — the
-    // per-change local loop; the driver always calls with two args
+    // per-change local loop; the driver always calls with two args. A
+    // name that matches no query fails here, before any session exists,
+    // rather than verifying nothing
     val only = args.drop(2).toSet
+    SparkEntry.requireRegistered(only)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // Tables.session sets UTC, AQE, and (for older Spark builds) the
     // nanosAsLong read path for the TIMESTAMP(NANOS) events fixture —

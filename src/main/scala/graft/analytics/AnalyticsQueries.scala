@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.{QueryModule, QuerySpec}
 import graft.functions.Books
 import graft.sources.Snapshots
 import graft.sources.Snapshots.{sql => S}
@@ -15,9 +16,7 @@ import graft.sources.Snapshots.{sql => S}
   * plumbing. All float math is written as the same IEEE ops in the same
   * order on both sides (bit-identical results, no rounding fudge).
   */
-object AnalyticsQueries {
-  type Q = (SparkSession, String) => DataFrame
-
+object AnalyticsQueries extends QueryModule {
   private def snaps(spark: SparkSession, dir: String): DataFrame =
     Snapshots.store(spark, dir)
 
@@ -60,36 +59,67 @@ object AnalyticsQueries {
 
   private val t3Cond = "'0x' || md5('T3')"
 
-  val queries: Map[String, Q] = Map(
-    "available_tickers" -> ((s, d) =>
-      TickerSeries.availableTickers(snaps(s, d)).orderBy("ticker", "source")),
+  // --- oracle SQL, then the registered queries ----------------------------
 
-    "ticker_series_raw" -> ((s, d) => TickerSeries.raw(snaps(s, d), "T3", "kalshi")),
+  private val kYes = s"(CAST(${S.p} AS DOUBLE) / 100)"
+  private val pBid = s"(CAST(${S.p} - 1 AS DOUBLE) / 100)"
+  private val pAsk = s"(CAST(${S.p} + 1 AS DOUBLE) / 100)"
+  private val pMid = s"(($pBid + $pAsk) / 2.0)"
 
-    "ticker_series_poly" -> ((s, d) =>
-      TickerSeries.raw(snaps(s, d), condId("T3"), "polymarket")),
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("available_tickers", (s, d) =>
+      TickerSeries.availableTickers(snaps(s, d)).orderBy("ticker", "source"),
+      s"SELECT DISTINCT ${S.ticker} AS ticker, ${S.source} AS source FROM events ORDER BY ticker, source"),
+
+    QuerySpec("ticker_series_raw", (s, d) =>
+      TickerSeries.raw(snaps(s, d), "T3", "kalshi"),
+      s"""SELECT ${S.tsUs} AS ts_us, event_id AS snapshot_id, 'T3' AS ticker,
+         |$kYes AS yes, 1.0 - $kYes AS no
+         |FROM events WHERE ${S.isKalshi} AND user_id % 8 = 3
+         |ORDER BY ts_us, snapshot_id""".stripMargin),
+
+    QuerySpec("ticker_series_poly", (s, d) =>
+      TickerSeries.raw(snaps(s, d), condId("T3"), "polymarket"),
+      s"""SELECT ${S.tsUs} AS ts_us, event_id AS snapshot_id,
+         |$t3Cond AS ticker,
+         |CASE WHEN $pMid > 0.5 THEN 1.0 - $pMid ELSE $pMid END AS yes,
+         |CASE WHEN $pMid > 0.5 THEN $pMid ELSE 1.0 - $pMid END AS no
+         |FROM events WHERE NOT ${S.isKalshi} AND user_id % 8 = 3
+         |ORDER BY ts_us, snapshot_id""".stripMargin),
 
     // range-bounded variant (ref start/end handling, `etl/query.py:109-143`):
     // Jan 10-20 of the fixture's Jan 2024 window
-    "ticker_series_range" -> ((s, d) =>
+    QuerySpec("ticker_series_range", (s, d) =>
       TickerSeries.raw(snaps(s, d), "T3", "kalshi",
         startUs = Some(1704844800000000L),  // 2024-01-10T00:00:00Z
-        endUs = Some(1705708800000000L))),  // 2024-01-20T00:00:00Z
+        endUs = Some(1705708800000000L)),  // 2024-01-20T00:00:00Z
+      s"""SELECT ${S.tsUs} AS ts_us, event_id AS snapshot_id, 'T3' AS ticker,
+         |$kYes AS yes, 1.0 - $kYes AS no
+         |FROM events WHERE ${S.isKalshi} AND user_id % 8 = 3
+         |  AND epoch_us(ts) >= 1704844800000000
+         |  AND epoch_us(ts) < 1705708800000000
+         |ORDER BY ts_us, snapshot_id""".stripMargin),
 
     // the reference's full period set is 1m/5m/1h/24h (`etl/query.py:146-157`)
-    "ticker_series_1m" -> ((s, d) =>
-      TickerSeries.downsampled(snaps(s, d), "T3", "kalshi", "1 minute")),
+    QuerySpec("ticker_series_1m", (s, d) =>
+      TickerSeries.downsampled(snaps(s, d), "T3", "kalshi", "1 minute"),
+      downsampleOracle("date_trunc('minute', ts)")),
 
-    "ticker_series_5m" -> ((s, d) =>
-      TickerSeries.downsampled(snaps(s, d), "T3", "kalshi", "5 minutes")),
+    QuerySpec("ticker_series_5m", (s, d) =>
+      TickerSeries.downsampled(snaps(s, d), "T3", "kalshi", "5 minutes"),
+      // Spark's window() and DuckDB's time_bucket both align sub-day buckets
+      // to the unix epoch, so 5-minute bucket starts agree exactly
+      downsampleOracle("time_bucket(INTERVAL '5 minutes', ts)")),
 
-    "ticker_series_1h" -> ((s, d) =>
-      TickerSeries.downsampled(snaps(s, d), "T3", "kalshi", "1 hour")),
+    QuerySpec("ticker_series_1h", (s, d) =>
+      TickerSeries.downsampled(snaps(s, d), "T3", "kalshi", "1 hour"),
+      downsampleOracle("date_trunc('hour', ts)")),
 
-    "ticker_series_24h" -> ((s, d) =>
-      TickerSeries.downsampled(snaps(s, d), "T3", "kalshi", "24 hours")),
+    QuerySpec("ticker_series_24h", (s, d) =>
+      TickerSeries.downsampled(snaps(s, d), "T3", "kalshi", "24 hours"),
+      downsampleOracle("date_trunc('day', ts)")),
 
-    "best_price" -> ((s, d) => {
+    QuerySpec("best_price", (s, d) => {
       // four independent extremes per row: four linear kernel scans stay
       // inside whole-stage codegen vs one interpreted from_json that
       // materializes the full nested book
@@ -105,9 +135,18 @@ object AnalyticsQueries {
         Books.centsToDollars(ext("kalshi_max_cents", "yes")).as("yes_bid"))
       // no trailing global sort (r18, the market_scan posture): one
       // output row per snapshot; the compare sorts rows itself
-    }),
+    },
+      s"""SELECT ${S.tsUs} AS ts_us, event_id AS snapshot_id,
+         |${S.market} AS ticker,
+         |CAST(${S.p} AS BIGINT) AS yes_bid_cents,
+         |CAST(${S.p} - 1 AS BIGINT) AS yes_ask_cents,
+         |CAST(99 - ${S.p} AS BIGINT) AS no_bid_cents,
+         |CAST(98 - ${S.p} AS BIGINT) AS no_ask_cents,
+         |$kYes AS yes_bid
+         |FROM events WHERE ${S.isKalshi}
+         |ORDER BY ts_us, snapshot_id""".stripMargin),
 
-    "topofbook" -> ((s, d) => {
+    QuerySpec("topofbook", (s, d) => {
       val p = snaps(s, d).filter(col("source") === "polymarket")
         .withColumn("ob",
           Books.parsePoly(col("full_orderbook")).getField("orderbook"))
@@ -121,14 +160,21 @@ object AnalyticsQueries {
         col("tob.midpoint").as("midpoint"),
         col("tob.spread").as("spread"))
       // no trailing global sort (r18): see best_price
-    }),
+    },
+      s"""SELECT ${S.tsUs} AS ts_us, event_id AS snapshot_id,
+         |${S.conditionId} AS ticker,
+         |$pBid AS best_bid, $pAsk AS best_ask,
+         |CAST(2 AS INTEGER) AS bid_levels, CAST(2 AS INTEGER) AS ask_levels,
+         |($pBid + $pAsk) / 2.0 AS midpoint, $pAsk - $pBid AS spread
+         |FROM events WHERE NOT ${S.isKalshi}
+         |ORDER BY ts_us, snapshot_id""".stripMargin),
 
     // OHLC candles: the canonical financial downsample the reference's
     // last-only series imply — per 1 h bucket: open (first by µs+id),
     // high, low, close (last by µs+id), tick count. ONE hash aggregate
     // with map-side partial min_by/max_by/min/max — never a window sort
     // over the series; the same latest-per-key discipline as W1.
-    "ohlc_1h" -> ((s, d) => {
+    QuerySpec("ohlc_1h", (s, d) => {
       val k = kalshiTicks(s, d).filter(col("ticker") === "T3")
         .withColumn("bucket_us",
           expr("ts_us DIV 3600000000 * 3600000000"))
@@ -142,7 +188,28 @@ object AnalyticsQueries {
             .as("close"),
           count(lit(1)).as("n_ticks"))
         .orderBy("bucket_us")
-    }),
+    },
+      s"""WITH e AS (
+         |  SELECT ${S.tsUs} AS u, event_id AS id,
+         |    CAST(${S.p} AS BIGINT) AS p,
+         |    ${S.tsUs} // 3600000000 * 3600000000 AS bucket_us
+         |  FROM events
+         |  WHERE ${S.isKalshi} AND ${S.market} = 'T3'),
+         |o AS (
+         |  SELECT bucket_us, p AS open FROM (
+         |    SELECT bucket_us, p, row_number() OVER (PARTITION BY bucket_us
+         |      ORDER BY u, id) AS rn FROM e) WHERE rn = 1),
+         |c AS (
+         |  SELECT bucket_us, p AS close FROM (
+         |    SELECT bucket_us, p, row_number() OVER (PARTITION BY bucket_us
+         |      ORDER BY u DESC, id DESC) AS rn FROM e) WHERE rn = 1),
+         |hl AS (
+         |  SELECT bucket_us, max(p) AS high, min(p) AS low,
+         |    count(*) AS n_ticks
+         |  FROM e GROUP BY bucket_us)
+         |SELECT bucket_us, open, high, low, close, n_ticks
+         |FROM hl JOIN o USING (bucket_us) JOIN c USING (bucket_us)
+         |ORDER BY bucket_us""".stripMargin),
 
     // Ingestion-efficiency rollup: share of snapshots whose book is
     // byte-identical to the same series' previous snapshot (the
@@ -150,13 +217,35 @@ object AnalyticsQueries {
     // and change-only storage get tuned on). One lag window per
     // (source, ticker) series comparing the RAW book payload; the oracle
     // compares the (p, q1, q2) tuple that fully determines the book.
-    "snapshot_redundancy" -> ((s, d) => bookRedundancy(snaps(s, d))),
+    QuerySpec("snapshot_redundancy", (s, d) => bookRedundancy(snaps(s, d)),
+      // book identity ⟺ (p, q1, q2) identity: both venue book templates
+      // are injective in those three fields within a series
+      s"""WITH e AS (
+         |  SELECT ${S.source} AS source, ${S.ticker} AS ticker,
+         |    ${S.tsUs} AS u, event_id AS id,
+         |    ${S.p} AS p, ${S.q1} AS q1, ${S.q2} AS q2
+         |  FROM events),
+         |l AS (
+         |  SELECT source,
+         |    lag(p) OVER w AS pp, lag(q1) OVER w AS pq1,
+         |    lag(q2) OVER w AS pq2, p, q1, q2
+         |  FROM e WINDOW w AS (PARTITION BY source, ticker
+         |    ORDER BY u, id)),
+         |g AS (
+         |  SELECT source, count(*) AS n_snapshots,
+         |    CAST(sum(CASE WHEN pp IS NULL OR p <> pp OR q1 <> pq1
+         |      OR q2 <> pq2 THEN 1 ELSE 0 END) AS BIGINT) AS n_changed
+         |  FROM l GROUP BY source)
+         |SELECT source, n_snapshots, n_changed,
+         |  1.0 - CAST(n_changed AS DOUBLE) / CAST(n_snapshots AS DOUBLE)
+         |    AS redundancy_ratio
+         |FROM g ORDER BY source""".stripMargin),
 
     // Large-move detector: snapshots where the best bid jumped >= 5 cents
     // vs the previous snapshot of the SAME market — the trigger shape of
     // the reference's opportunity re-evaluation. One lag window per
     // market key (shuffle on market, sort within); integer deltas.
-    "price_jumps" -> ((s, d) => {
+    QuerySpec("price_jumps", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("market"))
         .orderBy(col("ts_us"), col("snapshot_id"))
@@ -168,13 +257,25 @@ object AnalyticsQueries {
           col("p"), col("prev_p"), col("delta"))
       // no trailing global sort (r18): the per-market window already
       // ran; a second full sort was presentation-only
-    }),
+    },
+      s"""SELECT * FROM (
+         |  SELECT ${S.market} AS market, ${S.tsUs} AS ts_us,
+         |    event_id AS snapshot_id,
+         |    CAST(${S.p} AS BIGINT) AS p,
+         |    lag(CAST(${S.p} AS BIGINT)) OVER (PARTITION BY ${S.market}
+         |      ORDER BY ${S.tsUs}, event_id) AS prev_p,
+         |    CAST(${S.p} AS BIGINT) - lag(CAST(${S.p} AS BIGINT))
+         |      OVER (PARTITION BY ${S.market}
+         |        ORDER BY ${S.tsUs}, event_id) AS delta
+         |  FROM events WHERE ${S.isKalshi})
+         |WHERE abs(delta) >= 5
+         |ORDER BY market, ts_us, snapshot_id""".stripMargin),
 
     // Per-market hourly volatility from exact integer power sums: one
     // hash aggregate carrying (n, Σp, Σp²); sample stddev evaluated once
     // from the sums and rounded to 6 (the price_qty_corr discipline),
     // NULL for single-tick buckets.
-    "volatility_1h" -> ((s, d) => {
+    QuerySpec("volatility_1h", (s, d) => {
       val k = kalshiTicks(s, d)
         .withColumn("bucket_us",
           expr("ts_us DIV 3600000000 * 3600000000"))
@@ -188,14 +289,29 @@ object AnalyticsQueries {
               (col("n") * col("sxx") - col("sx") * col("sx")) /
                 (col("n") * (col("n") - 1))), 6)).as("stddev_cents"))
       // no trailing global sort (r18): see best_price
-    }),
+    },
+      s"""WITH e AS (
+         |  SELECT ${S.market} AS market,
+         |    ${S.tsUs} // 3600000000 * 3600000000 AS bucket_us,
+         |    CAST(${S.p} AS BIGINT) AS p
+         |  FROM events WHERE ${S.isKalshi}),
+         |g AS (
+         |  SELECT market, bucket_us, count(*) AS n,
+         |    CAST(sum(p) AS DOUBLE) AS sx,
+         |    CAST(sum(p * p) AS DOUBLE) AS sxx
+         |  FROM e GROUP BY 1, 2)
+         |SELECT market, bucket_us, n,
+         |  CASE WHEN n < 2 THEN NULL
+         |    ELSE round(sqrt((n * sxx - sx * sx) / (n * (n - 1))), 6)
+         |  END AS stddev_cents
+         |FROM g ORDER BY market, bucket_us""".stripMargin),
 
     // Microstructure: order-book depth imbalance per Polymarket snapshot
     // — (bid_depth − ask_depth) / (bid_depth + ask_depth), the standard
     // pressure signal. Depths are HOF sums over the parsed book arrays
     // (sequential element-order adds of exact-integer-valued doubles, so
     // bit-reproducible); one division at the end.
-    "depth_imbalance" -> ((s, d) => {
+    QuerySpec("depth_imbalance", (s, d) => {
       val depth = (side: Column) =>
         aggregate(side, lit(0.0), (acc, x) => acc + x.getField("size"))
       val p = snaps(s, d).filter(col("source") === "polymarket")
@@ -208,7 +324,19 @@ object AnalyticsQueries {
         ((col("bid_depth") - col("ask_depth")) /
           (col("bid_depth") + col("ask_depth"))).as("imbalance"))
       // no trailing global sort (r18): see best_price
-    }),
+    },
+      // bids carry (q1, q2), asks (17, q1); the engine's HOF depth sums add
+      // exact-integer-valued doubles in element order, so the closed-form
+      // integer sums cast to double are bit-identical
+      s"""SELECT ${S.tsUs} AS ts_us, event_id AS snapshot_id,
+         |${S.conditionId} AS ticker,
+         |CAST(${S.q1} + ${S.q2} AS DOUBLE) AS bid_depth,
+         |CAST(17 + ${S.q1} AS DOUBLE) AS ask_depth,
+         |(CAST(${S.q1} + ${S.q2} AS DOUBLE) - CAST(17 + ${S.q1} AS DOUBLE))
+         |  / (CAST(${S.q1} + ${S.q2} AS DOUBLE)
+         |     + CAST(17 + ${S.q1} AS DOUBLE)) AS imbalance
+         |FROM events WHERE NOT ${S.isKalshi}
+         |ORDER BY ts_us, snapshot_id""".stripMargin),
 
     // Cross-venue price correlation per market: both legs downsampled to
     // 1-minute last-price series (µs+id max_by, the engine's canonical
@@ -217,7 +345,7 @@ object AnalyticsQueries {
     // under 2^53) with the closed form evaluated once and rounded to 12 —
     // the price_qty_corr determinism discipline. The kalshi leg reads the
     // book's best yes bid; the poly leg recovers cents from yes_price.
-    "venue_correlation" -> ((s, d) => {
+    QuerySpec("venue_correlation", (s, d) => {
       val k = kalshiTicks(s, d)
         .withColumn("bucket", expr("ts_us DIV 60000000"))
         .groupBy(col("market"), col("bucket"))
@@ -252,219 +380,7 @@ object AnalyticsQueries {
               (col("n_buckets") * col("sxy") - col("sx") * col("sy")) /
                 col("den"), 12)).as("venue_corr"))
         .orderBy("ticker")
-    }),
-
-    "fill_walk" -> ((s, d) => {
-      val k = snaps(s, d).filter(col("source") === "kalshi")
-        .withColumn("book", Books.parseKalshi(col("full_orderbook")))
-      k.select(
-        col("ts_us"), col("snapshot_id"), col("ticker"),
-        Books.fillWalkAvgPriceDollars(col("book.yes"), lit(25L))
-          .as("avg_fill_price"))
-      // no trailing global sort (r18): see best_price
-    }),
-
-    // U1: the typed-Aggregator twin of fill_walk. One row per book level
-    // (posexplode carries book order), grouped per snapshot and walked by
-    // FillWalkAggregator's zero/reduce/finish over the per-group iterator
-    // that `flatMapSortedGroups` guarantees sorted by level position — the
-    // only aggregation API whose within-group row order is a contract.
-    // (A udaf() form was tried first and FillWalkAggregator.merge failed
-    // loudly, exactly as designed: ObjectHashAggregateExec falls back to
-    // sort-based aggregation past 128 distinct groups, which both splits a
-    // group across partial buffers and re-sorts rows by grouping key only,
-    // so no hash-aggregate plan can promise level order.) The oracle is
-    // fill_walk's closed form — a green row proves the typed-Aggregator
-    // walk agrees with the order-safe array-HOF walk.
-    "fill_walk_agg" -> ((s, d) => {
-      import s.implicits._
-      val agg = new graft.functions.FillWalkAggregator(25L)
-      snaps(s, d).filter(col("source") === "kalshi")
-        .withColumn("book", Books.parseKalshi(col("full_orderbook")))
-        .select(col("ts_us"), col("snapshot_id"), col("ticker"),
-          posexplode(col("book.yes")).as(Seq("pos", "lvl")))
-        .select(col("ts_us"), col("snapshot_id"), col("ticker"), col("pos"),
-          element_at(col("lvl"), 1).as("price"),
-          element_at(col("lvl"), 2).as("qty"))
-        // expression-keyed grouping (`groupBy(...).as[K, V]`) keeps the
-        // shuffle key in Tungsten — the lambda `groupByKey(r => ...)` form
-        // deserializes EVERY exploded level row just to compute its key,
-        // which was the whole cost of this query (8.1 s → ~3 s at sf0.1)
-        .groupBy(col("ts_us"), col("snapshot_id"), col("ticker"))
-        .as[(Long, Long, String), (Long, Long, String, Int, Long, Long)]
-        .flatMapSortedGroups(col("pos")) { (key, rows) =>
-          val acc = rows.foldLeft(agg.zero)((a, r) => agg.reduce(a, (r._5, r._6)))
-          Iterator((key._1, key._2, key._3, agg.finish(acc)))
-        }
-        .toDF("ts_us", "snapshot_id", "ticker", "avg_fill_price")
-        .orderBy("ts_us", "snapshot_id")
-    }),
-
-    "latency_chain" -> ((s, d) =>
-      snaps(s, d).select(
-        col("ts_us"), col("snapshot_id"), col("source"),
-        expr("(api_response_ns - api_call_start_ns) DIV 1000")
-          .as("api_latency_us"),
-        expr("(virginia_received_ns - api_response_ns) DIV 1000000")
-          .as("ingest_ms"),
-        expr("(data_server_stored_ns - api_call_start_ns) DIV 1000000")
-          .as("e2e_ms"))))
-        // ^ no trailing global sort (r18): see best_price
-
-  // --- oracle SQL ---------------------------------------------------------
-
-  private val kYes = s"(CAST(${S.p} AS DOUBLE) / 100)"
-  private val pBid = s"(CAST(${S.p} - 1 AS DOUBLE) / 100)"
-  private val pAsk = s"(CAST(${S.p} + 1 AS DOUBLE) / 100)"
-  private val pMid = s"(($pBid + $pAsk) / 2.0)"
-
-  val oracle: Map[String, String] = Map(
-    "available_tickers" ->
-      s"SELECT DISTINCT ${S.ticker} AS ticker, ${S.source} AS source FROM events ORDER BY ticker, source",
-
-    "ticker_series_raw" ->
-      s"""SELECT ${S.tsUs} AS ts_us, event_id AS snapshot_id, 'T3' AS ticker,
-         |$kYes AS yes, 1.0 - $kYes AS no
-         |FROM events WHERE ${S.isKalshi} AND user_id % 8 = 3
-         |ORDER BY ts_us, snapshot_id""".stripMargin,
-
-    "ticker_series_poly" ->
-      s"""SELECT ${S.tsUs} AS ts_us, event_id AS snapshot_id,
-         |$t3Cond AS ticker,
-         |CASE WHEN $pMid > 0.5 THEN 1.0 - $pMid ELSE $pMid END AS yes,
-         |CASE WHEN $pMid > 0.5 THEN $pMid ELSE 1.0 - $pMid END AS no
-         |FROM events WHERE NOT ${S.isKalshi} AND user_id % 8 = 3
-         |ORDER BY ts_us, snapshot_id""".stripMargin,
-
-    "ticker_series_range" ->
-      s"""SELECT ${S.tsUs} AS ts_us, event_id AS snapshot_id, 'T3' AS ticker,
-         |$kYes AS yes, 1.0 - $kYes AS no
-         |FROM events WHERE ${S.isKalshi} AND user_id % 8 = 3
-         |  AND epoch_us(ts) >= 1704844800000000
-         |  AND epoch_us(ts) < 1705708800000000
-         |ORDER BY ts_us, snapshot_id""".stripMargin,
-
-    "ticker_series_1m" -> downsampleOracle("date_trunc('minute', ts)"),
-    // Spark's window() and DuckDB's time_bucket both align sub-day buckets
-    // to the unix epoch, so 5-minute bucket starts agree exactly
-    "ticker_series_5m" ->
-      downsampleOracle("time_bucket(INTERVAL '5 minutes', ts)"),
-    "ticker_series_1h" -> downsampleOracle("date_trunc('hour', ts)"),
-    "ticker_series_24h" -> downsampleOracle("date_trunc('day', ts)"),
-
-    "best_price" ->
-      s"""SELECT ${S.tsUs} AS ts_us, event_id AS snapshot_id,
-         |${S.market} AS ticker,
-         |CAST(${S.p} AS BIGINT) AS yes_bid_cents,
-         |CAST(${S.p} - 1 AS BIGINT) AS yes_ask_cents,
-         |CAST(99 - ${S.p} AS BIGINT) AS no_bid_cents,
-         |CAST(98 - ${S.p} AS BIGINT) AS no_ask_cents,
-         |$kYes AS yes_bid
-         |FROM events WHERE ${S.isKalshi}
-         |ORDER BY ts_us, snapshot_id""".stripMargin,
-
-    "topofbook" ->
-      s"""SELECT ${S.tsUs} AS ts_us, event_id AS snapshot_id,
-         |${S.conditionId} AS ticker,
-         |$pBid AS best_bid, $pAsk AS best_ask,
-         |CAST(2 AS INTEGER) AS bid_levels, CAST(2 AS INTEGER) AS ask_levels,
-         |($pBid + $pAsk) / 2.0 AS midpoint, $pAsk - $pBid AS spread
-         |FROM events WHERE NOT ${S.isKalshi}
-         |ORDER BY ts_us, snapshot_id""".stripMargin,
-
-    // book identity ⟺ (p, q1, q2) identity: both venue book templates
-    // are injective in those three fields within a series
-    "snapshot_redundancy" ->
-      s"""WITH e AS (
-         |  SELECT ${S.source} AS source, ${S.ticker} AS ticker,
-         |    ${S.tsUs} AS u, event_id AS id,
-         |    ${S.p} AS p, ${S.q1} AS q1, ${S.q2} AS q2
-         |  FROM events),
-         |l AS (
-         |  SELECT source,
-         |    lag(p) OVER w AS pp, lag(q1) OVER w AS pq1,
-         |    lag(q2) OVER w AS pq2, p, q1, q2
-         |  FROM e WINDOW w AS (PARTITION BY source, ticker
-         |    ORDER BY u, id)),
-         |g AS (
-         |  SELECT source, count(*) AS n_snapshots,
-         |    CAST(sum(CASE WHEN pp IS NULL OR p <> pp OR q1 <> pq1
-         |      OR q2 <> pq2 THEN 1 ELSE 0 END) AS BIGINT) AS n_changed
-         |  FROM l GROUP BY source)
-         |SELECT source, n_snapshots, n_changed,
-         |  1.0 - CAST(n_changed AS DOUBLE) / CAST(n_snapshots AS DOUBLE)
-         |    AS redundancy_ratio
-         |FROM g ORDER BY source""".stripMargin,
-
-    "price_jumps" ->
-      s"""SELECT * FROM (
-         |  SELECT ${S.market} AS market, ${S.tsUs} AS ts_us,
-         |    event_id AS snapshot_id,
-         |    CAST(${S.p} AS BIGINT) AS p,
-         |    lag(CAST(${S.p} AS BIGINT)) OVER (PARTITION BY ${S.market}
-         |      ORDER BY ${S.tsUs}, event_id) AS prev_p,
-         |    CAST(${S.p} AS BIGINT) - lag(CAST(${S.p} AS BIGINT))
-         |      OVER (PARTITION BY ${S.market}
-         |        ORDER BY ${S.tsUs}, event_id) AS delta
-         |  FROM events WHERE ${S.isKalshi})
-         |WHERE abs(delta) >= 5
-         |ORDER BY market, ts_us, snapshot_id""".stripMargin,
-
-    "volatility_1h" ->
-      s"""WITH e AS (
-         |  SELECT ${S.market} AS market,
-         |    ${S.tsUs} // 3600000000 * 3600000000 AS bucket_us,
-         |    CAST(${S.p} AS BIGINT) AS p
-         |  FROM events WHERE ${S.isKalshi}),
-         |g AS (
-         |  SELECT market, bucket_us, count(*) AS n,
-         |    CAST(sum(p) AS DOUBLE) AS sx,
-         |    CAST(sum(p * p) AS DOUBLE) AS sxx
-         |  FROM e GROUP BY 1, 2)
-         |SELECT market, bucket_us, n,
-         |  CASE WHEN n < 2 THEN NULL
-         |    ELSE round(sqrt((n * sxx - sx * sx) / (n * (n - 1))), 6)
-         |  END AS stddev_cents
-         |FROM g ORDER BY market, bucket_us""".stripMargin,
-
-    "ohlc_1h" ->
-      s"""WITH e AS (
-         |  SELECT ${S.tsUs} AS u, event_id AS id,
-         |    CAST(${S.p} AS BIGINT) AS p,
-         |    ${S.tsUs} // 3600000000 * 3600000000 AS bucket_us
-         |  FROM events
-         |  WHERE ${S.isKalshi} AND ${S.market} = 'T3'),
-         |o AS (
-         |  SELECT bucket_us, p AS open FROM (
-         |    SELECT bucket_us, p, row_number() OVER (PARTITION BY bucket_us
-         |      ORDER BY u, id) AS rn FROM e) WHERE rn = 1),
-         |c AS (
-         |  SELECT bucket_us, p AS close FROM (
-         |    SELECT bucket_us, p, row_number() OVER (PARTITION BY bucket_us
-         |      ORDER BY u DESC, id DESC) AS rn FROM e) WHERE rn = 1),
-         |hl AS (
-         |  SELECT bucket_us, max(p) AS high, min(p) AS low,
-         |    count(*) AS n_ticks
-         |  FROM e GROUP BY bucket_us)
-         |SELECT bucket_us, open, high, low, close, n_ticks
-         |FROM hl JOIN o USING (bucket_us) JOIN c USING (bucket_us)
-         |ORDER BY bucket_us""".stripMargin,
-
-    // bids carry (q1, q2), asks (17, q1); the engine's HOF depth sums add
-    // exact-integer-valued doubles in element order, so the closed-form
-    // integer sums cast to double are bit-identical
-    "depth_imbalance" ->
-      s"""SELECT ${S.tsUs} AS ts_us, event_id AS snapshot_id,
-         |${S.conditionId} AS ticker,
-         |CAST(${S.q1} + ${S.q2} AS DOUBLE) AS bid_depth,
-         |CAST(17 + ${S.q1} AS DOUBLE) AS ask_depth,
-         |(CAST(${S.q1} + ${S.q2} AS DOUBLE) - CAST(17 + ${S.q1} AS DOUBLE))
-         |  / (CAST(${S.q1} + ${S.q2} AS DOUBLE)
-         |     + CAST(17 + ${S.q1} AS DOUBLE)) AS imbalance
-         |FROM events WHERE NOT ${S.isKalshi}
-         |ORDER BY ts_us, snapshot_id""".stripMargin,
-
-    "venue_correlation" ->
+    },
       s"""WITH e AS (
          |  SELECT ${S.market} AS m, ${S.tsUs} // 60000000 AS b,
          |    ${S.tsUs} AS u, event_id, ${S.p} AS p, ${S.isKalshi} AS ik
@@ -492,9 +408,17 @@ object AnalyticsQueries {
          |    ELSE round((n * sxy - sx * sy) /
          |      (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy)), 12)
          |  END AS venue_corr
-         |FROM s ORDER BY ticker""".stripMargin,
+         |FROM s ORDER BY ticker""".stripMargin),
 
-    "fill_walk" ->
+    QuerySpec("fill_walk", (s, d) => {
+      val k = snaps(s, d).filter(col("source") === "kalshi")
+        .withColumn("book", Books.parseKalshi(col("full_orderbook")))
+      k.select(
+        col("ts_us"), col("snapshot_id"), col("ticker"),
+        Books.fillWalkAvgPriceDollars(col("book.yes"), lit(25L))
+          .as("avg_fill_price"))
+      // no trailing global sort (r18): see best_price
+    },
       s"""SELECT ${S.tsUs} AS ts_us, event_id AS snapshot_id,
          |${S.market} AS ticker,
          |CASE WHEN ${S.q1} + ${S.q2} < 25 THEN CAST(0.0 AS DOUBLE)
@@ -503,10 +427,44 @@ object AnalyticsQueries {
          |            AS DOUBLE) / (CAST(100 AS DOUBLE) * CAST(25 AS DOUBLE))
          |END AS avg_fill_price
          |FROM events WHERE ${S.isKalshi}
-         |ORDER BY ts_us, snapshot_id""".stripMargin,
+         |ORDER BY ts_us, snapshot_id""".stripMargin),
 
-    // identical closed form to fill_walk: the Aggregator must agree
-    "fill_walk_agg" ->
+    // U1: the typed-Aggregator twin of fill_walk. One row per book level
+    // (posexplode carries book order), grouped per snapshot and walked by
+    // FillWalkAggregator's zero/reduce/finish over the per-group iterator
+    // that `flatMapSortedGroups` guarantees sorted by level position — the
+    // only aggregation API whose within-group row order is a contract.
+    // (A udaf() form was tried first and FillWalkAggregator.merge failed
+    // loudly, exactly as designed: ObjectHashAggregateExec falls back to
+    // sort-based aggregation past 128 distinct groups, which both splits a
+    // group across partial buffers and re-sorts rows by grouping key only,
+    // so no hash-aggregate plan can promise level order.) The oracle is
+    // fill_walk's closed form — a green row proves the typed-Aggregator
+    // walk agrees with the order-safe array-HOF walk.
+    QuerySpec("fill_walk_agg", (s, d) => {
+      import s.implicits._
+      val agg = new graft.functions.FillWalkAggregator(25L)
+      snaps(s, d).filter(col("source") === "kalshi")
+        .withColumn("book", Books.parseKalshi(col("full_orderbook")))
+        .select(col("ts_us"), col("snapshot_id"), col("ticker"),
+          posexplode(col("book.yes")).as(Seq("pos", "lvl")))
+        .select(col("ts_us"), col("snapshot_id"), col("ticker"), col("pos"),
+          element_at(col("lvl"), 1).as("price"),
+          element_at(col("lvl"), 2).as("qty"))
+        // expression-keyed grouping (`groupBy(...).as[K, V]`) keeps the
+        // shuffle key in Tungsten — the lambda `groupByKey(r => ...)` form
+        // deserializes EVERY exploded level row just to compute its key,
+        // which was the whole cost of this query (8.1 s → ~3 s at sf0.1)
+        .groupBy(col("ts_us"), col("snapshot_id"), col("ticker"))
+        .as[(Long, Long, String), (Long, Long, String, Int, Long, Long)]
+        .flatMapSortedGroups(col("pos")) { (key, rows) =>
+          val acc = rows.foldLeft(agg.zero)((a, r) => agg.reduce(a, (r._5, r._6)))
+          Iterator((key._1, key._2, key._3, agg.finish(acc)))
+        }
+        .toDF("ts_us", "snapshot_id", "ticker", "avg_fill_price")
+        .orderBy("ts_us", "snapshot_id")
+    },
+      // identical closed form to fill_walk: the Aggregator must agree
       s"""SELECT ${S.tsUs} AS ts_us, event_id AS snapshot_id,
          |${S.market} AS ticker,
          |CASE WHEN ${S.q1} + ${S.q2} < 25 THEN CAST(0.0 AS DOUBLE)
@@ -515,16 +473,25 @@ object AnalyticsQueries {
          |            AS DOUBLE) / (CAST(100 AS DOUBLE) * CAST(25 AS DOUBLE))
          |END AS avg_fill_price
          |FROM events WHERE ${S.isKalshi}
-         |ORDER BY ts_us, snapshot_id""".stripMargin,
+         |ORDER BY ts_us, snapshot_id""".stripMargin),
 
-    "latency_chain" ->
+    QuerySpec("latency_chain", (s, d) =>
+      snaps(s, d).select(
+        col("ts_us"), col("snapshot_id"), col("source"),
+        expr("(api_response_ns - api_call_start_ns) DIV 1000")
+          .as("api_latency_us"),
+        expr("(virginia_received_ns - api_response_ns) DIV 1000000")
+          .as("ingest_ms"),
+        expr("(data_server_stored_ns - api_call_start_ns) DIV 1000000")
+          .as("e2e_ms")),
+      // ^ no trailing global sort (r18): see best_price
       s"""SELECT ${S.tsUs} AS ts_us, event_id AS snapshot_id,
          |${S.source} AS source,
          |((event_id % 500) + 20) * 1000 AS api_latency_us,
          |(user_id % 50) + 1 AS ingest_ms,
          |((event_id % 500) + 20) + ((user_id % 50) + 1)
          |  + ((event_id % 200) + 5) AS e2e_ms
-         |FROM events ORDER BY ts_us, snapshot_id""".stripMargin)
+         |FROM events ORDER BY ts_us, snapshot_id""".stripMargin))
 
   private def downsampleOracle(bucketExpr: String): String =
     s"""SELECT epoch_us($bucketExpr) AS bucket_us,

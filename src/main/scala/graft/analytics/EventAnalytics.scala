@@ -1,9 +1,10 @@
 package graft.analytics
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.{QueryModule, QuerySpec}
 import graft.sources.Tables
 
 /** Behavioral analytics over the `events` stream table — sessionization
@@ -14,9 +15,7 @@ import graft.sources.Tables
   * sorts within a partition — no global sort. The funnel is conditional
   * `min` aggregates, one shuffle, map-side partial.
   */
-object EventAnalytics {
-  type Q = (SparkSession, String) => DataFrame
-
+object EventAnalytics extends QueryModule {
   /** Split each user's event stream into sessions at `gapMinutes` idle
     * gaps; emit per-event session indices. */
   def sessionize(events: DataFrame, gapMinutes: Int = 30): DataFrame = {
@@ -97,21 +96,8 @@ object EventAnalytics {
       .na.fill(0L)
       .orderBy("cohort")
 
-  val queries: Map[String, Q] = Map(
-    "sessionize" -> ((s, d) => sessionize(Tables.events(s, d))),
-    "funnel" -> ((s, d) => funnel(Tables.events(s, d))),
-    "event_type_pivot" -> ((s, d) => typePivot(Tables.events(s, d))),
-    // the streaming session-window lane's batch twin: identical plan
-    // fragment (graft.streaming.StreamingLanes.sessionWindows), oracled
-    // against DuckDB's lag/gap-sum formulation of the same semantics
-    "session_windows" -> ((s, d) =>
-      graft.streaming.StreamingLanes.sessionWindows(Tables.events(s, d))
-        .orderBy("user_id", "session_start_us")),
-    "retention_cohorts" -> ((s, d) =>
-      retentionCohorts(Tables.events(s, d))))
-
-  val oracle: Map[String, String] = Map(
-    "sessionize" ->
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("sessionize", (s, d) => sessionize(Tables.events(s, d)),
       """SELECT user_id, event_id, epoch_us(ts) AS ts_us,
         |CAST(sum(CASE WHEN prev_us IS NULL
         |  OR epoch_us(ts) - prev_us > 1800000000 THEN 1 ELSE 0 END)
@@ -122,23 +108,44 @@ object EventAnalytics {
         |    lag(epoch_us(ts), 1) OVER (PARTITION BY user_id
         |      ORDER BY ts, event_id) AS prev_us
         |  FROM events)
-        |ORDER BY user_id, ts_us, event_id""".stripMargin,
+        |ORDER BY user_id, ts_us, event_id""".stripMargin),
 
-    "event_type_pivot" ->
+    QuerySpec("funnel", (s, d) => funnel(Tables.events(s, d)),
+      """SELECT user_id,
+        |min(CASE WHEN event_type = 'view' THEN epoch_us(ts) END)
+        |  AS first_view_us,
+        |min(CASE WHEN event_type = 'click' THEN epoch_us(ts) END)
+        |  AS first_click_us,
+        |min(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END)
+        |  AS first_purchase_us,
+        |coalesce(
+        |  min(CASE WHEN event_type = 'view' THEN epoch_us(ts) END)
+        |    < min(CASE WHEN event_type = 'click' THEN epoch_us(ts) END)
+        |  AND min(CASE WHEN event_type = 'click' THEN epoch_us(ts) END)
+        |    < min(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END),
+        |  false) AS converted
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
+
+    QuerySpec("event_type_pivot", (s, d) => typePivot(Tables.events(s, d)),
       """SELECT user_id % 10 AS cohort,
         |count(CASE WHEN event_type = 'view' THEN 1 END) AS view,
         |count(CASE WHEN event_type = 'click' THEN 1 END) AS click,
         |count(CASE WHEN event_type = 'purchase' THEN 1 END) AS purchase,
         |count(CASE WHEN event_type = 'signup' THEN 1 END) AS signup,
         |count(CASE WHEN event_type = 'error' THEN 1 END) AS error
-        |FROM events GROUP BY 1 ORDER BY cohort""".stripMargin,
+        |FROM events GROUP BY 1 ORDER BY cohort""".stripMargin),
 
-    // session_window(ts, 30m): events merge while the gap to the previous
-    // event is <= 30 min INCLUSIVE (probed empirically: two events exactly
-    // gap apart merge — touching windows coalesce); window end = last
-    // event + 30 min. The lag/gap-sum restatement below is an independent
-    // formulation of that semantics; PropertySpec pins the boundary.
-    "session_windows" ->
+    // the streaming session-window lane's batch twin: identical plan
+    // fragment (graft.streaming.StreamingLanes.sessionWindows), oracled
+    // against DuckDB's lag/gap-sum formulation of the same semantics
+    QuerySpec("session_windows", (s, d) =>
+      graft.streaming.StreamingLanes.sessionWindows(Tables.events(s, d))
+        .orderBy("user_id", "session_start_us"),
+      // session_window(ts, 30m): events merge while the gap to the previous
+      // event is <= 30 min INCLUSIVE (probed empirically: two events exactly
+      // gap apart merge — touching windows coalesce); window end = last
+      // event + 30 min. The lag/gap-sum restatement below is an independent
+      // formulation of that semantics; PropertySpec pins the boundary.
       """WITH l AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS u, value,
         |    lag(epoch_us(ts)) OVER (PARTITION BY user_id
@@ -155,9 +162,10 @@ object EventAnalytics {
         |  count(*) AS n_events,
         |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
         |FROM s GROUP BY user_id, sid
-        |ORDER BY user_id, session_start_us""".stripMargin,
+        |ORDER BY user_id, session_start_us""".stripMargin),
 
-    "retention_cohorts" ->
+    QuerySpec("retention_cohorts", (s, d) =>
+      retentionCohorts(Tables.events(s, d)),
       """WITH a AS (
         |  SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
         |f AS (SELECT user_id, min(day) AS cohort FROM a GROUP BY user_id),
@@ -172,21 +180,5 @@ object EventAnalytics {
         |  CAST(n_users AS DOUBLE) /
         |    CAST(max(CASE WHEN day_offset = 0 THEN n_users END)
         |      OVER (PARTITION BY cohort) AS DOUBLE) AS retention
-        |FROM g ORDER BY cohort, day_offset""".stripMargin,
-
-    "funnel" ->
-      """SELECT user_id,
-        |min(CASE WHEN event_type = 'view' THEN epoch_us(ts) END)
-        |  AS first_view_us,
-        |min(CASE WHEN event_type = 'click' THEN epoch_us(ts) END)
-        |  AS first_click_us,
-        |min(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END)
-        |  AS first_purchase_us,
-        |coalesce(
-        |  min(CASE WHEN event_type = 'view' THEN epoch_us(ts) END)
-        |    < min(CASE WHEN event_type = 'click' THEN epoch_us(ts) END)
-        |  AND min(CASE WHEN event_type = 'click' THEN epoch_us(ts) END)
-        |    < min(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END),
-        |  false) AS converted
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin)
+        |FROM g ORDER BY cohort, day_offset""".stripMargin))
 }

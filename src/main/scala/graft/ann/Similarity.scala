@@ -3,6 +3,7 @@ package graft.ann
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.{QueryModule, QuerySpec}
 import graft.sources.Tables
 
 /** Similarity search over the `embeddings` table (`Array[Float]` column).
@@ -20,9 +21,7 @@ import graft.sources.Tables
   * aggregates (order-independent); the single cosine division afterwards is
   * one deterministic double op mirrored in the oracle.
   */
-object Similarity {
-  type Q = (SparkSession, String) => DataFrame
-
+object Similarity extends QueryModule {
   /** Fixed-point quantized copy of the embedding. */
   private def quantized(e: Column): Column =
     transform(e, x => round(x.cast("double") * 1000).cast("long"))
@@ -1071,55 +1070,7 @@ object Similarity {
         (coalesce(col("nb"), lit(0L)) === 0L).as("is_clean"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "ann_recall" -> ((s, d) => annRecall(s, d)),
-    "ann_topk" -> ((s, d) => annTopK(s, d)),
-    "ann_ivf" -> ((s, d) => annIvf(s, d)),
-    "ann_ivf_probe" -> ((s, d) => annIvfProbe(s, d)),
-    "ann_sq_rerank" -> ((s, d) => annSqRerank(s, d)),
-    "ann_sq_recall" -> ((s, d) => annSqRecall(s, d)),
-    "ann_ivf_trained" -> ((s, d) => annIvfTrained(s, d)),
-    "ann_ivf_stored" -> ((s, d) => annIvfStored(s, d)),
-    // multi-probe over the persisted index — the serving read path
-    "ann_ivf_stored_probe" -> ((s, d) => annIvfStoredProbe(s, d)),
-    // recall/nprobe telemetry for the stored serving path
-    "ann_stored_recall" -> ((s, d) => annStoredRecall(s, d)),
-    // EXTERNAL query vectors (not corpus members): brute-force baseline,
-    // stored-index multi-probe serving, and the recall/nprobe telemetry
-    "ann_query_external" -> ((s, d) => annQueryExternal(s, d)),
-    "ann_query_external_probe" -> ((s, d) => annQueryExternalProbe(s, d)),
-    "ann_external_recall" -> ((s, d) => annExternalRecall(s, d)),
-    "ann_ivf_health" -> ((s, d) => annIvfHealth(s, d)),
-    "embedding_outliers" -> ((s, d) => embeddingOutliers(s, d)),
-    "dedup_embedding" -> ((s, d) => embeddingNearDup(s, d, threshold = 0.5)),
-    "dedup_embedding_auto" -> ((s, d) => embeddingNearDupAuto(s, d)),
-    "dedup_embedding_capped" -> ((s, d) => embeddingNearDupCapped(s, d)),
-    "dedup_embedding_semantic" -> ((s, d) => embeddingNearDupSemantic(s, d)),
-    // the dedup-SIZED quantizer (k = 32 cells, its own staged
-    // training): SemDeDup's recall lever priced at the k a dedup run
-    // would pick, not the serving index's 8
-    "dedup_embedding_semantic_k" -> ((s, d) =>
-      embeddingNearDupSemanticK(s, d)),
-    // embedding-space benchmark decontamination: paraphrased/near-dup
-    // leakage exact chunk signatures miss — judged split vs the small
-    // broadcast benchmark vector set at the family threshold
-    "embedding_decontam" -> ((s, d) =>
-      embeddingDecontam(s, d).orderBy(col("vec_id"))),
-    // the benchmark-refresh direction: persisted corpus vectors
-    // re-judged against only the delta benchmark items
-    "embedding_decontam_retro" -> ((s, d) =>
-      embeddingDecontamRetro(s, d).orderBy(col("vec_id"))),
-    // the refresh APPLIED (r17 — the pure frame form of
-    // embeddingDecontamRefreshStore's rewrite): the surviving corpus
-    // vectors after the delta's flagged set anti-joins away
-    "embedding_decontam_refresh" -> ((s, d) =>
-      embeddingDecontamRefreshApply(
-        corpus(s, d).filter(col("vec_id") % 10 < 8),
-        embeddingDecontamRetro(s, d))
-        .select(col("vec_id"), col("n2"))
-        .orderBy(col("vec_id"))))
-
-  // --- oracle -------------------------------------------------------------
+  // --- oracle SQL, then the registered queries ----------------------------
 
   private[graft] val qCte =
     """n AS (
@@ -1416,99 +1367,10 @@ object Similarity {
        |WHERE d.vec_id NOT IN (SELECT vec_id FROM mt)
        |ORDER BY d.vec_id""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "embedding_decontam" -> semJudgeOracleSql(
-      "vec_id < 10", "vec_id % 10 >= 8", "n_benchmark_sem_matches"),
-    "embedding_decontam_retro" -> semJudgeOracleSql(
-      "vec_id >= 5 AND vec_id < 10", "vec_id % 10 < 8",
-      "n_delta_sem_matches"),
-    "embedding_decontam_refresh" -> semRefreshOracleSql(
-      "vec_id >= 5 AND vec_id < 10", "vec_id % 10 < 8"),
-
-    // brute-force cosine top-10 for the literal external query set —
-    // the baseline serving answer for non-corpus vectors
-    "ann_query_external" ->
-      s"""WITH $qCte,
-         |$qxCtes
-         |$externalTopkCore
-         |ORDER BY query_id, rank""".stripMargin,
-
-    // stored-index multi-probe serving of the same external frame,
-    // replayed exactly: centroids ranked per query against the frozen
-    // trained set (s1), nprobe=2 nearest cells kept, candidates = the
-    // stored/append-assigned vectors in any probed cell
-    "ann_query_external_probe" ->
-      s"""WITH $storedIdxCtes,
-         |$qxCtes,
-         |pc AS (
-         |  SELECT q.query_id, s.cell,
-         |    row_number() OVER (PARTITION BY q.query_id ORDER BY
-         |      q.qn2 - 2 * list_sum(list_transform(
-         |        generate_series(1, len(q.qv)), i -> q.qv[i] * s.c[i]))
-         |        + s.c2, s.cell) AS crn
-         |  FROM qn q, s1 s)
-         |SELECT q.query_id AS query_id, a.vec_id,
-         |  CAST(row_number() OVER (PARTITION BY q.query_id
-         |    ORDER BY CAST(list_sum(list_transform(
-         |        generate_series(1, len(a.v)), i -> a.v[i] * q.qv[i]))
-         |        AS DOUBLE)
-         |      / (sqrt(CAST(q.qn2 AS DOUBLE)) * sqrt(CAST(a.n2 AS DOUBLE)))
-         |      DESC, a.vec_id ASC) AS INTEGER) AS rank,
-         |  CAST(list_sum(list_transform(generate_series(1, len(a.v)),
-         |      i -> a.v[i] * q.qv[i])) AS DOUBLE)
-         |    / (sqrt(CAST(q.qn2 AS DOUBLE)) * sqrt(CAST(a.n2 AS DOUBLE)))
-         |    AS cosine
-         |FROM allv a
-         |CROSS JOIN qn q
-         |JOIN pc ON pc.query_id = q.query_id AND pc.cell = a.cell
-         |  AND pc.crn <= 2
-         |QUALIFY rank <= 10
-         |ORDER BY q.query_id, rank""".stripMargin,
-
-    // recall@10 of the external serving path vs its own brute truth,
-    // swept over nprobe — the ann_stored_recall shape for non-corpus
-    // queries
-    "ann_external_recall" ->
-      s"""WITH $storedIdxCtes,
-         |$qxCtes,
-         |truthx AS ($externalTopkCore),
-         |pc AS (
-         |  SELECT q.query_id, s.cell,
-         |    row_number() OVER (PARTITION BY q.query_id ORDER BY
-         |      q.qn2 - 2 * list_sum(list_transform(
-         |        generate_series(1, len(q.qv)), i -> q.qv[i] * s.c[i]))
-         |        + s.c2, s.cell) AS crn
-         |  FROM qn q, s1 s),
-         |srv AS (
-         |  SELECT np, query_id, vec_id FROM (
-         |    SELECT p.np, q.query_id, a.vec_id,
-         |      row_number() OVER (PARTITION BY p.np, q.query_id
-         |        ORDER BY CAST(list_sum(list_transform(
-         |            generate_series(1, len(a.v)), i -> a.v[i] * q.qv[i]))
-         |            AS DOUBLE)
-         |          / (sqrt(CAST(q.qn2 AS DOUBLE)) * sqrt(CAST(a.n2 AS DOUBLE)))
-         |          DESC, a.vec_id ASC) AS rank
-         |    FROM (VALUES (1), (2), (4)) p(np)
-         |    CROSS JOIN qn q
-         |    JOIN pc ON pc.query_id = q.query_id AND pc.crn <= p.np
-         |    JOIN allv a ON a.cell = pc.cell)
-         |  WHERE rank <= 10),
-         |qids AS (SELECT DISTINCT query_id FROM truthx),
-         |hits AS (
-         |  SELECT s.np, t.query_id, count(*) AS h FROM truthx t
-         |  JOIN srv s ON s.query_id = t.query_id AND s.vec_id = t.vec_id
-         |  GROUP BY s.np, t.query_id)
-         |SELECT query_id, nprobe, CAST(coalesce(h, 0) AS INTEGER) AS hits,
-         |  CAST(coalesce(h, 0) AS DOUBLE) / 10 AS recall_at_k
-         |FROM (
-         |  SELECT q.query_id, p.np AS nprobe, hits.h
-         |  FROM (VALUES (1), (2), (4)) p(np)
-         |  CROSS JOIN qids q
-         |  LEFT JOIN hits ON hits.np = p.np AND hits.query_id = q.query_id)
-         |ORDER BY nprobe, query_id""".stripMargin,
-    // recall@10 of each IVF variant vs the brute-force truth, replayed
-    // exactly: truth/ivf/probe are the same deterministic top-k CTEs
-    "ann_recall" ->
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("ann_recall", (s, d) => annRecall(s, d),
+      // recall@10 of each IVF variant vs the brute-force truth, replayed
+      // exactly: truth/ivf/probe are the same deterministic top-k CTEs
       s"""WITH $qCte,
          |truth AS (${topkCore("")}),
          |ivf AS (${topkCore(s"AND ${bucketSql("a")} = ${bucketSql("q")}")}),
@@ -1532,23 +1394,31 @@ object Similarity {
          |  UNION ALL
          |  SELECT q.query_id, 4 AS nprobe, h4.h
          |  FROM qids q LEFT JOIN h4 ON h4.query_id = q.query_id)
-         |ORDER BY nprobe, query_id""".stripMargin,
+         |ORDER BY nprobe, query_id""".stripMargin),
 
-    "ann_topk" -> topkSql(""),
+    QuerySpec("ann_topk", (s, d) => annTopK(s, d), topkSql("")),
+    QuerySpec("ann_ivf", (s, d) => annIvf(s, d),
+      topkSql(s"AND ${bucketSql("a")} = ${bucketSql("q")}")),
+    QuerySpec("ann_ivf_probe", (s, d) => annIvfProbe(s, d),
+      // probe list = own cell (xor 0) + each sign bit flipped (xor 1/2/4);
+      // a corpus vector lives in exactly one cell, so no duplicate pairs
+      topkSql(
+      s"""JOIN (VALUES (0), (1), (2), (4)) p(o)
+         |  ON ${bucketSql("a")} = xor(${bucketSql("q")}, p.o)""".stripMargin)),
 
-    // the two-stage scalar-quantized scan replayed exactly: coarse =
-    // floor(v/100) (IEEE double divide + floor, bit-identical in both
-    // engines), coarse top-coarseK by (coarse cosine, vec_id), exact
-    // rerank — see sqCtes
-    "ann_sq_rerank" ->
+    QuerySpec("ann_sq_rerank", (s, d) => annSqRerank(s, d),
+      // the two-stage scalar-quantized scan replayed exactly: coarse =
+      // floor(v/100) (IEEE double divide + floor, bit-identical in both
+      // engines), coarse top-coarseK by (coarse cosine, vec_id), exact
+      // rerank — see sqCtes
       s"""WITH $qCte, $mcCtes,
          |${sqCtes("", 50)}
          |SELECT query_id, vec_id, rank, cosine FROM sq
-         |ORDER BY query_id, rank""".stripMargin,
+         |ORDER BY query_id, rank""".stripMargin),
 
-    // recall@10 of the SQ rerank vs the same brute-force truth, swept
-    // over the coarse candidate budget
-    "ann_sq_recall" ->
+    QuerySpec("ann_sq_recall", (s, d) => annSqRecall(s, d),
+      // recall@10 of the SQ rerank vs the same brute-force truth, swept
+      // over the coarse candidate budget
       s"""WITH $qCte, $mcCtes,
          |${sqCtes("10", 10)},
          |${sqCtes("50", 50)},
@@ -1570,18 +1440,12 @@ object Similarity {
          |  UNION ALL
          |  SELECT q.query_id, 50 AS coarse_k, h50.h
          |  FROM qids q LEFT JOIN h50 ON h50.query_id = q.query_id)
-         |ORDER BY coarse_k, query_id""".stripMargin,
-    "ann_ivf" -> topkSql(s"AND ${bucketSql("a")} = ${bucketSql("q")}"),
-    // probe list = own cell (xor 0) + each sign bit flipped (xor 1/2/4);
-    // a corpus vector lives in exactly one cell, so no duplicate pairs
-    "ann_ivf_probe" -> topkSql(
-      s"""JOIN (VALUES (0), (1), (2), (4)) p(o)
-         |  ON ${bucketSql("a")} = xor(${bucketSql("q")}, p.o)""".stripMargin),
+         |ORDER BY coarse_k, query_id""".stripMargin),
 
-    // the 2-iteration Lloyd training replayed exactly: integer-lattice
-    // vectors, centroids re-quantized to longs after each mean update,
-    // all distances exact longs, ties to the lowest cell id
-    "ann_ivf_trained" ->
+    QuerySpec("ann_ivf_trained", (s, d) => annIvfTrained(s, d),
+      // the 2-iteration Lloyd training replayed exactly: integer-lattice
+      // vectors, centroids re-quantized to longs after each mean update,
+      // all distances exact longs, ties to the lowest cell id
       s"""WITH n AS (
         |  SELECT vec_id,
         |    list_transform(embedding,
@@ -1636,13 +1500,13 @@ object Similarity {
         |FROM a2 a JOIN a2 q
         |  ON q.vec_id < 5 AND a.cell = q.cell AND a.vec_id <> q.vec_id
         |QUALIFY rank <= 10
-        |ORDER BY query_id, rank""".stripMargin,
+        |ORDER BY query_id, rank""".stripMargin),
 
-    // the store-backed incremental path replayed exactly: train + assign
-    // on the accumulated corpus (vec_id % 10 < 8; seeds vec_id < 8 are
-    // all inside it), assign the incoming batch (vec_id % 10 >= 8)
-    // against the SAME trained centroids, query the union
-    "ann_ivf_stored" ->
+    QuerySpec("ann_ivf_stored", (s, d) => annIvfStored(s, d),
+      // the store-backed incremental path replayed exactly: train + assign
+      // on the accumulated corpus (vec_id % 10 < 8; seeds vec_id < 8 are
+      // all inside it), assign the incoming batch (vec_id % 10 >= 8)
+      // against the SAME trained centroids, query the union
       s"""WITH $storedIdxCtes
          |SELECT q.vec_id AS query_id, a.vec_id,
          |  CAST(row_number() OVER (PARTITION BY q.vec_id
@@ -1658,12 +1522,47 @@ object Similarity {
          |FROM allv a JOIN allv q
          |  ON q.vec_id < 5 AND a.cell = q.cell AND a.vec_id <> q.vec_id
          |QUALIFY rank <= 10
-         |ORDER BY query_id, rank""".stripMargin,
+         |ORDER BY query_id, rank""".stripMargin),
 
-    // recall@10 of the stored serving path vs exact brute-force truth,
-    // swept over nprobe in {1,2,4}: the probe CTE ranks cells once,
-    // each nprobe keeps its crn-prefix, hits counted per (nprobe, query)
-    "ann_stored_recall" ->
+    // multi-probe over the persisted index — the serving read path
+    QuerySpec("ann_ivf_stored_probe", (s, d) => annIvfStoredProbe(s, d),
+      // the serving multi-probe replayed exactly: queries ranked against
+      // the SAME trained-on-sub centroid set (s1), the nprobe=2 nearest
+      // cells kept (engine formula qn2 - 2·dot + c2, ties to lowest
+      // cell), candidates = stored/append-assigned vectors in any probed
+      // cell
+      s"""WITH $storedIdxCtes,
+         |qs AS (SELECT vec_id, v, n2 FROM a2 WHERE vec_id < 5),
+         |pc AS (
+         |  SELECT q.vec_id AS query_id, s.cell,
+         |    row_number() OVER (PARTITION BY q.vec_id ORDER BY
+         |      q.n2 - 2 * list_sum(list_transform(
+         |        generate_series(1, len(q.v)), i -> q.v[i] * s.c[i]))
+         |        + s.c2, s.cell) AS crn
+         |  FROM qs q, s1 s)
+         |SELECT q.vec_id AS query_id, a.vec_id,
+         |  CAST(row_number() OVER (PARTITION BY q.vec_id
+         |    ORDER BY CAST(list_sum(list_transform(
+         |        generate_series(1, len(a.v)), i -> a.v[i] * q.v[i]))
+         |        AS DOUBLE)
+         |      / (sqrt(CAST(q.n2 AS DOUBLE)) * sqrt(CAST(a.n2 AS DOUBLE)))
+         |      DESC, a.vec_id ASC) AS INTEGER) AS rank,
+         |  CAST(list_sum(list_transform(generate_series(1, len(a.v)),
+         |      i -> a.v[i] * q.v[i])) AS DOUBLE)
+         |    / (sqrt(CAST(q.n2 AS DOUBLE)) * sqrt(CAST(a.n2 AS DOUBLE)))
+         |    AS cosine
+         |FROM allv a
+         |JOIN qs q ON a.vec_id <> q.vec_id
+         |JOIN pc ON pc.query_id = q.vec_id AND pc.cell = a.cell
+         |  AND pc.crn <= 2
+         |QUALIFY rank <= 10
+         |ORDER BY query_id, rank""".stripMargin),
+
+    // recall/nprobe telemetry for the stored serving path
+    QuerySpec("ann_stored_recall", (s, d) => annStoredRecall(s, d),
+      // recall@10 of the stored serving path vs exact brute-force truth,
+      // swept over nprobe in {1,2,4}: the probe CTE ranks cells once,
+      // each nprobe keeps its crn-prefix, hits counted per (nprobe, query)
       s"""WITH $storedIdxCtes,
          |truth AS (${topkCore("")}),
          |qs AS (SELECT vec_id, v, n2 FROM a2 WHERE vec_id < 5),
@@ -1700,47 +1599,98 @@ object Similarity {
          |  FROM (VALUES (1), (2), (4)) p(np)
          |  CROSS JOIN qids q
          |  LEFT JOIN hits ON hits.np = p.np AND hits.query_id = q.query_id)
-         |ORDER BY nprobe, query_id""".stripMargin,
+         |ORDER BY nprobe, query_id""".stripMargin),
 
-    // the serving multi-probe replayed exactly: queries ranked against
-    // the SAME trained-on-sub centroid set (s1), the nprobe=2 nearest
-    // cells kept (engine formula qn2 - 2·dot + c2, ties to lowest
-    // cell), candidates = stored/append-assigned vectors in any probed
-    // cell
-    "ann_ivf_stored_probe" ->
+    // EXTERNAL query vectors (not corpus members): brute-force baseline,
+    // stored-index multi-probe serving, and the recall/nprobe telemetry
+    QuerySpec("ann_query_external", (s, d) => annQueryExternal(s, d),
+      // brute-force cosine top-10 for the literal external query set —
+      // the baseline serving answer for non-corpus vectors
+      s"""WITH $qCte,
+         |$qxCtes
+         |$externalTopkCore
+         |ORDER BY query_id, rank""".stripMargin),
+
+    QuerySpec("ann_query_external_probe", (s, d) => annQueryExternalProbe(s, d),
+      // stored-index multi-probe serving of the same external frame,
+      // replayed exactly: centroids ranked per query against the frozen
+      // trained set (s1), nprobe=2 nearest cells kept, candidates = the
+      // stored/append-assigned vectors in any probed cell
       s"""WITH $storedIdxCtes,
-         |qs AS (SELECT vec_id, v, n2 FROM a2 WHERE vec_id < 5),
+         |$qxCtes,
          |pc AS (
-         |  SELECT q.vec_id AS query_id, s.cell,
-         |    row_number() OVER (PARTITION BY q.vec_id ORDER BY
-         |      q.n2 - 2 * list_sum(list_transform(
-         |        generate_series(1, len(q.v)), i -> q.v[i] * s.c[i]))
+         |  SELECT q.query_id, s.cell,
+         |    row_number() OVER (PARTITION BY q.query_id ORDER BY
+         |      q.qn2 - 2 * list_sum(list_transform(
+         |        generate_series(1, len(q.qv)), i -> q.qv[i] * s.c[i]))
          |        + s.c2, s.cell) AS crn
-         |  FROM qs q, s1 s)
-         |SELECT q.vec_id AS query_id, a.vec_id,
-         |  CAST(row_number() OVER (PARTITION BY q.vec_id
+         |  FROM qn q, s1 s)
+         |SELECT q.query_id AS query_id, a.vec_id,
+         |  CAST(row_number() OVER (PARTITION BY q.query_id
          |    ORDER BY CAST(list_sum(list_transform(
-         |        generate_series(1, len(a.v)), i -> a.v[i] * q.v[i]))
+         |        generate_series(1, len(a.v)), i -> a.v[i] * q.qv[i]))
          |        AS DOUBLE)
-         |      / (sqrt(CAST(q.n2 AS DOUBLE)) * sqrt(CAST(a.n2 AS DOUBLE)))
+         |      / (sqrt(CAST(q.qn2 AS DOUBLE)) * sqrt(CAST(a.n2 AS DOUBLE)))
          |      DESC, a.vec_id ASC) AS INTEGER) AS rank,
          |  CAST(list_sum(list_transform(generate_series(1, len(a.v)),
-         |      i -> a.v[i] * q.v[i])) AS DOUBLE)
-         |    / (sqrt(CAST(q.n2 AS DOUBLE)) * sqrt(CAST(a.n2 AS DOUBLE)))
+         |      i -> a.v[i] * q.qv[i])) AS DOUBLE)
+         |    / (sqrt(CAST(q.qn2 AS DOUBLE)) * sqrt(CAST(a.n2 AS DOUBLE)))
          |    AS cosine
          |FROM allv a
-         |JOIN qs q ON a.vec_id <> q.vec_id
-         |JOIN pc ON pc.query_id = q.vec_id AND pc.cell = a.cell
+         |CROSS JOIN qn q
+         |JOIN pc ON pc.query_id = q.query_id AND pc.cell = a.cell
          |  AND pc.crn <= 2
          |QUALIFY rank <= 10
-         |ORDER BY query_id, rank""".stripMargin,
+         |ORDER BY q.query_id, rank""".stripMargin),
 
-    // store-freshness telemetry: the stored path (sub-trained centroids,
-    // batch append-assigned) and the fresh path (full-corpus retrain)
-    // replayed side by side — occupancy of the store's assignments plus
-    // the top-k overlap between what the store serves and what a fresh
-    // retrain would serve
-    "ann_ivf_health" ->
+    QuerySpec("ann_external_recall", (s, d) => annExternalRecall(s, d),
+      // recall@10 of the external serving path vs its own brute truth,
+      // swept over nprobe — the ann_stored_recall shape for non-corpus
+      // queries
+      s"""WITH $storedIdxCtes,
+         |$qxCtes,
+         |truthx AS ($externalTopkCore),
+         |pc AS (
+         |  SELECT q.query_id, s.cell,
+         |    row_number() OVER (PARTITION BY q.query_id ORDER BY
+         |      q.qn2 - 2 * list_sum(list_transform(
+         |        generate_series(1, len(q.qv)), i -> q.qv[i] * s.c[i]))
+         |        + s.c2, s.cell) AS crn
+         |  FROM qn q, s1 s),
+         |srv AS (
+         |  SELECT np, query_id, vec_id FROM (
+         |    SELECT p.np, q.query_id, a.vec_id,
+         |      row_number() OVER (PARTITION BY p.np, q.query_id
+         |        ORDER BY CAST(list_sum(list_transform(
+         |            generate_series(1, len(a.v)), i -> a.v[i] * q.qv[i]))
+         |            AS DOUBLE)
+         |          / (sqrt(CAST(q.qn2 AS DOUBLE)) * sqrt(CAST(a.n2 AS DOUBLE)))
+         |          DESC, a.vec_id ASC) AS rank
+         |    FROM (VALUES (1), (2), (4)) p(np)
+         |    CROSS JOIN qn q
+         |    JOIN pc ON pc.query_id = q.query_id AND pc.crn <= p.np
+         |    JOIN allv a ON a.cell = pc.cell)
+         |  WHERE rank <= 10),
+         |qids AS (SELECT DISTINCT query_id FROM truthx),
+         |hits AS (
+         |  SELECT s.np, t.query_id, count(*) AS h FROM truthx t
+         |  JOIN srv s ON s.query_id = t.query_id AND s.vec_id = t.vec_id
+         |  GROUP BY s.np, t.query_id)
+         |SELECT query_id, nprobe, CAST(coalesce(h, 0) AS INTEGER) AS hits,
+         |  CAST(coalesce(h, 0) AS DOUBLE) / 10 AS recall_at_k
+         |FROM (
+         |  SELECT q.query_id, p.np AS nprobe, hits.h
+         |  FROM (VALUES (1), (2), (4)) p(np)
+         |  CROSS JOIN qids q
+         |  LEFT JOIN hits ON hits.np = p.np AND hits.query_id = q.query_id)
+         |ORDER BY nprobe, query_id""".stripMargin),
+
+    QuerySpec("ann_ivf_health", (s, d) => annIvfHealth(s, d),
+      // store-freshness telemetry: the stored path (sub-trained centroids,
+      // batch append-assigned) and the fresh path (full-corpus retrain)
+      // replayed side by side — occupancy of the store's assignments plus
+      // the top-k overlap between what the store serves and what a fresh
+      // retrain would serve
       s"""WITH n AS (
          |  SELECT vec_id,
          |    list_transform(embedding,
@@ -1777,12 +1727,12 @@ object Similarity {
          |  CAST(h.hits AS INTEGER) AS store_hits,
          |  CAST(h.hits AS DOUBLE) / CAST(tn.truth_n AS DOUBLE)
          |    AS store_recall_at_k
-         |FROM oa, h, tn""".stripMargin,
+         |FROM oa, h, tn""".stripMargin),
 
-    // per-label exact sum vector (HUGEINT sums equal Spark's long sums —
-    // all magnitudes < 2^53, so the double casts agree bit-exactly),
-    // cosine to it, bottom-5 per label
-    "embedding_outliers" ->
+    QuerySpec("embedding_outliers", (s, d) => embeddingOutliers(s, d),
+      // per-label exact sum vector (HUGEINT sums equal Spark's long sums —
+      // all magnitudes < 2^53, so the double casts agree bit-exactly),
+      // cosine to it, bottom-5 per label
       """WITH n AS (
         |  SELECT vec_id, label,
         |    list_transform(embedding,
@@ -1813,12 +1763,30 @@ object Similarity {
         |    AS centroid_cos
         |FROM m JOIN s USING (label)
         |QUALIFY rank <= 5
-        |ORDER BY label, rank""".stripMargin,
-    // the auto-sized twin: bits = max(3, ceil(log2(ceil(N/256)))),
-    // derived from the oracle's own count exactly like the engine's
-    // integer bit-length formula (log2 of a BIGINT power of two is
-    // exact in libm, so CEIL agrees with the engine's bit arithmetic)
-    "dedup_embedding_auto" ->
+        |ORDER BY label, rank""".stripMargin),
+
+    QuerySpec("dedup_embedding", (s, d) =>
+      embeddingNearDup(s, d, threshold = 0.5),
+      s"""WITH $qCte
+         |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+         |  CAST(list_sum(list_transform(generate_series(1, len(a.v)),
+         |      i -> a.v[i] * b.v[i])) AS DOUBLE)
+         |    / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE)))
+         |    AS cosine
+         |FROM m a JOIN m b ON a.vec_id < b.vec_id
+         |  AND (CAST(a.v[1] > 0 AS INTEGER) * 4 + CAST(a.v[2] > 0 AS INTEGER) * 2
+         |    + CAST(a.v[3] > 0 AS INTEGER))
+         |    = (CAST(b.v[1] > 0 AS INTEGER) * 4 + CAST(b.v[2] > 0 AS INTEGER) * 2
+         |    + CAST(b.v[3] > 0 AS INTEGER))
+         |WHERE CAST(list_sum(list_transform(generate_series(1, len(a.v)),
+         |    i -> a.v[i] * b.v[i])) AS DOUBLE)
+         |  / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE))) >= 0.5
+         |ORDER BY id_a, id_b""".stripMargin),
+    QuerySpec("dedup_embedding_auto", (s, d) => embeddingNearDupAuto(s, d),
+      // the auto-sized twin: bits = max(3, ceil(log2(ceil(N/256)))),
+      // derived from the oracle's own count exactly like the engine's
+      // integer bit-length formula (log2 of a BIGINT power of two is
+      // exact in libm, so CEIL agrees with the engine's bit arithmetic)
       s"""WITH $qCte,
          |nb AS (
          |  SELECT GREATEST(3, CAST(CEIL(LOG2(
@@ -1840,12 +1808,12 @@ object Similarity {
          |WHERE CAST(list_sum(list_transform(generate_series(1, len(a.v)),
          |    i -> a.v[i] * b.v[i])) AS DOUBLE)
          |  / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE))) >= 0.5
-         |ORDER BY id_a, id_b""".stripMargin,
+         |ORDER BY id_a, id_b""".stripMargin),
 
-    // the bucket cap replayed exactly: same md5-nibble salt formula as
-    // the LSH cap oracle, cells over 256 split into ceil(bn/256)
-    // sub-buckets keyed on vec_id
-    "dedup_embedding_capped" ->
+    QuerySpec("dedup_embedding_capped", (s, d) => embeddingNearDupCapped(s, d),
+      // the bucket cap replayed exactly: same md5-nibble salt formula as
+      // the LSH cap oracle, cells over 256 split into ceil(bn/256)
+      // sub-buckets keyed on vec_id
       s"""WITH $qCte,
          |bkt AS (
          |  SELECT vec_id, v, n2, ${bucketSql("m")} AS bucket FROM m),
@@ -1869,13 +1837,14 @@ object Similarity {
          |WHERE CAST(list_sum(list_transform(generate_series(1, len(a.v)),
          |    i -> a.v[i] * b.v[i])) AS DOUBLE)
          |  / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE))) >= 0.5
-         |ORDER BY id_a, id_b""".stripMargin,
+         |ORDER BY id_a, id_b""".stripMargin),
 
-    // the trained-cell partition replayed exactly: the ann_ivf_trained
-    // Lloyd chain (seeds vec_id < 8, 2 exact-integer iterations) +
-    // full-corpus assignment, then the same md5-nibble cap salt and
-    // within-cell pair predicate as the capped oracle
-    "dedup_embedding_semantic" ->
+    QuerySpec("dedup_embedding_semantic", (s, d) =>
+      embeddingNearDupSemantic(s, d),
+      // the trained-cell partition replayed exactly: the ann_ivf_trained
+      // Lloyd chain (seeds vec_id < 8, 2 exact-integer iterations) +
+      // full-corpus assignment, then the same md5-nibble cap salt and
+      // within-cell pair predicate as the capped oracle
       s"""WITH $qCte,
          |$seedCte,
          |${lloydCtes("sem", "m")},
@@ -1900,11 +1869,15 @@ object Similarity {
          |WHERE CAST(list_sum(list_transform(generate_series(1, len(a.v)),
          |    i -> a.v[i] * b.v[i])) AS DOUBLE)
          |  / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE))) >= 0.5
-         |ORDER BY id_a, id_b""".stripMargin,
+         |ORDER BY id_a, id_b""".stripMargin),
 
-    // the dedup-sized variant: identical machinery with the Lloyd
-    // chain seeded at k = 32 (seedCteK — same seeding rule, wider)
-    "dedup_embedding_semantic_k" ->
+    // the dedup-SIZED quantizer (k = 32 cells, its own staged
+    // training): SemDeDup's recall lever priced at the k a dedup run
+    // would pick, not the serving index's 8
+    QuerySpec("dedup_embedding_semantic_k", (s, d) =>
+      embeddingNearDupSemanticK(s, d),
+      // the dedup-sized variant: identical machinery with the Lloyd
+      // chain seeded at k = 32 (seedCteK — same seeding rule, wider)
       s"""WITH $qCte,
          |${seedCteK(32)},
          |${lloydCtes("semk", "m")},
@@ -1929,22 +1902,30 @@ object Similarity {
          |WHERE CAST(list_sum(list_transform(generate_series(1, len(a.v)),
          |    i -> a.v[i] * b.v[i])) AS DOUBLE)
          |  / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE))) >= 0.5
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    "dedup_embedding" ->
-      s"""WITH $qCte
-         |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         |  CAST(list_sum(list_transform(generate_series(1, len(a.v)),
-         |      i -> a.v[i] * b.v[i])) AS DOUBLE)
-         |    / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE)))
-         |    AS cosine
-         |FROM m a JOIN m b ON a.vec_id < b.vec_id
-         |  AND (CAST(a.v[1] > 0 AS INTEGER) * 4 + CAST(a.v[2] > 0 AS INTEGER) * 2
-         |    + CAST(a.v[3] > 0 AS INTEGER))
-         |    = (CAST(b.v[1] > 0 AS INTEGER) * 4 + CAST(b.v[2] > 0 AS INTEGER) * 2
-         |    + CAST(b.v[3] > 0 AS INTEGER))
-         |WHERE CAST(list_sum(list_transform(generate_series(1, len(a.v)),
-         |    i -> a.v[i] * b.v[i])) AS DOUBLE)
-         |  / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE))) >= 0.5
-         |ORDER BY id_a, id_b""".stripMargin)
+         |ORDER BY id_a, id_b""".stripMargin),
+    // embedding-space benchmark decontamination: paraphrased/near-dup
+    // leakage exact chunk signatures miss — judged split vs the small
+    // broadcast benchmark vector set at the family threshold
+    QuerySpec("embedding_decontam", (s, d) =>
+      embeddingDecontam(s, d).orderBy(col("vec_id")),
+      semJudgeOracleSql(
+      "vec_id < 10", "vec_id % 10 >= 8", "n_benchmark_sem_matches")),
+    // the benchmark-refresh direction: persisted corpus vectors
+    // re-judged against only the delta benchmark items
+    QuerySpec("embedding_decontam_retro", (s, d) =>
+      embeddingDecontamRetro(s, d).orderBy(col("vec_id")),
+      semJudgeOracleSql(
+      "vec_id >= 5 AND vec_id < 10", "vec_id % 10 < 8",
+      "n_delta_sem_matches")),
+    // the refresh APPLIED (r17 — the pure frame form of
+    // embeddingDecontamRefreshStore's rewrite): the surviving corpus
+    // vectors after the delta's flagged set anti-joins away
+    QuerySpec("embedding_decontam_refresh", (s, d) =>
+      embeddingDecontamRefreshApply(
+        corpus(s, d).filter(col("vec_id") % 10 < 8),
+        embeddingDecontamRetro(s, d))
+        .select(col("vec_id"), col("n2"))
+        .orderBy(col("vec_id")),
+      semRefreshOracleSql(
+      "vec_id >= 5 AND vec_id < 10", "vec_id % 10 < 8")))
 }

@@ -1,9 +1,10 @@
 package graft.ledger
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.{QueryModule, QuerySpec}
 import graft.sources.Tables
 
 /** Trade-ledger aggregations — the PostgreSQL writer surface of the
@@ -19,9 +20,7 @@ import graft.sources.Tables
   * aggregate is exact and order-independent; the final per-key division to
   * DOUBLE is deterministic.
   */
-object Ledger {
-  type Q = (SparkSession, String) => DataFrame
-
+object Ledger extends QueryModule {
   private def dec(c: Column): Column = c.cast(DecimalType(18, 2))
 
   /** A5: incremental weighted fill average, recomputed from the log
@@ -78,18 +77,6 @@ object Ledger {
         col("executed_quantity"), col("avg_fill_price"), col("status"))
   }
 
-  val queries: Map[String, Q] = Map(
-    // no global sort: per-order rows at ledger scale are the second-
-    // largest result set in the suite, the reference's writer keys by
-    // trade_id without ordering, and the driver compare sorts rows
-    // itself (same contract as market_scan)
-    "fill_avg" -> ((s, d) => fillAverages(Tables(s, d, "lineitem"))),
-    "pair_rollup" -> ((s, d) =>
-      pairRollup(Tables(s, d, "lineitem")).orderBy("pair_id")),
-    "fill_ticket_join" -> ((s, d) =>
-      fillTicketJoin(Tables(s, d, "lineitem"), Tables(s, d, "orders"))
-        .orderBy("trade_id")))
-
   private val sumQ = "sum(CAST(l_quantity AS DECIMAL(18,2)))"
   private val sumQP =
     "sum(CAST(l_quantity AS DECIMAL(18,2)) * CAST(l_extendedprice AS DECIMAL(18,2)))"
@@ -105,10 +92,16 @@ object Ledger {
        |     ELSE 'pending' END AS status
        |FROM lineitem GROUP BY l_orderkey""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "fill_avg" -> s"$fillAvgSql ORDER BY trade_id",
+  val specs: Seq[QuerySpec] = Seq(
+    // no global sort: per-order rows at ledger scale are the second-
+    // largest result set in the suite, the reference's writer keys by
+    // trade_id without ordering, and the driver compare sorts rows
+    // itself (same contract as market_scan)
+    QuerySpec("fill_avg", (s, d) => fillAverages(Tables(s, d, "lineitem")),
+      s"$fillAvgSql ORDER BY trade_id"),
 
-    "pair_rollup" ->
+    QuerySpec("pair_rollup", (s, d) =>
+      pairRollup(Tables(s, d, "lineitem")).orderBy("pair_id"),
       """SELECT l_suppkey % 7 + 1 AS pair_id,
         |count(*) AS total_trades,
         |CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
@@ -118,13 +111,15 @@ object Ledger {
         |CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
         |  * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) / count(*)
         |  AS avg_profit_per_trade
-        |FROM lineitem GROUP BY 1 ORDER BY pair_id""".stripMargin,
+        |FROM lineitem GROUP BY 1 ORDER BY pair_id""".stripMargin),
 
-    "fill_ticket_join" ->
+    QuerySpec("fill_ticket_join", (s, d) =>
+      fillTicketJoin(Tables(s, d, "lineitem"), Tables(s, d, "orders"))
+        .orderBy("trade_id"),
       s"""SELECT f.trade_id, o.o_totalprice, f.executed_quantity,
          |f.avg_fill_price, f.status
          |FROM ($fillAvgSql) f
          |JOIN orders o ON f.trade_id = o.o_orderkey
          |WHERE o.o_orderstatus = 'O'
-         |ORDER BY f.trade_id""".stripMargin)
+         |ORDER BY f.trade_id""".stripMargin))
 }

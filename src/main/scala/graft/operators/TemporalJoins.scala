@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.{QueryModule, QuerySpec}
 import graft.sources.Tables
 
 /** Temporal join operators the reference's point-in-time analytics imply
@@ -32,9 +33,7 @@ import graft.sources.Tables
   *    nested-loop inequality join. Each point belongs to exactly one
   *    bucket, so no post-join dedup is needed.
   */
-object TemporalJoins {
-  type Q = (SparkSession, String) => DataFrame
-
+object TemporalJoins extends QueryModule {
   /** For each left row, attach the payload of the latest right row with
     * the same `keys` and `right.tsCol <= left.tsCol` (inclusive, like
     * DuckDB `ASOF JOIN ... ON l.ts >= r.ts`). Unmatched left rows keep
@@ -170,16 +169,10 @@ object TemporalJoins {
       .orderBy("event_id")
   }
 
-  val queries: Map[String, Q] = Map(
-    "asof_join" -> ((s, d) => asofQuery(Tables.events(s, d))),
-    "asof_join_fresh" -> ((s, d) =>
-      asofQuery(Tables.events(s, d), toleranceUs = Some(60000000L))),
-    "range_join_bucketed" -> ((s, d) => rangeQuery(Tables.events(s, d))))
-
-  val oracle: Map[String, String] = Map(
-    // DuckDB's native ASOF JOIN is a genuinely independent implementation
-    // of the same semantics (merge-join inside the engine).
-    "asof_join" ->
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("asof_join", (s, d) => asofQuery(Tables.events(s, d)),
+      // DuckDB's native ASOF JOIN is a genuinely independent implementation
+      // of the same semantics (merge-join inside the engine).
       """WITH p AS (
         |  SELECT event_id, user_id, epoch_us(ts) AS ts_us,
         |         value AS purchase_value
@@ -192,9 +185,10 @@ object TemporalJoins {
         |       v.ts_us AS view_ts_us, v.view_value
         |FROM p ASOF LEFT JOIN v
         |  ON p.user_id = v.user_id AND p.ts_us >= v.ts_us
-        |ORDER BY p.event_id""".stripMargin,
+        |ORDER BY p.event_id""".stripMargin),
 
-    "asof_join_fresh" ->
+    QuerySpec("asof_join_fresh", (s, d) =>
+      asofQuery(Tables.events(s, d), toleranceUs = Some(60000000L)),
       """WITH p AS (
         |  SELECT event_id, user_id, epoch_us(ts) AS ts_us,
         |         value AS purchase_value
@@ -210,9 +204,9 @@ object TemporalJoins {
         |    THEN v.view_value END AS view_value
         |FROM p ASOF LEFT JOIN v
         |  ON p.user_id = v.user_id AND p.ts_us >= v.ts_us
-        |ORDER BY p.event_id""".stripMargin,
+        |ORDER BY p.event_id""".stripMargin),
 
-    "range_join_bucketed" ->
+    QuerySpec("range_join_bucketed", (s, d) => rangeQuery(Tables.events(s, d)),
       """WITH r AS (
         |  SELECT event_id, user_id, epoch_us(ts) AS start_us
         |  FROM events WHERE event_type = 'error'),
@@ -223,5 +217,5 @@ object TemporalJoins {
         |  ON e.user_id = r.user_id
         |  AND e.pt_us > r.start_us AND e.pt_us <= r.start_us + 300000000
         |GROUP BY 1, 2, 3
-        |ORDER BY r.event_id""".stripMargin)
+        |ORDER BY r.event_id""".stripMargin))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.{QueryModule, QuerySpec}
 import graft.sinks.BucketedStore
 import graft.sources.Tables
 
@@ -20,9 +21,7 @@ import graft.sources.Tables
   * summed as DECIMAL (exact, order-independent) with one final double
   * cast — never a raw double sum.
   */
-object PlanQueries {
-  type Q = (SparkSession, String) => DataFrame
-
+object PlanQueries extends QueryModule {
   private def sumQty(c: org.apache.spark.sql.Column) =
     sum(c.cast(DecimalType(18, 2))).cast("double")
 
@@ -75,20 +74,16 @@ object PlanQueries {
       .orderBy("o_orderstatus")
   }
 
-  val queries: Map[String, Q] = Map(
-    "salted_join" -> ((s, d) => saltedRollup(s, d)),
-    "bucketed_join" -> ((s, d) => bucketedRollup(s, d)))
-
-  val oracle: Map[String, String] = Map(
-    "salted_join" ->
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("salted_join", (s, d) => saltedRollup(s, d),
       """SELECT o_orderpriority, count(*) AS n_items,
         |CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
 
-    "bucketed_join" ->
+    QuerySpec("bucketed_join", (s, d) => bucketedRollup(s, d),
       """SELECT o_orderstatus, count(*) AS n_items,
         |CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)
+        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin))
 }

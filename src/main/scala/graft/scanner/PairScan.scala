@@ -3,6 +3,7 @@ package graft.scanner
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.{QueryModule, QuerySpec}
 import graft.functions.Books
 import graft.sources.Snapshots
 import graft.sources.Snapshots.{sql => S}
@@ -22,7 +23,7 @@ import graft.sources.Snapshots.{sql => S}
   * shuffle), and everything downstream is per-row arithmetic in one
   * codegen stage. No driver-side loops, no cartesian products.
   */
-object PairScan {
+object PairScan extends QueryModule {
 
   /** Opportunity frame: one row per active pair whose best side clears
     * `minProfitThreshold` (ref default 0.02,
@@ -100,18 +101,13 @@ object PairScan {
       .orderBy("id")
   }
 
-  type Q = (SparkSession, String) => DataFrame
-
   // Fixture staleness: the events fixture has ~minutes between snapshots
   // per series, so the query uses a 1-day window (the 60 s production value
   // is a parameter, semantics identical).
   private val fixtureStalenessSec = 86400L
 
-  val queries: Map[String, Q] = Map(
-    "pair_scan" -> ((s, d) => scan(s, d, fixtureStalenessSec)))
-
-  val oracle: Map[String, String] = Map(
-    "pair_scan" ->
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("pair_scan", (s, d) => scan(s, d, fixtureStalenessSec),
       s"""WITH k AS (
          |  SELECT ${S.market} AS ticker, epoch_us(ts) AS k_ts_us,
          |    CAST(${S.p} AS DOUBLE)/100 AS k_yes_bid,
@@ -144,5 +140,5 @@ object PairScan {
          |  greatest(m_yes, m_no) AS profit_margin,
          |  greatest(m_yes, m_no) * 10000.0 AS margin_bps
          |FROM j WHERE greatest(m_yes, m_no) >= 0.02
-         |ORDER BY id""".stripMargin)
+         |ORDER BY id""".stripMargin))
 }

@@ -1,8 +1,9 @@
 package graft.schema
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.{QueryModule, QuerySpec}
 import graft.sources.Tables
 
 /** Oracle-checked exercise of the exact-precision schema module: derive a
@@ -16,9 +17,7 @@ import graft.sources.Tables
   * Spark to DECIMAL(25,6)); the single cast to DOUBLE happens once at the
   * end, mirrored verbatim in the oracle.
   */
-object SchemaQueries {
-  type Q = (SparkSession, String) => DataFrame
-
+object SchemaQueries extends QueryModule {
   /** Deterministic orders→tickets mapping (same modular-arithmetic style as
     * the ledger fixtures). Status maps the fixture's order lifecycle onto
     * the reference's TradeStatus enum; venue/side/type cycle through their
@@ -62,13 +61,10 @@ object SchemaQueries {
           .as("avg_cost"),
         sum(col("expected_profit_bps")).cast("double").as("bps_sum"))
 
-  val queries: Map[String, Q] = Map(
-    "ticket_rollup" -> ((s, d) =>
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("ticket_rollup", (s, d) =>
       ticketRollup(deriveTickets(Tables(s, d, "orders")))
-        .orderBy("venue", "status")))
-
-  val oracle: Map[String, String] = Map(
-    "ticket_rollup" ->
+        .orderBy("venue", "status"),
       """SELECT
         |CASE WHEN o_orderkey % 2 = 0 THEN 'kalshi' ELSE 'polymarket' END
         |  AS venue,
@@ -84,5 +80,5 @@ object SchemaQueries {
         |  AS avg_cost,
         |CAST(sum(CAST(o_orderkey % 500 AS DECIMAL(10,2))) AS DOUBLE)
         |  AS bps_sum
-        |FROM orders GROUP BY 1, 2 ORDER BY venue, status""".stripMargin)
+        |FROM orders GROUP BY 1, 2 ORDER BY venue, status""".stripMargin))
 }

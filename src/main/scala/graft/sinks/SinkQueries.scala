@@ -3,6 +3,7 @@ package graft.sinks
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.{QueryModule, QuerySpec}
 import graft.sources.{Staging, Tables}
 
 /** Oracle-checkable batch twins of the sink/streaming operators (S7, ST8,
@@ -18,9 +19,7 @@ import graft.sources.{Staging, Tables}
   * `ingest_stamps` is F18's stage-boundary timing enrichment
   * (`virginia/coordinator.py:271,311-315`) with a pinned batch clock.
   */
-object SinkQueries {
-  type Q = (SparkSession, String) => DataFrame
-
+object SinkQueries extends QueryModule {
   /** Deterministic ticket append-log derived from events: one v1 "pending"
     * row per sampled event, one v2 "filled" update for every second one. */
   private def baseLog(spark: SparkSession, dir: String): DataFrame =
@@ -89,12 +88,6 @@ object SinkQueries {
       keyCols = Seq("trade_id"), versionCol = "version")
       .orderBy("trade_id")
 
-  val queries: Map[String, Q] = Map(
-    "merge_view" -> mergeViewQuery,
-    "merge_view_asof" -> ((s, d) => mergeViewAsOf(s, d, asOf = 1L)),
-    "sink_roundtrip" -> sinkRoundTrip,
-    "ingest_stamps" -> ingestStamps)
-
   private val mergedSql =
     """SELECT event_id AS trade_id,
       |CASE WHEN event_id % 40 = 0 THEN 'filled' ELSE 'pending' END AS status,
@@ -103,21 +96,21 @@ object SinkQueries {
       |FROM events WHERE event_id % 20 = 0
       |ORDER BY trade_id""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "merge_view" -> mergedSql,
-    // as-of version 1: the v2 updates vanish, originals reconstruct
-    "merge_view_asof" ->
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("merge_view", mergeViewQuery, mergedSql),
+    QuerySpec("merge_view_asof", (s, d) => mergeViewAsOf(s, d, asOf = 1L),
+      // as-of version 1: the v2 updates vanish, originals reconstruct
       """SELECT event_id AS trade_id, 'pending' AS status,
         |value AS price, CAST(1 AS BIGINT) AS version
         |FROM events WHERE event_id % 20 = 0
-        |ORDER BY trade_id""".stripMargin,
-    "sink_roundtrip" -> mergedSql,
-    "ingest_stamps" ->
+        |ORDER BY trade_id""".stripMargin),
+    QuerySpec("sink_roundtrip", sinkRoundTrip, mergedSql),
+    QuerySpec("ingest_stamps", ingestStamps,
       s"""SELECT event_id, epoch_us(ts) AS ts_us,
          |CAST($ReceivedNs AS BIGINT) AS virginia_received_ns,
          |CAST($ReceivedNs AS BIGINT) AS virginia_enriched_ns,
          |CAST(($ReceivedNs - epoch_us(ts) * 1000) // 1000 AS BIGINT)
          |  AS ingest_lag_us
          |FROM events WHERE event_id % 100 = 0
-         |ORDER BY event_id""".stripMargin)
+         |ORDER BY event_id""".stripMargin))
 }

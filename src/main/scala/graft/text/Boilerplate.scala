@@ -1,9 +1,10 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.{QueryModule, QuerySpec}
 import graft.sources.Tables
 import graft.text.TextOps.norm
 
@@ -20,9 +21,7 @@ import graft.text.TextOps.norm
   * the whole query is two exchanges (gram, then doc_id) regardless of
   * corpus size — never a broadcast of an unbounded frequent-gram set.
   */
-object Boilerplate {
-  type Q = (SparkSession, String) => DataFrame
-
+object Boilerplate extends QueryModule {
   private def grams(docs: DataFrame, n: Int): DataFrame =
     docs.select(col("doc_id"),
       explode(call_function("word_shingles", norm(col("text")), lit(n)))
@@ -70,14 +69,6 @@ object Boilerplate {
         col("n_matched").cast("double") / col("n_shingles").cast("double"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "boilerplate_ngrams" ->
-      ((s, d) => boilerplateNgrams(Tables(s, d, "documents"))),
-    "boilerplate_fraction" ->
-      ((s, d) => boilerplateFraction(Tables(s, d, "documents"))),
-    "contam_overlap" ->
-      ((s, d) => contamOverlap(Tables(s, d, "documents"))))
-
   private val N = "regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')"
 
   /** Distinct per-doc word 5-grams, mirroring `word_shingles(norm, 5)`
@@ -91,14 +82,16 @@ object Boilerplate {
        |  FROM (SELECT doc_id, string_split($N, ' ') AS l FROM documents)
        |  WHERE len(l) >= 5)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "boilerplate_ngrams" ->
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("boilerplate_ngrams", (s, d) =>
+      boilerplateNgrams(Tables(s, d, "documents")),
       s"""WITH $gramCte
          |SELECT gram, count(*) AS df FROM g
          |GROUP BY gram HAVING count(*) >= 3
-         |ORDER BY df DESC, gram LIMIT 100""".stripMargin,
+         |ORDER BY df DESC, gram LIMIT 100""".stripMargin),
 
-    "boilerplate_fraction" ->
+    QuerySpec("boilerplate_fraction", (s, d) =>
+      boilerplateFraction(Tables(s, d, "documents")),
       s"""WITH $gramCte,
          |f AS (SELECT doc_id, gram,
          |        count(*) OVER (PARTITION BY gram) AS df FROM g)
@@ -107,9 +100,10 @@ object Boilerplate {
          |    AS n_frequent,
          |  sum(CASE WHEN df >= 3 THEN 1 ELSE 0 END)::DOUBLE
          |    / count(*)::DOUBLE AS boilerplate_frac
-         |FROM f GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+         |FROM f GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
-    "contam_overlap" ->
+    QuerySpec("contam_overlap", (s, d) =>
+      contamOverlap(Tables(s, d, "documents")),
       s"""WITH $gramCte,
          |b AS (SELECT DISTINCT gram FROM g WHERE doc_id < 10)
          |SELECT g.doc_id, count(*) AS n_shingles,
@@ -119,5 +113,5 @@ object Boilerplate {
          |    / count(*)::DOUBLE AS contam_frac
          |FROM g LEFT JOIN b ON g.gram = b.gram
          |WHERE g.doc_id >= 10
-         |GROUP BY g.doc_id ORDER BY g.doc_id""".stripMargin)
+         |GROUP BY g.doc_id ORDER BY g.doc_id""".stripMargin))
 }

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.{QueryModule, QuerySpec}
 import graft.sources.{Staging, Tables}
 import graft.text.TextOps.norm
 
@@ -40,7 +41,7 @@ import graft.text.TextOps.norm
   * consecutive candidate positions (a fold and "merge iff an even
   * offset into its candidate run" are the same function).
   */
-object BpeMerges {
+object BpeMerges extends QueryModule {
 
   /** Fixture merge-round budget. Small by design (the verdict's "small
     * R"): each round is one dict pass + one broadcast, so R scales to
@@ -467,30 +468,24 @@ object BpeMerges {
        |  LEFT JOIN lvid v ON v.piece = substr(d.s, w.pos, m.adv[w.pos])
        |  WHERE w.pos <= len(m.adv) AND m.adv[w.pos] != -1)""".stripMargin
 
-  type Q = (SparkSession, String) => DataFrame
-
-  val queries: Map[String, Q] = Map(
+  val specs: Seq[QuerySpec] = Seq(
     // the learned merge table itself — the staged tokenizer artifact
-    "bpe_train_merges" -> ((s, d) =>
-      read(s, fixtureStore(s, d)).orderBy(col("rank"))),
-    // the token family against the LEARNED vocabulary: same trie
-    // kernel, same by-reference transport, pieces from merge training
-    "token_count_bpe_learned" -> ((s, d) =>
-      TextOps.tokenCountsBpe(Tables(s, d, "documents"), pieces(s, d))))
-
-  val oracle: Map[String, String] = Map(
-    "bpe_train_merges" ->
+    QuerySpec("bpe_train_merges", (s, d) =>
+      read(s, fixtureStore(s, d)).orderBy(col("rank")),
       s"""WITH ${mergeChainCtesSql()}
          |SELECT rank, lt AS left_piece, rt AS right_piece, piece,
          |  CAST(c AS BIGINT) AS n_pairs
          |FROM (${mergeUnion(DefaultRounds)})
-         |ORDER BY rank""".stripMargin,
+         |ORDER BY rank""".stripMargin),
 
-    "token_count_bpe_learned" ->
+    // the token family against the LEARNED vocabulary: same trie
+    // kernel, same by-reference transport, pieces from merge training
+    QuerySpec("token_count_bpe_learned", (s, d) =>
+      TextOps.tokenCountsBpe(Tables(s, d, "documents"), pieces(s, d)),
       s"""WITH RECURSIVE ${learnedWalkCtes(DefaultRounds)}
          |SELECT b.doc_id,
          |  CAST(len(string_split(d.s, ' ')) AS INTEGER) AS ws_tokens,
          |  CAST(b.nn AS INTEGER) AS bpe_tokens
          |FROM lbpe b JOIN lbd d ON d.doc_id = b.doc_id
-         |ORDER BY b.doc_id""".stripMargin)
+         |ORDER BY b.doc_id""".stripMargin))
 }

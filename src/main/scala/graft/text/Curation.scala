@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.{ColumnBridge => bridge}
 
+import graft.{QueryModule, QuerySpec}
 import graft.sources.Tables
 import graft.text.TextOps.norm
 
@@ -16,9 +17,7 @@ import graft.text.TextOps.norm
   * exploded shingles so the benchmark side stays broadcast-small and the
   * corpus side streams through one shuffle-free semi-join probe.
   */
-object Curation {
-  type Q = (SparkSession, String) => DataFrame
-
+object Curation extends QueryModule {
   /** Per-source sampling rates as md5-prefix thresholds: a doc is kept iff
     * the first two hex chars of md5("s:"+doc_id) sort below the stratum's
     * threshold ("40" ≈ 25%, "80" ≈ 50%). */
@@ -1520,191 +1519,6 @@ object Curation {
       docs.filter(col("doc_id") % 10 >= 8), eager = false)._1
   }
 
-  val queries: Map[String, Q] = Map(
-    // the composed lane's batch twin: store judge -> intra-batch keeper
-    // gate -> per-source quality floor -> chunking, one batch
-    "curation_lane_twin" -> ((s, d) => curationLaneTwin(s, d)),
-    // the GRID-gated production lane (r17): stage 0 = the complete
-    // decontam grid (exact windows AND fuzzy whole-doc sigs AND
-    // semantic embedding cosine) over the full twin's corpus floors
-    "curation_lane_grid_twin" -> ((s, d) => curationLaneGridTwin(s, d)),
-    // the corpus-floor twin: the quality stage gates against the
-    // persisted QualityStore's per-source floors (stable across
-    // batches) instead of the batch-relative percentile
-    "curation_lane_corpus_twin" -> ((s, d) => curationLaneCorpusTwin(s, d)),
-    // the FULL pipeline: decontam gate -> judge -> keeper gate ->
-    // floor -> chunking -> flagged-window excision, one batch
-    "curation_lane_decontam_twin" -> ((s, d) =>
-      curationLaneDecontamTwin(s, d)),
-    // the LM-gated twin: the heuristic floor AND the persisted
-    // reference model's per-source log-prob floor as conjuncts —
-    // scoring that finally gates (the CCNet composition)
-    "curation_lane_lm_twin" -> ((s, d) => curationLaneLmTwin(s, d)),
-    // the corpus-floor LM mode certified: the LM conjunct gates
-    // against the staged admission ledger's stable floors
-    "curation_lane_lm_corpus_twin" -> ((s, d) =>
-      curationLaneLmCorpusTwin(s, d)),
-    // the FULLY-composed production lane: decontam -> store judge ->
-    // corpus heuristic floor AND corpus LM floor (checked against the
-    // model fingerprint) -> chunk -> excision, ONE certified plan
-    "curation_lane_full_twin" -> ((s, d) => curationLaneFullTwin(s, d)),
-    // epoch-seeded deterministic shuffle: per-epoch md5 tag, balanced
-    // shard, dense within-shard position — no global ordering anywhere
-    "epoch_shuffle" -> ((s, d) =>
-      epochShuffle(Tables(s, d, "documents"), epoch = 1, nShards = 8)),
-    // the per-shard manifest a dataloader reads before touching data
-    "shard_manifest" -> ((s, d) =>
-      shardManifest(Tables(s, d, "documents"), epoch = 1, nShards = 8,
-        t => size(split(norm(t), " ")))),
-    // the shard writer's content: epoch shuffle composed with greedy
-    // per-shard packing, budgets in SUBWORD units via the by-reference
-    // kernel — (doc, shard, pos, priced tokens, packed sequence)
-    "epoch_pack" -> ((s, d) =>
-      epochPack(Tables(s, d, "documents"), epoch = 1, nShards = 8,
-        budget = 512,
-        t => TextOps.bpeCountCol(t, BpeVocab.pieces(s, d)))),
-    // the training artifact COMPLETED: packed sequences carrying the
-    // actual token ids (the renumbered store's learned-vocab id
-    // stream), one row per token with its (shard, seq, offset)
-    // address — what a trainer reads, not just where it would read
-    // version 2 is the renumbered fixture store's post-sweep id space
-    // (TokenIdStore.fixtureRenumberedStore seeds v1, swaps to the
-    // learned vocab as v2, sweeps); the in-plan guard certifies every
-    // exported row carries it — a mid-renumber store would fail loudly
-    "seq_export" -> ((s, d) =>
-      exportSequences(
-        TokenIdStore.read(s, TokenIdStore.fixtureRenumberedStore(s, d)),
-        epoch = 1, nShards = 8, budget = 512, version = 2)),
-    // the END-TO-END training-data export (r16 — the composition a
-    // training job actually calls, until now certified piecewise):
-    // curated store (quality floors over the persisted QualityStore)
-    // -> TokenIdStore numericalization under the LEARNED merge vocab
-    // (version 2, the renumbered-fixture convention) -> epoch pack ->
-    // packed-sequence export, version guard in-plan
-    "export_pipeline" -> ((s, d) => {
-      val store = Tables(s, d, "documents")
-        .filter(col("doc_id") % 10 < 8)
-      val kept = qualityGateAgainstFloors(store,
-        QualityStore.floors(
-          QualityStore.read(s, QualityStore.fixtureCorpusStore(s, d)),
-          0.1)).select(col("doc_id"))
-      exportSequences(
-        TokenIdStore.numericalize(store.join(kept, "doc_id"),
-          BpeMerges.mergeVocab(s, d), 2),
-        epoch = 1, nShards = 8, budget = 512, version = 2)
-    }),
-    // the STAGED steady-state export (r17): the same composed
-    // training-data export served from the PERSISTED id store instead
-    // of re-numericalizing in-plan — curated keep-set (the identical
-    // floor derivation) restricting a TokenIdStore scan (version
-    // guard in-plan), then the identical pack/export arithmetic. The
-    // oracle TEXT is shared with export_pipeline verbatim (the
-    // lm_score_ref / lm_score_ref_bucketed discipline): result
-    // equality is the proof the staged read path serves what the
-    // composition certifies, and the e ≈ 0.06 staged scaling replaces
-    // export_pipeline's deliberate e ≈ 1.05 re-derivation
-    "export_pipeline_staged" -> ((s, d) => {
-      val store = Tables(s, d, "documents")
-        .filter(col("doc_id") % 10 < 8)
-      val kept = qualityGateAgainstFloors(store,
-        QualityStore.floors(
-          QualityStore.read(s, QualityStore.fixtureCorpusStore(s, d)),
-          0.1)).select(col("doc_id"))
-      exportSequences(
-        TokenIdStore.read(s, TokenIdStore.fixtureRenumberedStore(s, d))
-          .join(kept, "doc_id"),
-        epoch = 1, nShards = 8, budget = 512, version = 2)
-    }),
-    // packing telemetry over the epoch_pack fixture: per shard, how
-    // full the budget-512 sequences actually are and how many overflow
-    "pack_efficiency" -> ((s, d) =>
-      packEfficiency(
-        epochPack(Tables(s, d, "documents"), epoch = 1, nShards = 8,
-          budget = 512,
-          t => TextOps.bpeCountCol(t, BpeVocab.pieces(s, d))),
-        budget = 512)),
-    // corpus-relative quality floor (drop the worst decile)
-    "quality_quantile_gate" -> ((s, d) =>
-      qualityQuantileGate(Tables(s, d, "documents"))),
-    // the percentile -> percentile_approx parity probe: both floors
-    // from the same QualityStore scan, divergence + admission flips
-    // over the full corpus (the % 10 split's sources are disjoint by
-    // fixture construction, so the learned-floor population IS the
-    // probe population; never-seen sources drop out of the inner join
-    // exactly as they bypass the gate)
-    "quality_floor_approx" -> ((s, d) => QualityStore.floorParityProbe(
-      QualityStore.read(s, QualityStore.fixtureCorpusStore(s, d)),
-      Tables(s, d, "documents"))),
-    // the floor-REFRESH lifecycle: every ledgered admission re-judged
-    // against the CURRENT per-source floors (which moved as the store
-    // accumulated past each doc's admission-time state)
-    "quality_retro" -> ((s, d) => QualityStore.retroSweep(
-      QualityStore.read(s, QualityStore.fixtureCorpusStore(s, d)))._2
-      .orderBy(col("doc_id"))),
-    // the delete-set applied: the curated chunks of the store epoch
-    // with every evicted doc's windows dropped (one broadcast anti-join)
-    "quality_retro_refresh" -> ((s, d) => QualityStore.applyRetro(
-      chunkDocs(Tables(s, d, "documents")
-        .filter(col("doc_id") % 10 < 8), window = 32, stride = 24),
-      QualityStore.retroSweep(
-        QualityStore.read(s, QualityStore.fixtureCorpusStore(s, d)))._1)
-      .orderBy(col("doc_id"), col("chunk_idx"))),
-    // one floor per source (drop each source's worst decile)
-    "quality_gate_by_source" -> ((s, d) =>
-      qualityQuantileGateBySource(Tables(s, d, "documents"))),
-    // the language-fair variant: floors computed over the doc's own
-    // detected-language quality score
-    "quality_gate_by_source_lang" -> ((s, d) =>
-      qualityQuantileGateBySource(Tables(s, d, "documents"),
-        langAware = true)),
-    // context-window chunking — 32-token windows at stride 24 so the
-    // fixture corpus (docs up to ~100 tokens) exercises the
-    // multi-chunk arithmetic, not just the one-chunk short-doc path
-    "chunk_docs" -> ((s, d) =>
-      chunkDocs(Tables(s, d, "documents"), window = 32, stride = 24)),
-    // subword-budgeted chunking: greedy whitespace-token fill measured
-    // in BPE units (48-unit windows on the staged corpus-trained vocab)
-    "chunk_docs_bpe" -> ((s, d) =>
-      chunkDocsBpeBudget(Tables(s, d, "documents"), BpeVocab.pieces(s, d))),
-    // OVERLAPPING subword-budgeted windows: stride measured in BPE
-    // units too (48-unit windows, 32-unit stride -> ~16 shared units)
-    "chunk_docs_bpe_overlap" -> ((s, d) =>
-      chunkDocsBpeOverlap(Tables(s, d, "documents"), BpeVocab.pieces(s, d))),
-    "curation_pipeline" -> ((s, d) =>
-      curationPipeline(Tables(s, d, "documents"))),
-    "sample_stratified" -> ((s, d) =>
-      sampleStratified(Tables(s, d, "documents"))),
-    "mix_balanced" -> ((s, d) => mixBalanced(Tables(s, d, "documents"))),
-    "mix_weighted" -> ((s, d) => mixWeighted(Tables(s, d, "documents"))),
-    "mix_weighted_table" -> ((s, d) => {
-      val docs = Tables(s, d, "documents")
-      mixWeightedTable(docs, fixtureWeights(docs))
-    }),
-    // "assemble 20k subword tokens, sources in w proportion" — the
-    // token-budgeted mixture on the staged-vocab kernel counter
-    "mix_token_budget" -> ((s, d) => {
-      val docs = Tables(s, d, "documents")
-      mixTokenBudget(docs, fixtureWeights(docs), 20000L,
-        t => TextOps.bpeCountCol(t, BpeVocab.pieces(s, d)))
-    }),
-    // the same 20k-token assembly balanced across SEMANTIC clusters:
-    // per-doc cells from the persisted ANN index, uniform per-cell
-    // budgets through the identical two-phase prefix-sum machinery
-    "mix_cluster_budget" -> ((s, d) => mixClusterBudget(
-      Tables(s, d, "documents"),
-      graft.ann.IvfStore.fixtureIndex(s, d)
-        .select(col("vec_id").as("doc_id"), col("cell")),
-      20000L, t => TextOps.bpeCountCol(t, BpeVocab.pieces(s, d)))),
-    "decontaminate" -> ((s, d) => decontaminate(Tables(s, d, "documents"))),
-    "pii_scrub" -> ((s, d) => piiScrub(Tables(s, d, "documents"))),
-    "token_pack" -> ((s, d) => packTokens(Tables(s, d, "documents"))),
-    // the same two-phase distributed prefix sum, budgeted in SUBWORD
-    // units (greedy longest-match kernel over the staged vocab) — what
-    // a context window actually holds
-    "token_pack_bpe" -> ((s, d) => packTokens(Tables(s, d, "documents"),
-      counter = t =>
-        TextOps.bpeCountCol(t, BpeVocab.pieces(s, d)).cast("long"))))
-
   private val N = "regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')"
 
   /** Integer value of `tag`'s leading 4 hex chars (= Spark's
@@ -2262,11 +2076,49 @@ object Curation {
        |FROM seps e JOIN klids l ON l.doc_id = e.doc_id
        |ORDER BY shard, seq_id, seq_pos""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    // per-epoch md5 tag; shard = leading 16 tag bits mod nShards
-    // (nibble arithmetic — DuckDB has no hex->int cast); position =
-    // dense rank within the shard by (tag, doc_id)
-    "epoch_shuffle" ->
+  val specs: Seq[QuerySpec] = Seq(
+    // the composed lane's batch twin: store judge -> intra-batch keeper
+    // gate -> per-source quality floor -> chunking, one batch
+    QuerySpec("curation_lane_twin", (s, d) => curationLaneTwin(s, d),
+      curationLaneTwinOracle),
+    // the GRID-gated production lane (r17): stage 0 = the complete
+    // decontam grid (exact windows AND fuzzy whole-doc sigs AND
+    // semantic embedding cosine) over the full twin's corpus floors
+    QuerySpec("curation_lane_grid_twin", (s, d) => curationLaneGridTwin(s, d),
+      curationLaneGridTwinOracle),
+    // the corpus-floor twin: the quality stage gates against the
+    // persisted QualityStore's per-source floors (stable across
+    // batches) instead of the batch-relative percentile
+    QuerySpec("curation_lane_corpus_twin", (s, d) =>
+      curationLaneCorpusTwin(s, d),
+      curationLaneCorpusTwinOracle),
+    // the FULL pipeline: decontam gate -> judge -> keeper gate ->
+    // floor -> chunking -> flagged-window excision, one batch
+    QuerySpec("curation_lane_decontam_twin", (s, d) =>
+      curationLaneDecontamTwin(s, d),
+      curationLaneDecontamTwinOracle),
+    // the LM-gated twin: the heuristic floor AND the persisted
+    // reference model's per-source log-prob floor as conjuncts —
+    // scoring that finally gates (the CCNet composition)
+    QuerySpec("curation_lane_lm_twin", (s, d) => curationLaneLmTwin(s, d),
+      curationLaneLmTwinOracle),
+    // the corpus-floor LM mode certified: the LM conjunct gates
+    // against the staged admission ledger's stable floors
+    QuerySpec("curation_lane_lm_corpus_twin", (s, d) =>
+      curationLaneLmCorpusTwin(s, d),
+      curationLaneLmCorpusTwinOracle),
+    // the FULLY-composed production lane: decontam -> store judge ->
+    // corpus heuristic floor AND corpus LM floor (checked against the
+    // model fingerprint) -> chunk -> excision, ONE certified plan
+    QuerySpec("curation_lane_full_twin", (s, d) => curationLaneFullTwin(s, d),
+      curationLaneFullTwinOracle),
+    // epoch-seeded deterministic shuffle: per-epoch md5 tag, balanced
+    // shard, dense within-shard position — no global ordering anywhere
+    QuerySpec("epoch_shuffle", (s, d) =>
+      epochShuffle(Tables(s, d, "documents"), epoch = 1, nShards = 8),
+      // per-epoch md5 tag; shard = leading 16 tag bits mod nShards
+      // (nibble arithmetic — DuckDB has no hex->int cast); position =
+      // dense rank within the shard by (tag, doc_id)
       s"""WITH t AS (
          |  SELECT doc_id, md5('e1:' || CAST(doc_id AS VARCHAR)) AS tag
          |  FROM documents)
@@ -2275,8 +2127,11 @@ object Curation {
          |  CAST(row_number() OVER (
          |    PARTITION BY ($nib16) % 8 ORDER BY tag, doc_id)
          |    AS INTEGER) AS pos
-         |FROM t ORDER BY shard, pos""".stripMargin,
-    "shard_manifest" ->
+         |FROM t ORDER BY shard, pos""".stripMargin),
+    // the per-shard manifest a dataloader reads before touching data
+    QuerySpec("shard_manifest", (s, d) =>
+      shardManifest(Tables(s, d, "documents"), epoch = 1, nShards = 8,
+        t => size(split(norm(t), " "))),
       s"""WITH t AS (
          |  SELECT doc_id, md5('e1:' || CAST(doc_id AS VARCHAR)) AS tag,
          |    CAST(len(string_split($N, ' ')) AS BIGINT) AS n_tokens
@@ -2284,14 +2139,20 @@ object Curation {
          |SELECT CAST(($nib16) % 8 AS INTEGER) AS shard,
          |  count(*) AS n_docs,
          |  CAST(sum(n_tokens) AS BIGINT) AS n_tokens
-         |FROM t GROUP BY 1 ORDER BY shard""".stripMargin,
-    // the shard writer's content replayed: BPE walk prices each doc,
-    // nibble-arithmetic shard + per-shard md5-order position, then the
-    // per-shard running sum's DIV-budget sequence id (window sum is
-    // HUGEINT in DuckDB — cast before the subtraction). `text IS NOT
-    // NULL` mirrors the engine's null-priced drop: a null-text doc
-    // must neither pack nor consume a position
-    "epoch_pack" ->
+         |FROM t GROUP BY 1 ORDER BY shard""".stripMargin),
+    // the shard writer's content: epoch shuffle composed with greedy
+    // per-shard packing, budgets in SUBWORD units via the by-reference
+    // kernel — (doc, shard, pos, priced tokens, packed sequence)
+    QuerySpec("epoch_pack", (s, d) =>
+      epochPack(Tables(s, d, "documents"), epoch = 1, nShards = 8,
+        budget = 512,
+        t => TextOps.bpeCountCol(t, BpeVocab.pieces(s, d))),
+      // the shard writer's content replayed: BPE walk prices each doc,
+      // nibble-arithmetic shard + per-shard md5-order position, then the
+      // per-shard running sum's DIV-budget sequence id (window sum is
+      // HUGEINT in DuckDB — cast before the subtraction). `text IS NOT
+      // NULL` mirrors the engine's null-priced drop: a null-text doc
+      // must neither pack nor consume a position
       s"""WITH RECURSIVE ${TextOps.bpeWalkCtes},
          |ept AS (
          |  SELECT b.doc_id,
@@ -2310,13 +2171,24 @@ object Curation {
          |  (CAST(sum(n_tokens) OVER (
          |     PARTITION BY shard ORDER BY pos) AS BIGINT) - n_tokens)
          |    // 512 AS seq_id
-         |FROM epa ORDER BY shard, pos""".stripMargin,
+         |FROM epa ORDER BY shard, pos""".stripMargin),
 
-    // the sequence export replayed: the learned-id walk (lids) priced
-    // by its OWN per-doc row counts, the identical tag/shard/pos/cum
-    // arithmetic, then ids fanned back per doc with the within-sequence
-    // offset
-    "seq_export" ->
+    // the training artifact COMPLETED: packed sequences carrying the
+    // actual token ids (the renumbered store's learned-vocab id
+    // stream), one row per token with its (shard, seq, offset)
+    // address — what a trainer reads, not just where it would read
+    // version 2 is the renumbered fixture store's post-sweep id space
+    // (TokenIdStore.fixtureRenumberedStore seeds v1, swaps to the
+    // learned vocab as v2, sweeps); the in-plan guard certifies every
+    // exported row carries it — a mid-renumber store would fail loudly
+    QuerySpec("seq_export", (s, d) =>
+      exportSequences(
+        TokenIdStore.read(s, TokenIdStore.fixtureRenumberedStore(s, d)),
+        epoch = 1, nShards = 8, budget = 512, version = 2),
+      // the sequence export replayed: the learned-id walk (lids) priced
+      // by its OWN per-doc row counts, the identical tag/shard/pos/cum
+      // arithmetic, then ids fanned back per doc with the within-sequence
+      // offset
       s"""WITH RECURSIVE ${BpeMerges.learnedIdsCtes},
          |scnt AS (
          |  SELECT doc_id, count(*) AS n_tokens FROM lids GROUP BY doc_id),
@@ -2343,24 +2215,71 @@ object Curation {
          |    - 1 AS INTEGER) AS seq_pos,
          |  l.doc_id, l.token_idx, l.piece_id
          |FROM seps e JOIN lids l ON l.doc_id = e.doc_id
-         |ORDER BY shard, seq_id, seq_pos""".stripMargin,
+         |ORDER BY shard, seq_id, seq_pos""".stripMargin),
 
-    // the composed export: the seq_export machinery restricted to the
-    // CURATED population (per-source quality floors over the store
-    // split, re-derived from text — the staged-store precedent), the
-    // same learned-id stream, the same pack arithmetic
-    "export_pipeline" -> exportPipelineOracle,
-    // ONE oracle text for both export paths — the staged twin changes
-    // WHERE the ids come from (the persisted renumbered store instead
-    // of an in-plan numericalization), never what they are; sharing
-    // the string is the proof (the lm_score_ref_bucketed discipline)
-    "export_pipeline_staged" -> exportPipelineOracle,
+    // the END-TO-END training-data export (r16 — the composition a
+    // training job actually calls, until now certified piecewise):
+    // curated store (quality floors over the persisted QualityStore)
+    // -> TokenIdStore numericalization under the LEARNED merge vocab
+    // (version 2, the renumbered-fixture convention) -> epoch pack ->
+    // packed-sequence export, version guard in-plan
+    QuerySpec("export_pipeline", (s, d) => {
+      val store = Tables(s, d, "documents")
+        .filter(col("doc_id") % 10 < 8)
+      val kept = qualityGateAgainstFloors(store,
+        QualityStore.floors(
+          QualityStore.read(s, QualityStore.fixtureCorpusStore(s, d)),
+          0.1)).select(col("doc_id"))
+      exportSequences(
+        TokenIdStore.numericalize(store.join(kept, "doc_id"),
+          BpeMerges.mergeVocab(s, d), 2),
+        epoch = 1, nShards = 8, budget = 512, version = 2)
+    },
+      // the composed export: the seq_export machinery restricted to the
+      // CURATED population (per-source quality floors over the store
+      // split, re-derived from text — the staged-store precedent), the
+      // same learned-id stream, the same pack arithmetic
+      exportPipelineOracle),
+    // the STAGED steady-state export (r17): the same composed
+    // training-data export served from the PERSISTED id store instead
+    // of re-numericalizing in-plan — curated keep-set (the identical
+    // floor derivation) restricting a TokenIdStore scan (version
+    // guard in-plan), then the identical pack/export arithmetic. The
+    // oracle TEXT is shared with export_pipeline verbatim (the
+    // lm_score_ref / lm_score_ref_bucketed discipline): result
+    // equality is the proof the staged read path serves what the
+    // composition certifies, and the e ≈ 0.06 staged scaling replaces
+    // export_pipeline's deliberate e ≈ 1.05 re-derivation
+    QuerySpec("export_pipeline_staged", (s, d) => {
+      val store = Tables(s, d, "documents")
+        .filter(col("doc_id") % 10 < 8)
+      val kept = qualityGateAgainstFloors(store,
+        QualityStore.floors(
+          QualityStore.read(s, QualityStore.fixtureCorpusStore(s, d)),
+          0.1)).select(col("doc_id"))
+      exportSequences(
+        TokenIdStore.read(s, TokenIdStore.fixtureRenumberedStore(s, d))
+          .join(kept, "doc_id"),
+        epoch = 1, nShards = 8, budget = 512, version = 2)
+    },
+      // ONE oracle text for both export paths — the staged twin changes
+      // WHERE the ids come from (the persisted renumbered store instead
+      // of an in-plan numericalization), never what they are; sharing
+      // the string is the proof (the lm_score_ref_bucketed discipline)
+      exportPipelineOracle),
 
-    // pack-efficiency telemetry replayed: the epoch_pack chain rolled
-    // up per sequence, then per shard (fill terms are multiples of
-    // 1/512 — exact doubles, so the avg is order-independent and
-    // engine-identical)
-    "pack_efficiency" ->
+    // packing telemetry over the epoch_pack fixture: per shard, how
+    // full the budget-512 sequences actually are and how many overflow
+    QuerySpec("pack_efficiency", (s, d) =>
+      packEfficiency(
+        epochPack(Tables(s, d, "documents"), epoch = 1, nShards = 8,
+          budget = 512,
+          t => TextOps.bpeCountCol(t, BpeVocab.pieces(s, d))),
+        budget = 512),
+      // pack-efficiency telemetry replayed: the epoch_pack chain rolled
+      // up per sequence, then per shard (fill terms are multiples of
+      // 1/512 — exact doubles, so the avg is order-independent and
+      // engine-identical)
       s"""WITH RECURSIVE ${TextOps.bpeWalkCtes},
          |ept AS (
          |  SELECT b.doc_id,
@@ -2390,23 +2309,34 @@ object Curation {
          |  avg(CAST(seq_tokens AS DOUBLE) / 512.0) AS avg_fill,
          |  CAST(sum(CASE WHEN seq_tokens > 512 THEN 1 ELSE 0 END)
          |    AS BIGINT) AS n_overflow
-         |FROM stot GROUP BY shard ORDER BY shard""".stripMargin,
+         |FROM stot GROUP BY shard ORDER BY shard""".stripMargin),
 
-    "curation_lane_twin" -> curationLaneTwinOracle,
-    "curation_lane_corpus_twin" -> curationLaneCorpusTwinOracle,
-    "curation_lane_decontam_twin" -> curationLaneDecontamTwinOracle,
-    "curation_lane_full_twin" -> curationLaneFullTwinOracle,
-    "curation_lane_grid_twin" -> curationLaneGridTwinOracle,
-    "curation_lane_lm_twin" -> curationLaneLmTwinOracle,
-    "curation_lane_lm_corpus_twin" -> curationLaneLmCorpusTwinOracle,
-    "chunk_docs_bpe" -> chunkDocsBpeOracle,
-    "chunk_docs_bpe_overlap" -> chunkDocsBpeOverlapOracle,
-    // the sketch floor's determinism contract: in the exact regime the
-    // GK summary answers the order statistic at 1-based rank
-    // ceil(p * n) — replayed with the IDENTICAL IEEE product (0.1 * n
-    // rounds the same way in both engines), the exact side via
-    // quantile_cont as everywhere else
-    "quality_floor_approx" ->
+    // corpus-relative quality floor (drop the worst decile)
+    QuerySpec("quality_quantile_gate", (s, d) =>
+      qualityQuantileGate(Tables(s, d, "documents")),
+      // corpus-relative floor: quantile_cont shares Spark exact
+      // percentile's linear interpolation, so the one-row threshold and
+      // the boundary membership replay bit-exactly
+      s"""WITH q AS (
+         |  SELECT doc_id, ${TextOps.qualityExprSql} AS quality
+         |  FROM documents),
+         |t AS (SELECT quantile_cont(quality, 0.1) AS q_thr FROM q)
+         |SELECT doc_id, quality, q_thr FROM q, t
+         |WHERE quality >= q_thr ORDER BY doc_id""".stripMargin),
+    // the percentile -> percentile_approx parity probe: both floors
+    // from the same QualityStore scan, divergence + admission flips
+    // over the full corpus (the % 10 split's sources are disjoint by
+    // fixture construction, so the learned-floor population IS the
+    // probe population; never-seen sources drop out of the inner join
+    // exactly as they bypass the gate)
+    QuerySpec("quality_floor_approx", (s, d) => QualityStore.floorParityProbe(
+      QualityStore.read(s, QualityStore.fixtureCorpusStore(s, d)),
+      Tables(s, d, "documents")),
+      // the sketch floor's determinism contract: in the exact regime the
+      // GK summary answers the order statistic at 1-based rank
+      // ceil(p * n) — replayed with the IDENTICAL IEEE product (0.1 * n
+      // rounds the same way in both engines), the exact side via
+      // quantile_cont as everywhere else
       s"""WITH qs AS (
          |  SELECT source, ${TextOps.qualityExprSql} AS quality
          |  FROM documents WHERE doc_id % 10 < 8),
@@ -2433,13 +2363,18 @@ object Curation {
          |JOIN ex ON ex.source = b.source
          |JOIN ap ON ap.source = b.source
          |GROUP BY b.source, ex.q_thr_exact, ap.q_thr_approx
-         |ORDER BY b.source""".stripMargin,
+         |ORDER BY b.source""".stripMargin),
 
-    // the floor-refresh sweep: the ledger's qualities re-derived from
-    // text (the staged-store precedent), CURRENT per-source floors via
-    // quantile_cont (bit-exact vs Spark percentile), every ledgered
-    // admission's keep verdict
-    "quality_retro" ->
+    // the floor-REFRESH lifecycle: every ledgered admission re-judged
+    // against the CURRENT per-source floors (which moved as the store
+    // accumulated past each doc's admission-time state)
+    QuerySpec("quality_retro", (s, d) => QualityStore.retroSweep(
+      QualityStore.read(s, QualityStore.fixtureCorpusStore(s, d)))._2
+      .orderBy(col("doc_id")),
+      // the floor-refresh sweep: the ledger's qualities re-derived from
+      // text (the staged-store precedent), CURRENT per-source floors via
+      // quantile_cont (bit-exact vs Spark percentile), every ledgered
+      // admission's keep verdict
       s"""WITH qs AS MATERIALIZED (
          |  SELECT doc_id, source, ${TextOps.qualityExprSql} AS quality
          |  FROM documents WHERE doc_id % 10 < 8),
@@ -2448,12 +2383,19 @@ object Curation {
          |SELECT q.doc_id, q.source, q.quality, f.q_thr,
          |  q.quality >= f.q_thr AS keep
          |FROM qs q JOIN fl f USING (source)
-         |ORDER BY q.doc_id""".stripMargin,
+         |ORDER BY q.doc_id""".stripMargin),
 
-    // the delete-set applied to the curated chunks of the store epoch:
-    // shared chunk CTEs over the ledger population, evicted docs'
-    // windows anti-joined away
-    "quality_retro_refresh" ->
+    // the delete-set applied: the curated chunks of the store epoch
+    // with every evicted doc's windows dropped (one broadcast anti-join)
+    QuerySpec("quality_retro_refresh", (s, d) => QualityStore.applyRetro(
+      chunkDocs(Tables(s, d, "documents")
+        .filter(col("doc_id") % 10 < 8), window = 32, stride = 24),
+      QualityStore.retroSweep(
+        QualityStore.read(s, QualityStore.fixtureCorpusStore(s, d)))._1)
+      .orderBy(col("doc_id"), col("chunk_idx")),
+      // the delete-set applied to the curated chunks of the store epoch:
+      // shared chunk CTEs over the ledger population, evicted docs'
+      // windows anti-joined away
       s"""WITH qsrc AS MATERIALIZED (
          |  SELECT doc_id, text FROM documents WHERE doc_id % 10 < 8),
          |${chunkCtesSql(32, 24, "qsrc", "qch")},
@@ -2467,41 +2409,12 @@ object Curation {
          |  WHERE q.quality >= f.q_thr)
          |SELECT c.doc_id, c.chunk_idx, c.chunk_text, c.n_chunk_tokens
          |FROM qch c JOIN keepd k ON k.doc_id = c.doc_id
-         |ORDER BY c.doc_id, c.chunk_idx""".stripMargin,
+         |ORDER BY c.doc_id, c.chunk_idx""".stripMargin),
 
-    // corpus-relative floor: quantile_cont shares Spark exact
-    // percentile's linear interpolation, so the one-row threshold and
-    // the boundary membership replay bit-exactly
-    "quality_quantile_gate" ->
-      s"""WITH q AS (
-         |  SELECT doc_id, ${TextOps.qualityExprSql} AS quality
-         |  FROM documents),
-         |t AS (SELECT quantile_cont(quality, 0.1) AS q_thr FROM q)
-         |SELECT doc_id, quality, q_thr FROM q, t
-         |WHERE quality >= q_thr ORDER BY doc_id""".stripMargin,
-
-    // sliding-window chunking replayed exactly: same integer chunk
-    // count, 1-based inclusive list slice == Spark's (start, length)
-    // slice with end-clamping in both engines
-    "chunk_docs" ->
-      s"""WITH ${chunkCtesSql(32, 24)}
-         |SELECT doc_id, chunk_idx, chunk_text, n_chunk_tokens FROM chunks
-         |ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    // per-source floors over the LANGUAGE-AWARE score: same plan, the
-    // quality expression swaps to the detected-language composite
-    "quality_gate_by_source_lang" ->
-      s"""WITH q AS (
-         |  SELECT doc_id, source, ${TextOps.qualityLangExprSql} AS quality
-         |  FROM documents),
-         |t AS (SELECT source, quantile_cont(quality, 0.1) AS q_thr
-         |      FROM q GROUP BY source)
-         |SELECT q.doc_id, q.source, q.quality, t.q_thr
-         |FROM q JOIN t USING (source)
-         |WHERE q.quality >= t.q_thr ORDER BY q.doc_id""".stripMargin,
-
-    // per-source floors: quantile_cont per source group, broadcast join
-    "quality_gate_by_source" ->
+    // one floor per source (drop each source's worst decile)
+    QuerySpec("quality_gate_by_source", (s, d) =>
+      qualityQuantileGateBySource(Tables(s, d, "documents")),
+      // per-source floors: quantile_cont per source group, broadcast join
       s"""WITH q AS (
          |  SELECT doc_id, source, ${TextOps.qualityExprSql} AS quality
          |  FROM documents),
@@ -2509,11 +2422,78 @@ object Curation {
          |      FROM q GROUP BY source)
          |SELECT q.doc_id, q.source, q.quality, t.q_thr
          |FROM q JOIN t USING (source)
-         |WHERE q.quality >= t.q_thr ORDER BY q.doc_id""".stripMargin,
+         |WHERE q.quality >= t.q_thr ORDER BY q.doc_id""".stripMargin),
 
-    // equal-weight mixture: every source downsampled to the smallest
-    // source's count, selection by md5("m:"+doc_id) order
-    "mix_balanced" ->
+    // the language-fair variant: floors computed over the doc's own
+    // detected-language quality score
+    QuerySpec("quality_gate_by_source_lang", (s, d) =>
+      qualityQuantileGateBySource(Tables(s, d, "documents"),
+        langAware = true),
+      // per-source floors over the LANGUAGE-AWARE score: same plan, the
+      // quality expression swaps to the detected-language composite
+      s"""WITH q AS (
+         |  SELECT doc_id, source, ${TextOps.qualityLangExprSql} AS quality
+         |  FROM documents),
+         |t AS (SELECT source, quantile_cont(quality, 0.1) AS q_thr
+         |      FROM q GROUP BY source)
+         |SELECT q.doc_id, q.source, q.quality, t.q_thr
+         |FROM q JOIN t USING (source)
+         |WHERE q.quality >= t.q_thr ORDER BY q.doc_id""".stripMargin),
+
+    // context-window chunking — 32-token windows at stride 24 so the
+    // fixture corpus (docs up to ~100 tokens) exercises the
+    // multi-chunk arithmetic, not just the one-chunk short-doc path
+    QuerySpec("chunk_docs", (s, d) =>
+      chunkDocs(Tables(s, d, "documents"), window = 32, stride = 24),
+      // sliding-window chunking replayed exactly: same integer chunk
+      // count, 1-based inclusive list slice == Spark's (start, length)
+      // slice with end-clamping in both engines
+      s"""WITH ${chunkCtesSql(32, 24)}
+         |SELECT doc_id, chunk_idx, chunk_text, n_chunk_tokens FROM chunks
+         |ORDER BY doc_id, chunk_idx""".stripMargin),
+    // subword-budgeted chunking: greedy whitespace-token fill measured
+    // in BPE units (48-unit windows on the staged corpus-trained vocab)
+    QuerySpec("chunk_docs_bpe", (s, d) =>
+      chunkDocsBpeBudget(Tables(s, d, "documents"), BpeVocab.pieces(s, d)),
+      chunkDocsBpeOracle),
+    // OVERLAPPING subword-budgeted windows: stride measured in BPE
+    // units too (48-unit windows, 32-unit stride -> ~16 shared units)
+    QuerySpec("chunk_docs_bpe_overlap", (s, d) =>
+      chunkDocsBpeOverlap(Tables(s, d, "documents"), BpeVocab.pieces(s, d)),
+      chunkDocsBpeOverlapOracle),
+
+    QuerySpec("curation_pipeline", (s, d) =>
+      curationPipeline(Tables(s, d, "documents")),
+      s"""WITH d AS (
+         |  SELECT doc_id, md5($N) AS content_hash,
+         |    ${TextOps.qualityExprSql} AS quality,
+         |    CAST(len(string_split($N, ' ')) AS BIGINT) AS n_tokens
+         |  FROM documents),
+         |k AS (SELECT content_hash, min(doc_id) AS doc_id FROM d
+         |      GROUP BY content_hash),
+         |g AS (
+         |  SELECT d.* FROM d JOIN k USING (content_hash, doc_id)
+         |  WHERE d.quality >= 0.4)
+         |SELECT doc_id, content_hash, quality, n_tokens,
+         |  CAST((sum(n_tokens) OVER (ORDER BY doc_id) - n_tokens) // 512
+         |    AS BIGINT) AS pack_id
+         |FROM g ORDER BY doc_id""".stripMargin),
+
+    QuerySpec("sample_stratified", (s, d) =>
+      sampleStratified(Tables(s, d, "documents")),
+      """SELECT doc_id, source,
+        |substr(md5('s:' || CAST(doc_id AS VARCHAR)), 1, 2) AS sample_tag,
+        |CASE WHEN CAST(regexp_extract(source, '(\d+)', 1) AS BIGINT) % 2 = 0
+        |  THEN '80' ELSE '40' END AS stratum_threshold
+        |FROM documents
+        |WHERE substr(md5('s:' || CAST(doc_id AS VARCHAR)), 1, 2)
+        |  < CASE WHEN CAST(regexp_extract(source, '(\d+)', 1) AS BIGINT) % 2 = 0
+        |      THEN '80' ELSE '40' END
+        |ORDER BY doc_id""".stripMargin),
+
+    QuerySpec("mix_balanced", (s, d) => mixBalanced(Tables(s, d, "documents")),
+      // equal-weight mixture: every source downsampled to the smallest
+      // source's count, selection by md5("m:"+doc_id) order
       """WITH take AS (
         |  SELECT min(n) AS take FROM (
         |    SELECT count(*) AS n FROM documents GROUP BY source)),
@@ -2525,11 +2505,11 @@ object Curation {
         |  FROM documents)
         |SELECT doc_id, source, CAST(rank AS INTEGER) AS rank
         |FROM ranked, take WHERE rank <= take
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
 
-    // weighted mixture: λ argmin by ratio (ties harmless — equal ratios
-    // give identical takes), takes as exact integer floor(ln·w/lw)
-    "mix_weighted" ->
+    QuerySpec("mix_weighted", (s, d) => mixWeighted(Tables(s, d, "documents")),
+      // weighted mixture: λ argmin by ratio (ties harmless — equal ratios
+      // give identical takes), takes as exact integer floor(ln·w/lw)
       """WITH c AS (
         |  SELECT source, count(*) AS n,
         |    CASE WHEN CAST(regexp_extract(source, '(\d+)', 1) AS BIGINT)
@@ -2549,11 +2529,14 @@ object Curation {
         |SELECT r.doc_id, r.source, CAST(r.rank AS INTEGER) AS rank
         |FROM ranked r JOIN takes t ON r.source = t.source
         |WHERE r.rank <= t.take
-        |ORDER BY r.doc_id""".stripMargin,
+        |ORDER BY r.doc_id""".stripMargin),
 
-    // the weight-TABLE form: weights joined from a (source, w) dimension
-    // (fixture: source number MOD 3 + 1), λ/takes arithmetic unchanged
-    "mix_weighted_table" ->
+    QuerySpec("mix_weighted_table", (s, d) => {
+      val docs = Tables(s, d, "documents")
+      mixWeightedTable(docs, fixtureWeights(docs))
+    },
+      // the weight-TABLE form: weights joined from a (source, w) dimension
+      // (fixture: source number MOD 3 + 1), λ/takes arithmetic unchanged
       """WITH wt AS (
         |  SELECT DISTINCT source,
         |    CAST(regexp_extract(source, '(\d+)', 1) AS BIGINT) % 3 + 1 AS w
@@ -2576,61 +2559,18 @@ object Curation {
         |SELECT r.doc_id, r.source, CAST(r.rank AS INTEGER) AS rank
         |FROM ranked r JOIN takes t ON r.source = t.source
         |WHERE r.rank <= t.take
-        |ORDER BY r.doc_id""".stripMargin,
+        |ORDER BY r.doc_id""".stripMargin),
 
-    "curation_pipeline" ->
-      s"""WITH d AS (
-         |  SELECT doc_id, md5($N) AS content_hash,
-         |    ${TextOps.qualityExprSql} AS quality,
-         |    CAST(len(string_split($N, ' ')) AS BIGINT) AS n_tokens
-         |  FROM documents),
-         |k AS (SELECT content_hash, min(doc_id) AS doc_id FROM d
-         |      GROUP BY content_hash),
-         |g AS (
-         |  SELECT d.* FROM d JOIN k USING (content_hash, doc_id)
-         |  WHERE d.quality >= 0.4)
-         |SELECT doc_id, content_hash, quality, n_tokens,
-         |  CAST((sum(n_tokens) OVER (ORDER BY doc_id) - n_tokens) // 512
-         |    AS BIGINT) AS pack_id
-         |FROM g ORDER BY doc_id""".stripMargin,
-
-    "sample_stratified" ->
-      """SELECT doc_id, source,
-        |substr(md5('s:' || CAST(doc_id AS VARCHAR)), 1, 2) AS sample_tag,
-        |CASE WHEN CAST(regexp_extract(source, '(\d+)', 1) AS BIGINT) % 2 = 0
-        |  THEN '80' ELSE '40' END AS stratum_threshold
-        |FROM documents
-        |WHERE substr(md5('s:' || CAST(doc_id AS VARCHAR)), 1, 2)
-        |  < CASE WHEN CAST(regexp_extract(source, '(\d+)', 1) AS BIGINT) % 2 = 0
-        |      THEN '80' ELSE '40' END
-        |ORDER BY doc_id""".stripMargin,
-
-    "decontaminate" ->
-      s"""WITH sh AS (
-         |  SELECT doc_id, unnest(list_transform(
-         |    generate_series(1, len(l) - 4),
-         |    i -> array_to_string(l[i:i+4], ' '))) AS sh
-         |  FROM (SELECT doc_id, string_split($N, ' ') AS l FROM documents)
-         |  WHERE len(l) >= 5)
-         |SELECT DISTINCT d.doc_id, true AS contaminated
-         |FROM sh d
-         |JOIN (SELECT DISTINCT sh FROM sh WHERE doc_id < 10) b ON d.sh = b.sh
-         |WHERE d.doc_id >= 10
-         |ORDER BY d.doc_id""".stripMargin,
-
-    // the subword-budgeted pack: the bpe walk CTEs produce each doc's
-    // greedy-match count, then the same naive single-window replay
-    "token_pack_bpe" ->
-      s"""WITH RECURSIVE ${TextOps.bpeWalkCtes}
-         |SELECT doc_id, CAST(n AS BIGINT) AS n_tokens,
-         |  CAST((sum(n) OVER (ORDER BY doc_id) - n) // 512 AS BIGINT)
-         |    AS pack_id
-         |FROM bpe ORDER BY doc_id""".stripMargin,
-
-    // token-budgeted mixture: per-source budgets as exact integer
-    // shares of the 20k total, subword costs from the shared walk
-    // CTEs, greedy fill in md5 order under a hard per-source cap
-    "mix_token_budget" ->
+    // "assemble 20k subword tokens, sources in w proportion" — the
+    // token-budgeted mixture on the staged-vocab kernel counter
+    QuerySpec("mix_token_budget", (s, d) => {
+      val docs = Tables(s, d, "documents")
+      mixTokenBudget(docs, fixtureWeights(docs), 20000L,
+        t => TextOps.bpeCountCol(t, BpeVocab.pieces(s, d)))
+    },
+      // token-budgeted mixture: per-source budgets as exact integer
+      // shares of the 20k total, subword costs from the shared walk
+      // CTEs, greedy fill in md5 order under a hard per-source cap
       s"""WITH RECURSIVE ${TextOps.bpeWalkCtes},
          |wt AS (
          |  SELECT DISTINCT source,
@@ -2655,13 +2595,20 @@ object Curation {
          |  b.token_budget
          |FROM cm JOIN bud b USING (source)
          |WHERE cm.cum_tokens <= b.token_budget
-         |ORDER BY cm.source, cm.cum_tokens""".stripMargin,
+         |ORDER BY cm.source, cm.cum_tokens""".stripMargin),
 
-    // cluster-balanced assembly: the ann_ivf_trained Lloyd replay
-    // assigns every embedding its trained cell, docs relabel to
-    // 'cell<k>', then the identical greedy md5-order fill under the
-    // uniform per-cell share of the 20k total
-    "mix_cluster_budget" ->
+    // the same 20k-token assembly balanced across SEMANTIC clusters:
+    // per-doc cells from the persisted ANN index, uniform per-cell
+    // budgets through the identical two-phase prefix-sum machinery
+    QuerySpec("mix_cluster_budget", (s, d) => mixClusterBudget(
+      Tables(s, d, "documents"),
+      graft.ann.IvfStore.fixtureIndex(s, d)
+        .select(col("vec_id").as("doc_id"), col("cell")),
+      20000L, t => TextOps.bpeCountCol(t, BpeVocab.pieces(s, d))),
+      // cluster-balanced assembly: the ann_ivf_trained Lloyd replay
+      // assigns every embedding its trained cell, docs relabel to
+      // 'cell<k>', then the identical greedy md5-order fill under the
+      // uniform per-cell share of the 20k total
       s"""WITH RECURSIVE ${TextOps.bpeWalkCtes},
          |${graft.ann.Similarity.qCte},
          |${graft.ann.Similarity.seedCte},
@@ -2692,18 +2639,23 @@ object Curation {
          |  b.token_budget
          |FROM cm JOIN bud b USING (source)
          |WHERE cm.cum_tokens <= b.token_budget
-         |ORDER BY cm.doc_id""".stripMargin,
+         |ORDER BY cm.doc_id""".stripMargin),
 
-    // the oracle is the NAIVE single-window form — the point of the
-    // comparison: the two-phase distributed prefix sum must equal it
-    "token_pack" ->
-      s"""SELECT doc_id,
-         |CAST(len(string_split($N, ' ')) AS BIGINT) AS n_tokens,
-         |CAST((sum(len(string_split($N, ' '))) OVER (ORDER BY doc_id)
-         |  - len(string_split($N, ' '))) // 512 AS BIGINT) AS pack_id
-         |FROM documents ORDER BY doc_id""".stripMargin,
+    QuerySpec("decontaminate", (s, d) =>
+      decontaminate(Tables(s, d, "documents")),
+      s"""WITH sh AS (
+         |  SELECT doc_id, unnest(list_transform(
+         |    generate_series(1, len(l) - 4),
+         |    i -> array_to_string(l[i:i+4], ' '))) AS sh
+         |  FROM (SELECT doc_id, string_split($N, ' ') AS l FROM documents)
+         |  WHERE len(l) >= 5)
+         |SELECT DISTINCT d.doc_id, true AS contaminated
+         |FROM sh d
+         |JOIN (SELECT DISTINCT sh FROM sh WHERE doc_id < 10) b ON d.sh = b.sh
+         |WHERE d.doc_id >= 10
+         |ORDER BY d.doc_id""".stripMargin),
 
-    "pii_scrub" ->
+    QuerySpec("pii_scrub", (s, d) => piiScrub(Tables(s, d, "documents")),
       s"""SELECT doc_id,
          |CAST(len(regexp_extract_all($N, '[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}'))
          |  AS INTEGER) AS emails,
@@ -2714,5 +2666,28 @@ object Curation {
          |  '[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}', '<EMAIL>', 'g'),
          |  '\\+?[0-9][0-9()\\- ]{7,}[0-9]', '<PHONE>', 'g'),
          |  '\\b[a-z]\\b', '<I>', 'g')) AS scrubbed_hash
-         |FROM documents ORDER BY doc_id""".stripMargin)
+         |FROM documents ORDER BY doc_id""".stripMargin),
+
+    QuerySpec("token_pack", (s, d) => packTokens(Tables(s, d, "documents")),
+      // the oracle is the NAIVE single-window form — the point of the
+      // comparison: the two-phase distributed prefix sum must equal it
+      s"""SELECT doc_id,
+         |CAST(len(string_split($N, ' ')) AS BIGINT) AS n_tokens,
+         |CAST((sum(len(string_split($N, ' '))) OVER (ORDER BY doc_id)
+         |  - len(string_split($N, ' '))) // 512 AS BIGINT) AS pack_id
+         |FROM documents ORDER BY doc_id""".stripMargin),
+
+    // the same two-phase distributed prefix sum, budgeted in SUBWORD
+    // units (greedy longest-match kernel over the staged vocab) — what
+    // a context window actually holds
+    QuerySpec("token_pack_bpe", (s, d) => packTokens(Tables(s, d, "documents"),
+      counter = t =>
+        TextOps.bpeCountCol(t, BpeVocab.pieces(s, d)).cast("long")),
+      // the subword-budgeted pack: the bpe walk CTEs produce each doc's
+      // greedy-match count, then the same naive single-window replay
+      s"""WITH RECURSIVE ${TextOps.bpeWalkCtes}
+         |SELECT doc_id, CAST(n AS BIGINT) AS n_tokens,
+         |  CAST((sum(n) OVER (ORDER BY doc_id) - n) // 512 AS BIGINT)
+         |    AS pack_id
+         |FROM bpe ORDER BY doc_id""".stripMargin))
 }

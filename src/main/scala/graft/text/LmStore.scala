@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.{QueryModule, QuerySpec}
 import graft.sources.{Staging, Tables}
 import graft.text.TextOps.norm
 
@@ -44,7 +45,7 @@ import graft.text.TextOps.norm
   * an atomic store swap ([[graft.sinks.StoreMaintenance.rewrite]] per
   * subdir), the vocabulary loop's protocol.
   */
-object LmStore {
+object LmStore extends QueryModule {
 
   /** Reference unigram counts — one hash aggregate. Empty tokens are
     * excluded (norm('') → '' splits to ['']): an empty/whitespace-only
@@ -622,87 +623,6 @@ object LmStore {
         .write.parquet(tmp)
     }
 
-  type Q = (SparkSession, String) => DataFrame
-
-  val queries: Map[String, Q] = Map(
-    // the production quality-filter shape: arriving docs (the % 10
-    // incremental convention's 20%) scored against the PERSISTED
-    // reference model trained on the other 80% — reference counts
-    // read from the store, never re-derived from the batch
-    "lm_score_ref" -> ((s, d) => {
-      val root = fixtureModel(s, d)
-      scoreAgainst(
-        Tables(s, d, "documents").filter(col("doc_id") % 10 >= 8),
-        readUni(s, root), readBi(s, root)).orderBy(col("doc_id"))
-    }),
-    // the retrain signal: the same scoring pass aggregated per source
-    "lm_drift_by_source" -> ((s, d) => {
-      val root = fixtureModel(s, d)
-      driftBySource(
-        Tables(s, d, "documents").filter(col("doc_id") % 10 >= 8),
-        readUni(s, root), readBi(s, root))
-    }),
-    // the score AS A FILTER — the CCNet shape the store was built for:
-    // arriving docs kept iff their avg log-prob under the PERSISTED
-    // reference clears their source's 10th-percentile floor
-    "quality_gate_lm" -> ((s, d) => {
-      val root = fixtureModel(s, d)
-      lmGateBySource(
-        Tables(s, d, "documents").filter(col("doc_id") % 10 >= 8),
-        readUni(s, root), readBi(s, root)).orderBy(col("doc_id"))
-    }),
-    // the model joins forced to shuffled-hash — the 100 TB
-    // degradation path certified on THIS plan (result-equal to
-    // lm_score_ref: the two rows share one oracle text)
-    "lm_score_ref_bucketed" -> ((s, d) => {
-      val root = fixtureModel(s, d)
-      scoreAgainst(
-        Tables(s, d, "documents").filter(col("doc_id") % 10 >= 8),
-        readUni(s, root), readBi(s, root), broadcastModel = false)
-        .orderBy(col("doc_id"))
-    }),
-    // the CORPUS-floor form: arrivals gated against floors from the
-    // persisted admission LEDGER (stable across batches — the
-    // QualityStore corpus-floor argument on the trained model) instead
-    // of their own batch's percentile; floors derive through the
-    // CHECKED form (every ledger row's model_fp asserted against the
-    // store's current fingerprint in-plan)
-    "quality_gate_lm_corpus" -> ((s, d) => {
-      val root = fixtureModel(s, d)
-      lmGateAgainstFloors(
-        Tables(s, d, "documents").filter(col("doc_id") % 10 >= 8),
-        readUni(s, root), readBi(s, root),
-        floorsChecked(s.read.parquet(fixtureLedger(s, d)),
-          readFingerprint(s, root))).orderBy(col("doc_id"))
-    }),
-    // the gate's reverse direction: every ledgered admission (fixture:
-    // the arriving split, admitted as-is) re-scored against the
-    // CURRENT stored model and re-judged at the current floors
-    "lm_retro" -> ((s, d) => {
-      val root = fixtureModel(s, d)
-      val docs = Tables(s, d, "documents")
-      retroSweep(docs,
-        docs.filter(col("doc_id") % 10 >= 8)
-          .select(col("doc_id"), col("source")),
-        readUni(s, root), readBi(s, root))._2.orderBy(col("doc_id"))
-    }),
-    // the sweep's delete-set APPLIED — the pure frame form of
-    // refreshCurated's rewrite (the quality_retro_refresh shape on the
-    // trained model): the curated chunks of the ledgered epoch with
-    // every below-current-floor doc's windows anti-joined away
-    "lm_retro_refresh" -> ((s, d) => {
-      val root = fixtureModel(s, d)
-      val docs = Tables(s, d, "documents")
-      QualityStore.applyRetro(
-        Curation.chunkDocs(docs.filter(col("doc_id") % 10 >= 8),
-          window = 32, stride = 24),
-        retroSweep(docs,
-          docs.filter(col("doc_id") % 10 >= 8)
-            .select(col("doc_id"), col("source")),
-          readUni(s, root), readBi(s, root))._1)
-        .orderBy(col("doc_id"), col("chunk_idx"))
-    }))
-
   private[text] val N = "regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')"
 
   /** The scoring replay as CTEs ending in `lsc(doc_id, n_bigrams,
@@ -793,73 +713,30 @@ object LmStore {
        |  FROM rlsc r JOIN documents d ON d.doc_id = r.doc_id
        |  GROUP BY d.source)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    // arrivals' scores (lsrc) gated against the LEDGER-derived
-    // per-source floors (lthrc) — same NULL-keep arms
-    "quality_gate_lm_corpus" ->
-      s"""WITH $gateCtes,
-         |$corpusFloorCtes
-         |SELECT l.doc_id, l.source, l.avg_logprob, t.lm_thr
-         |FROM lsrc l LEFT JOIN lthrc t USING (source)
-         |WHERE l.avg_logprob IS NULL OR t.lm_thr IS NULL
-         |   OR l.avg_logprob >= t.lm_thr
-         |ORDER BY l.doc_id""".stripMargin,
-
-    // the add-one scoring + per-source quantile floor replayed end to
-    // end; the NULL-keep arms (zero-bigram doc, floor-less source)
-    // spelled out exactly as the engine filters them
-    "quality_gate_lm" ->
-      s"""WITH $gateCtes
-         |SELECT l.doc_id, l.source, l.avg_logprob, t.lm_thr
-         |FROM lsrc l LEFT JOIN lthr t USING (source)
-         |WHERE l.avg_logprob IS NULL OR t.lm_thr IS NULL
-         |   OR l.avg_logprob >= t.lm_thr
-         |ORDER BY l.doc_id""".stripMargin,
-
-    // the sweep's verdicts: every ledgered admission (the batch split)
-    // with its re-score, current floor, and keep flag
-    "lm_retro" ->
-      s"""WITH $gateCtes
-         |SELECT l.doc_id, l.source, l.avg_logprob, t.lm_thr,
-         |  (l.avg_logprob IS NULL OR t.lm_thr IS NULL
-         |    OR l.avg_logprob >= t.lm_thr) AS keep
-         |FROM lsrc l LEFT JOIN lthr t USING (source)
-         |ORDER BY l.doc_id""".stripMargin,
-
-    // the delete-set applied to the ledgered epoch's curated chunks:
-    // keep-set from the gate replay, chunk CTEs over the same split,
-    // evicted docs' windows dropped
-    "lm_retro_refresh" ->
-      s"""WITH $gateCtes,
-         |l8 AS (SELECT doc_id, text FROM documents
-         |       WHERE doc_id % 10 >= 8),
-         |${Curation.chunkCtesSql(32, 24, "l8", "lch")},
-         |keepd AS (
-         |  SELECT l.doc_id FROM lsrc l LEFT JOIN lthr t USING (source)
-         |  WHERE l.avg_logprob IS NULL OR t.lm_thr IS NULL
-         |     OR l.avg_logprob >= t.lm_thr)
-         |SELECT c.doc_id, c.chunk_idx, c.chunk_text, c.n_chunk_tokens
-         |FROM lch c JOIN keepd k ON k.doc_id = c.doc_id
-         |ORDER BY c.doc_id, c.chunk_idx""".stripMargin,
-
-    "lm_score_ref" ->
+  val specs: Seq[QuerySpec] = Seq(
+    // the production quality-filter shape: arriving docs (the % 10
+    // incremental convention's 20%) scored against the PERSISTED
+    // reference model trained on the other 80% — reference counts
+    // read from the store, never re-derived from the batch
+    QuerySpec("lm_score_ref", (s, d) => {
+      val root = fixtureModel(s, d)
+      scoreAgainst(
+        Tables(s, d, "documents").filter(col("doc_id") % 10 >= 8),
+        readUni(s, root), readBi(s, root)).orderBy(col("doc_id"))
+    },
       s"""WITH $scoreCtes
          |SELECT doc_id, n_bigrams, n_oov_bigrams, logprob_e6,
          |  CAST(logprob_e6 AS DOUBLE) / (1000000.0 * n_bigrams)
          |    AS avg_logprob
-         |FROM lsc ORDER BY doc_id""".stripMargin,
+         |FROM lsc ORDER BY doc_id""".stripMargin),
 
-    // ONE oracle text for both join strategies — the bucketed twin
-    // changes the physical plan, never the semantics; sharing the
-    // string is the proof (the domain_classify_bucketed discipline)
-    "lm_score_ref_bucketed" ->
-      s"""WITH $scoreCtes
-         |SELECT doc_id, n_bigrams, n_oov_bigrams, logprob_e6,
-         |  CAST(logprob_e6 AS DOUBLE) / (1000000.0 * n_bigrams)
-         |    AS avg_logprob
-         |FROM lsc ORDER BY doc_id""".stripMargin,
-
-    "lm_drift_by_source" ->
+    // the retrain signal: the same scoring pass aggregated per source
+    QuerySpec("lm_drift_by_source", (s, d) => {
+      val root = fixtureModel(s, d)
+      driftBySource(
+        Tables(s, d, "documents").filter(col("doc_id") % 10 >= 8),
+        readUni(s, root), readBi(s, root))
+    },
       s"""WITH $scoreCtes
          |SELECT d.source, count(*) AS n_docs,
          |  CAST(sum(s.n_bigrams) AS BIGINT) AS n_bigrams,
@@ -871,5 +748,117 @@ object LmStore {
          |  CAST(sum(s.n_oov_bigrams) AS DOUBLE)
          |    / CAST(sum(s.n_bigrams) AS DOUBLE) AS oov_bigram_rate
          |FROM lsc s JOIN documents d ON d.doc_id = s.doc_id
-         |GROUP BY d.source ORDER BY d.source""".stripMargin)
+         |GROUP BY d.source ORDER BY d.source""".stripMargin),
+
+    // the score AS A FILTER — the CCNet shape the store was built for:
+    // arriving docs kept iff their avg log-prob under the PERSISTED
+    // reference clears their source's 10th-percentile floor
+    QuerySpec("quality_gate_lm", (s, d) => {
+      val root = fixtureModel(s, d)
+      lmGateBySource(
+        Tables(s, d, "documents").filter(col("doc_id") % 10 >= 8),
+        readUni(s, root), readBi(s, root)).orderBy(col("doc_id"))
+    },
+      // the add-one scoring + per-source quantile floor replayed end to
+      // end; the NULL-keep arms (zero-bigram doc, floor-less source)
+      // spelled out exactly as the engine filters them
+      s"""WITH $gateCtes
+         |SELECT l.doc_id, l.source, l.avg_logprob, t.lm_thr
+         |FROM lsrc l LEFT JOIN lthr t USING (source)
+         |WHERE l.avg_logprob IS NULL OR t.lm_thr IS NULL
+         |   OR l.avg_logprob >= t.lm_thr
+         |ORDER BY l.doc_id""".stripMargin),
+
+    // the model joins forced to shuffled-hash — the 100 TB
+    // degradation path certified on THIS plan (result-equal to
+    // lm_score_ref: the two rows share one oracle text)
+    QuerySpec("lm_score_ref_bucketed", (s, d) => {
+      val root = fixtureModel(s, d)
+      scoreAgainst(
+        Tables(s, d, "documents").filter(col("doc_id") % 10 >= 8),
+        readUni(s, root), readBi(s, root), broadcastModel = false)
+        .orderBy(col("doc_id"))
+    },
+      // ONE oracle text for both join strategies — the bucketed twin
+      // changes the physical plan, never the semantics; sharing the
+      // string is the proof (the domain_classify_bucketed discipline)
+      s"""WITH $scoreCtes
+         |SELECT doc_id, n_bigrams, n_oov_bigrams, logprob_e6,
+         |  CAST(logprob_e6 AS DOUBLE) / (1000000.0 * n_bigrams)
+         |    AS avg_logprob
+         |FROM lsc ORDER BY doc_id""".stripMargin),
+    // the CORPUS-floor form: arrivals gated against floors from the
+    // persisted admission LEDGER (stable across batches — the
+    // QualityStore corpus-floor argument on the trained model) instead
+    // of their own batch's percentile; floors derive through the
+    // CHECKED form (every ledger row's model_fp asserted against the
+    // store's current fingerprint in-plan)
+    QuerySpec("quality_gate_lm_corpus", (s, d) => {
+      val root = fixtureModel(s, d)
+      lmGateAgainstFloors(
+        Tables(s, d, "documents").filter(col("doc_id") % 10 >= 8),
+        readUni(s, root), readBi(s, root),
+        floorsChecked(s.read.parquet(fixtureLedger(s, d)),
+          readFingerprint(s, root))).orderBy(col("doc_id"))
+    },
+      // arrivals' scores (lsrc) gated against the LEDGER-derived
+      // per-source floors (lthrc) — same NULL-keep arms
+      s"""WITH $gateCtes,
+         |$corpusFloorCtes
+         |SELECT l.doc_id, l.source, l.avg_logprob, t.lm_thr
+         |FROM lsrc l LEFT JOIN lthrc t USING (source)
+         |WHERE l.avg_logprob IS NULL OR t.lm_thr IS NULL
+         |   OR l.avg_logprob >= t.lm_thr
+         |ORDER BY l.doc_id""".stripMargin),
+
+    // the gate's reverse direction: every ledgered admission (fixture:
+    // the arriving split, admitted as-is) re-scored against the
+    // CURRENT stored model and re-judged at the current floors
+    QuerySpec("lm_retro", (s, d) => {
+      val root = fixtureModel(s, d)
+      val docs = Tables(s, d, "documents")
+      retroSweep(docs,
+        docs.filter(col("doc_id") % 10 >= 8)
+          .select(col("doc_id"), col("source")),
+        readUni(s, root), readBi(s, root))._2.orderBy(col("doc_id"))
+    },
+      // the sweep's verdicts: every ledgered admission (the batch split)
+      // with its re-score, current floor, and keep flag
+      s"""WITH $gateCtes
+         |SELECT l.doc_id, l.source, l.avg_logprob, t.lm_thr,
+         |  (l.avg_logprob IS NULL OR t.lm_thr IS NULL
+         |    OR l.avg_logprob >= t.lm_thr) AS keep
+         |FROM lsrc l LEFT JOIN lthr t USING (source)
+         |ORDER BY l.doc_id""".stripMargin),
+
+    // the sweep's delete-set APPLIED — the pure frame form of
+    // refreshCurated's rewrite (the quality_retro_refresh shape on the
+    // trained model): the curated chunks of the ledgered epoch with
+    // every below-current-floor doc's windows anti-joined away
+    QuerySpec("lm_retro_refresh", (s, d) => {
+      val root = fixtureModel(s, d)
+      val docs = Tables(s, d, "documents")
+      QualityStore.applyRetro(
+        Curation.chunkDocs(docs.filter(col("doc_id") % 10 >= 8),
+          window = 32, stride = 24),
+        retroSweep(docs,
+          docs.filter(col("doc_id") % 10 >= 8)
+            .select(col("doc_id"), col("source")),
+          readUni(s, root), readBi(s, root))._1)
+        .orderBy(col("doc_id"), col("chunk_idx"))
+    },
+      // the delete-set applied to the ledgered epoch's curated chunks:
+      // keep-set from the gate replay, chunk CTEs over the same split,
+      // evicted docs' windows dropped
+      s"""WITH $gateCtes,
+         |l8 AS (SELECT doc_id, text FROM documents
+         |       WHERE doc_id % 10 >= 8),
+         |${Curation.chunkCtesSql(32, 24, "l8", "lch")},
+         |keepd AS (
+         |  SELECT l.doc_id FROM lsrc l LEFT JOIN lthr t USING (source)
+         |  WHERE l.avg_logprob IS NULL OR t.lm_thr IS NULL
+         |     OR l.avg_logprob >= t.lm_thr)
+         |SELECT c.doc_id, c.chunk_idx, c.chunk_text, c.n_chunk_tokens
+         |FROM lch c JOIN keepd k ON k.doc_id = c.doc_id
+         |ORDER BY c.doc_id, c.chunk_idx""".stripMargin))
 }

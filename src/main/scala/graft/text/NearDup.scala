@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.{QueryModule, QuerySpec}
 import graft.sources.{Staging, Tables}
 import graft.text.TextOps.norm
 
@@ -20,9 +21,7 @@ import graft.text.TextOps.norm
   * `md5(j || ':' || shingle)` hex strings — identical in Spark and DuckDB,
   * no engine-specific hash algorithm anywhere.
   */
-object NearDup {
-  type Q = (SparkSession, String) => DataFrame
-
+object NearDup extends QueryModule {
   private val K = 8 // minhash functions
   private val B = 4 // bands (rows per band R = K/B = 2)
   private val MaxBucket = 256 // default bucket-size cap (sub-salt threshold)
@@ -1630,172 +1629,7 @@ object NearDup {
       .orderBy("shard")
   }
 
-  val queries: Map[String, Q] = Map(
-    "dedup_near_lsh" -> ((s, d) =>
-      minhashLshFromSigs(docSigs(s, d), MaxBucket)),
-    // incremental ingestion dedup: the 80% of docs with doc_id%10 < 8 are
-    // the accumulated corpus, the rest are the incoming batch
-    "dedup_incremental" -> ((s, d) => {
-      val docs = Tables(s, d, "documents")
-      incrementalDedup(docs.filter(col("doc_id") % 10 < 8),
-        docs.filter(col("doc_id") % 10 >= 8))
-    }),
-    // same semantics as dedup_incremental, but the corpus side reads the
-    // PERSISTED signature store (a parquet scan of signed state — zero
-    // re-shingling/re-hashing of the corpus; see SignatureStore). The
-    // production ingestion shape: sign once, dedup every batch against
-    // the store.
-    "dedup_incremental_staged" -> ((s, d) => {
-      val docs = Tables(s, d, "documents")
-      incrementalDedupFromSigs(
-        SignatureStore.read(s, SignatureStore.fixtureCorpusStore(s, d)),
-        docs.filter(col("doc_id") % 10 >= 8))
-    }),
-    // cluster representative chosen by QUALITY (ties to the smaller
-    // doc_id), not min id — what a curation stage actually keeps
-    "dedup_keep_best" -> ((s, d) => keepBestFrame(s, d)),
-    // cluster-aware train/eval assignment: the split is a deterministic
-    // hash of the CLUSTER, so no near-duplicate pair can straddle
-    // train/eval — the leakage a per-doc split invites
-    "split_leakage_free" -> ((s, d) =>
-      fixtureClusters(s, d).select(col("doc_id"), col("cluster_id"))
-        .withColumn("split",
-          when(pmod(saltHash(col("cluster_id")), lit(10L)) < 9, lit("train"))
-            .otherwise(lit("eval")))),
-    // quality-keeper docs round-tripped through the hash-sharded
-    // partitioned export, rolled up per shard
-    "curated_export" -> ((s, d) => exportCurated(s, d)),
-    // cap low enough (2) that real fixture buckets (size-3 duplicate
-    // clusters exist at sf0.01) split into sub-buckets — the capped
-    // semantics and the oracle's mirrored salt are exercised on data,
-    // not just by the unit test
-    "dedup_near_lsh_capped" -> ((s, d) =>
-      minhashLshFromSigs(docSigs(s, d), maxBucket = 2)),
-    // connected-components clustering over the (default-cap, unsorted)
-    // pair graph; every doc appears, singletons are their own cluster.
-    // NOTE: constructing this frame RUNS the propagation loop (see
-    // dedupClusters — an iterative fixpoint cannot be one lazy plan).
-    "dedup_clusters" -> ((s, d) => fixtureClusters(s, d)),
-    // banding recall telemetry on the count-sized sample — see lshRecall
-    "lsh_recall" -> ((s, d) => lshRecall(docSigs(s, d))),
-    "simhash" -> ((s, d) => simhash(Tables(s, d, "documents"))),
-    // both widths from one tokenize/md5/kernel pass (simhash16From64)
-    "simhash_both" -> ((s, d) => simhashBoth(Tables(s, d, "documents"))),
-    // 16-bit audit view derived from the PERSISTED 64-bit store — zero
-    // text reads (the 8-byte signature already contains the audit bits)
-    "simhash_audit_staged" -> ((s, d) => simhashAuditFromSigs(
-      SimHashStore.read(s, SimHashStore.fixtureCorpusStore(s, d)))),
-    "dedup_simhash" -> ((s, d) => simhashNearDup(Tables(s, d, "documents"))),
-    "dedup_simhash_keep" -> ((s, d) => simhashDedup(Tables(s, d, "documents"))),
-    "simhash64" -> ((s, d) => simhash64(Tables(s, d, "documents"))),
-    "dedup_simhash64" -> ((s, d) => simhashNearDup64(Tables(s, d, "documents"))),
-    // radius-derived banding: the deep-Hamming escalation path (8×8-bit
-    // bands at radius 7) the fixed-band forms refuse
-    "dedup_simhash64_h7" -> ((s, d) =>
-      simhashNearDup64Radius(Tables(s, d, "documents"), maxHamming = 7)),
-    // the deep audit served FROM THE STORE: re-bands persisted 8-byte
-    // signatures (doc_id % 10 < 8 population) — zero text reads
-    "dedup_simhash64_h7_staged" -> ((s, d) =>
-      simhashNearDup64RadiusFromSigs(
-        SimHashStore.read(s, SimHashStore.fixtureCorpusStore(s, d)),
-        maxHamming = 7)),
-    "dedup_simhash64_keep" -> ((s, d) => simhashDedup64(Tables(s, d, "documents"))),
-    // chunk-granularity keeper dedup + cross-doc duplicate-window flag
-    // (32-token windows at stride 24, the chunk_docs fixture convention)
-    "chunk_dedup" -> ((s, d) => chunkDedup64(Tables(s, d, "documents"))),
-    // batch-vs-corpus chunk dedup on the % 10 convention, corpus
-    // chunk-signed in-session
-    "chunk_dedup_incremental" -> ((s, d) => {
-      val docs = Tables(s, d, "documents")
-      chunkDedupIncremental(
-        chunkSigs64(docs.filter(col("doc_id") % 10 < 8)),
-        docs.filter(col("doc_id") % 10 >= 8))
-    }),
-    // identical semantics from the PERSISTED chunk-signature store —
-    // the corpus is never re-chunked or re-tokenized
-    "chunk_dedup_staged" -> ((s, d) => {
-      val docs = Tables(s, d, "documents")
-      chunkDedupIncremental(
-        ChunkSigStore.read(s, ChunkSigStore.fixtureCorpusStore(s, d)),
-        docs.filter(col("doc_id") % 10 >= 8))
-    }),
-    // NEAR-dup window matching (Hamming<=3 banded) + keeper election
-    // per transitive family — catches lightly-EDITED duplicated
-    // windows the exact chunk signature misses (memoized fixpoint)
-    "chunk_dedup_near" -> ((s, d) => fixtureChunkNearClusters(s, d)),
-    // the staged near judge: batch windows banded against the
-    // PERSISTED chunk-signature store at Hamming<=3
-    "chunk_dedup_near_staged" -> ((s, d) => {
-      val docs = Tables(s, d, "documents")
-      chunkDedupNearFromSigs(
-        ChunkSigStore.read(s, ChunkSigStore.fixtureCorpusStore(s, d)),
-        docs.filter(col("doc_id") % 10 >= 8))
-    }),
-    // the family's batch-vs-corpus ingestion form, on the incremental
-    // fixture convention (accumulated = doc_id % 10 < 8)
-    "dedup_simhash64_incremental" -> ((s, d) => {
-      val docs = Tables(s, d, "documents")
-      simhashIncremental64(docs.filter(col("doc_id") % 10 < 8),
-        docs.filter(col("doc_id") % 10 >= 8))
-    }),
-    // transitive near-dup families over the Hamming<=3 pair graph —
-    // the clustering view of the 64-bit family (memoized fixpoint)
-    "dedup_simhash64_clusters" -> ((s, d) => fixtureSimhashClusters(s, d)),
-    // identical semantics from the PERSISTED signature store — the
-    // corpus side is a parquet scan of (doc_id, simhash64) longs
-    "dedup_simhash64_staged" -> ((s, d) => {
-      val docs = Tables(s, d, "documents")
-      simhashIncremental64FromSigs(
-        SimHashStore.read(s, SimHashStore.fixtureCorpusStore(s, d)),
-        docs.filter(col("doc_id") % 10 >= 8))
-    }),
-    // fuzzy benchmark decontamination (Hamming<=3 vs the doc_id<10
-    // benchmark split, the exact-decontaminate fixture convention)
-    "decontaminate_fuzzy" -> ((s, d) =>
-      decontaminateFuzzy(Tables(s, d, "documents"))),
-    // chunk-granularity leakage: per-window verdicts + per-doc fraction
-    "decontaminate_chunks" -> ((s, d) =>
-      decontaminateChunks(Tables(s, d, "documents"))),
-    // the decontamination LANE's batch twin: the staged benchmark
-    // chunk store (doc_id < 10, signed once) judges the incoming
-    // split's windows; docs >50% contaminated drop whole, flagged
-    // windows excise, clean chunks pass — the composed operational
-    // form of the decontaminate_chunks report
-    "decontam_lane_twin" -> ((s, d) =>
-      decontamBatch(
-        ChunkSigStore.read(s, ChunkSigStore.fixtureBenchmarkStore(s, d)),
-        Tables(s, d, "documents")
-          .filter(col("doc_id") >= 10 && col("doc_id") % 10 >= 8),
-        // the twin consumes ONE output in ONE action over read-only
-        // fixture stores — no append can feed back, so the pins defer
-        eager = false)._1),
-    // the benchmark-REFRESH lifecycle: the persisted curated store
-    // (built under the BASE suite) re-judged against only the DELTA's
-    // signatures — per-doc re-verdicts with the recovered ingest
-    // ledger folded into the combined contaminated fraction
-    "decontam_retro" -> ((s, d) => retroSweep(
-      ChunkSigStore.read(s, ChunkSigStore.fixtureBenchmarkDeltaStore(s, d)),
-      s.read.parquet(fixtureRetroCleanStore(s, d)))._2.orderBy("doc_id")),
-    // the delete-set a store compaction applies: store windows within
-    // Hamming range of a delta signature
-    "decontam_retro_excisions" -> ((s, d) => retroSweep(
-      ChunkSigStore.read(s, ChunkSigStore.fixtureBenchmarkDeltaStore(s, d)),
-      s.read.parquet(fixtureRetroCleanStore(s, d)))._1
-      .orderBy("doc_id", "chunk_idx")),
-    // the refresh APPLIED (pure frame form of refreshStore — the query
-    // surface must not mutate the staged fixture): the store content a
-    // rebuild under base UNION delta would have produced, certified
-    // window-for-window including the advanced per-doc fraction
-    "decontam_retro_refresh" -> ((s, d) => {
-      val (exc, docV) = retroSweep(
-        ChunkSigStore.read(s, ChunkSigStore.fixtureBenchmarkDeltaStore(s, d)),
-        s.read.parquet(fixtureRetroCleanStore(s, d)))
-      refreshApply(s.read.parquet(fixtureRetroCleanStore(s, d)), exc, docV)
-        .orderBy("doc_id", "chunk_idx")
-    }),
-    "ngram_jaccard" -> ((s, d) => bigramJaccard(Tables(s, d, "documents"))))
-
-  // --- oracle -------------------------------------------------------------
+  // --- oracle SQL, then the registered queries ----------------------------
 
   private val N = "regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')"
 
@@ -2250,57 +2084,98 @@ object NearDup {
        |  GROUP BY s.doc_id, s.chunk_idx)""".stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
-    "decontam_retro" ->
-      s"""WITH $retroCtes,
-         |rnn AS (SELECT doc_id, count(*) AS n_new FROM rnm GROUP BY doc_id)
-         |SELECT k.doc_id, CAST(k.n_chunks AS INTEGER) AS n_chunks,
-         |  CAST(k.f0 AS INTEGER) AS n_flagged_ingest,
-         |  CAST(coalesce(n.n_new, 0) AS INTEGER) AS n_new_flags,
-         |  CAST(k.f0 + coalesce(n.n_new, 0) AS DOUBLE)
-         |    / CAST(k.n_chunks AS DOUBLE) AS doc_contaminated_frac,
-         |  (CAST(k.f0 + coalesce(n.n_new, 0) AS DOUBLE)
-         |    / CAST(k.n_chunks AS DOUBLE)) <= 0.5 AS is_new
-         |FROM rkept k LEFT JOIN rnn n ON n.doc_id = k.doc_id
-         |ORDER BY k.doc_id""".stripMargin,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("dedup_near_lsh", (s, d) =>
+      minhashLshFromSigs(docSigs(s, d), MaxBucket),
+      lshOracle(MaxBucket)),
 
-    "decontam_retro_excisions" ->
-      s"""WITH $retroCtes
-         |SELECT doc_id, chunk_idx, CAST(nb AS INTEGER) AS n_delta_matches
-         |FROM rnm ORDER BY doc_id, chunk_idx""".stripMargin,
+    // incremental ingestion dedup: the 80% of docs with doc_id%10 < 8 are
+    // the accumulated corpus, the rest are the incoming batch
+    QuerySpec("dedup_incremental", (s, d) => {
+      val docs = Tables(s, d, "documents")
+      incrementalDedup(docs.filter(col("doc_id") % 10 < 8),
+        docs.filter(col("doc_id") % 10 >= 8))
+    },
+      // signatures are per-doc, so banding ALL docs once then splitting by
+      // the id predicate is identical to banding each side separately
+      incrementalOracle),
+    // same semantics as dedup_incremental, but the corpus side reads the
+    // PERSISTED signature store (a parquet scan of signed state — zero
+    // re-shingling/re-hashing of the corpus; see SignatureStore). The
+    // production ingestion shape: sign once, dedup every batch against
+    // the store.
+    QuerySpec("dedup_incremental_staged", (s, d) => {
+      val docs = Tables(s, d, "documents")
+      incrementalDedupFromSigs(
+        SignatureStore.read(s, SignatureStore.fixtureCorpusStore(s, d)),
+        docs.filter(col("doc_id") % 10 >= 8))
+    },
+      // byte-identical semantics: the staged variant only changes WHERE the
+      // corpus signatures come from (parquet store vs in-session derivation)
+      incrementalOracle),
 
-    // the refreshed store = rebuild(base UNION delta): kept docs'
-    // surviving windows with the COMBINED fraction, delta-flagged
-    // windows excised (base-flagged ones never reached the store)
-    "decontam_retro_refresh" ->
-      s"""WITH $retroCtes,
-         |rnn AS (SELECT doc_id, count(*) AS n_new FROM rnm GROUP BY doc_id),
-         |rk2 AS (
-         |  SELECT k.doc_id,
-         |    CAST(k.f0 + coalesce(n.n_new, 0) AS DOUBLE)
-         |      / CAST(k.n_chunks AS DOUBLE) AS cfrac
-         |  FROM rkept k LEFT JOIN rnn n ON n.doc_id = k.doc_id
-         |  WHERE CAST(k.f0 + coalesce(n.n_new, 0) AS DOUBLE)
-         |      / CAST(k.n_chunks AS DOUBLE) <= 0.5)
-         |SELECT s.doc_id, s.chunk_idx, c.chunk_text, c.n_chunk_tokens,
-         |  k.cfrac AS doc_contaminated_frac
-         |FROM rstore s
-         |JOIN rk2 k ON k.doc_id = s.doc_id
-         |JOIN rcch c ON c.doc_id = s.doc_id AND c.chunk_idx = s.chunk_idx
-         |WHERE NOT EXISTS (SELECT 1 FROM rnm m
-         |  WHERE m.doc_id = s.doc_id AND m.chunk_idx = s.chunk_idx)
-         |ORDER BY s.doc_id, s.chunk_idx""".stripMargin,
+    // cluster representative chosen by QUALITY (ties to the smaller
+    // doc_id), not min id — what a curation stage actually keeps
+    QuerySpec("dedup_keep_best", (s, d) => keepBestFrame(s, d),
+      // the dedup_clusters fixpoint, re-ranked: the kept representative is
+      // the highest-QUALITY member (ties to the smaller doc_id)
+      s"""WITH RECURSIVE $clustersCtes,
+         |$keepCtes
+         |SELECT doc_id, cluster_id, keeper_id,
+         |  keeper_id = doc_id AS is_keeper
+         |FROM ranked ORDER BY doc_id""".stripMargin),
 
-    "chunk_dedup_near" -> chunkNearClustersOracle,
-    "chunk_dedup_near_staged" -> chunkNearStagedOracle,
-    "dedup_near_lsh" -> lshOracle(MaxBucket),
+    // cluster-aware train/eval assignment: the split is a deterministic
+    // hash of the CLUSTER, so no near-duplicate pair can straddle
+    // train/eval — the leakage a per-doc split invites
+    QuerySpec("split_leakage_free", (s, d) =>
+      fixtureClusters(s, d).select(col("doc_id"), col("cluster_id"))
+        .withColumn("split",
+          when(pmod(saltHash(col("cluster_id")), lit(10L)) < 9, lit("train"))
+            .otherwise(lit("eval"))),
+      s"""WITH RECURSIVE $clustersCtes
+         |SELECT doc_id, cluster_id,
+         |  CASE WHEN (${saltHashSql("cluster_id")}) % 10 < 9
+         |       THEN 'train' ELSE 'eval' END AS split
+         |FROM clusters ORDER BY doc_id""".stripMargin),
 
-    // truth side is all-pairs over the small sample (oracle-side only;
-    // the engine enumerates by shingle co-occurrence): a truth pair has
-    // intersection > 0, so the two formulations see identical pairs.
-    // The sample modulus mirrors lshRecall's count-derived sizing, and
-    // counts sh (qualifying docs) exactly like sigs.count() does.
-    "lsh_recall" ->
+    // quality-keeper docs round-tripped through the hash-sharded
+    // partitioned export, rolled up per shard
+    QuerySpec("curated_export", (s, d) => exportCurated(s, d),
+      s"""WITH RECURSIVE $clustersCtes,
+         |$keepCtes,
+         |keep AS (SELECT doc_id FROM ranked WHERE doc_id = keeper_id)
+         |SELECT CAST((${saltHashSql("d.doc_id")}) % 8 AS INTEGER) AS shard,
+         |  CAST(count(*) AS INTEGER) AS n_docs,
+         |  CAST(sum(len(string_split($N, ' '))) AS BIGINT) AS sum_tokens,
+         |  min(d.doc_id) AS min_doc_id
+         |FROM documents d JOIN keep ON keep.doc_id = d.doc_id
+         |GROUP BY 1 ORDER BY shard""".stripMargin),
+    // cap low enough (2) that real fixture buckets (size-3 duplicate
+    // clusters exist at sf0.01) split into sub-buckets — the capped
+    // semantics and the oracle's mirrored salt are exercised on data,
+    // not just by the unit test
+    QuerySpec("dedup_near_lsh_capped", (s, d) =>
+      minhashLshFromSigs(docSigs(s, d), maxBucket = 2),
+      lshOracle(2)),
+
+    // connected-components clustering over the (default-cap, unsorted)
+    // pair graph; every doc appears, singletons are their own cluster.
+    // NOTE: constructing this frame RUNS the propagation loop (see
+    // dedupClusters — an iterative fixpoint cannot be one lazy plan).
+    QuerySpec("dedup_clusters", (s, d) => fixtureClusters(s, d),
+      // components via recursive reachability — see clustersCtes
+      s"""WITH RECURSIVE $clustersCtes
+         |SELECT doc_id, cluster_id, cluster_id = doc_id AS is_keeper
+         |FROM clusters ORDER BY doc_id""".stripMargin),
+
+    // banding recall telemetry on the count-sized sample — see lshRecall
+    QuerySpec("lsh_recall", (s, d) => lshRecall(docSigs(s, d)),
+      // truth side is all-pairs over the small sample (oracle-side only;
+      // the engine enumerates by shingle co-occurrence): a truth pair has
+      // intersection > 0, so the two formulations see identical pairs.
+      // The sample modulus mirrors lshRecall's count-derived sizing, and
+      // counts sh (qualifying docs) exactly like sigs.count() does.
       s"""WITH $bandsCtes,
          |md AS (SELECT greatest(2, count(*) // 2500) AS m FROM sh),
          |sp AS (SELECT sh.* FROM sh, md WHERE doc_id % md.m = 0),
@@ -2328,125 +2203,104 @@ object NearDup {
          |    / count(*)::DOUBLE AS recall
          |FROM tr LEFT JOIN cd
          |  ON tr.doc_a = cd.doc_a AND tr.doc_b = cd.doc_b
-         |GROUP BY 1 ORDER BY bucket""".stripMargin,
-    "dedup_near_lsh_capped" -> lshOracle(2),
+         |GROUP BY 1 ORDER BY bucket""".stripMargin),
 
-    "split_leakage_free" ->
-      s"""WITH RECURSIVE $clustersCtes
-         |SELECT doc_id, cluster_id,
-         |  CASE WHEN (${saltHashSql("cluster_id")}) % 10 < 9
-         |       THEN 'train' ELSE 'eval' END AS split
-         |FROM clusters ORDER BY doc_id""".stripMargin,
-
-    "curated_export" ->
-      s"""WITH RECURSIVE $clustersCtes,
-         |$keepCtes,
-         |keep AS (SELECT doc_id FROM ranked WHERE doc_id = keeper_id)
-         |SELECT CAST((${saltHashSql("d.doc_id")}) % 8 AS INTEGER) AS shard,
-         |  CAST(count(*) AS INTEGER) AS n_docs,
-         |  CAST(sum(len(string_split($N, ' '))) AS BIGINT) AS sum_tokens,
-         |  min(d.doc_id) AS min_doc_id
-         |FROM documents d JOIN keep ON keep.doc_id = d.doc_id
-         |GROUP BY 1 ORDER BY shard""".stripMargin,
-
-    // signatures are per-doc, so banding ALL docs once then splitting by
-    // the id predicate is identical to banding each side separately
-    "dedup_incremental" -> incrementalOracle,
-    // byte-identical semantics: the staged variant only changes WHERE the
-    // corpus signatures come from (parquet store vs in-session derivation)
-    "dedup_incremental_staged" -> incrementalOracle,
-
-    // the dedup_clusters fixpoint, re-ranked: the kept representative is
-    // the highest-QUALITY member (ties to the smaller doc_id)
-    "dedup_keep_best" ->
-      s"""WITH RECURSIVE $clustersCtes,
-         |$keepCtes
-         |SELECT doc_id, cluster_id, keeper_id,
-         |  keeper_id = doc_id AS is_keeper
-         |FROM ranked ORDER BY doc_id""".stripMargin,
-
-    // components via recursive reachability — see clustersCtes
-    "dedup_clusters" ->
-      s"""WITH RECURSIVE $clustersCtes
-         |SELECT doc_id, cluster_id, cluster_id = doc_id AS is_keeper
-         |FROM clusters ORDER BY doc_id""".stripMargin,
-
-    "simhash" ->
+    QuerySpec("simhash", (s, d) => simhash(Tables(s, d, "documents")),
       s"""SELECT doc_id, CAST($simhashTerms AS BIGINT) AS simhash
          |FROM (SELECT doc_id, l, list_transform(l, t -> md5(t)) AS lh
          |      FROM (SELECT doc_id,
          |              list_distinct(string_split($N, ' ')) AS l
          |            FROM documents))
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
 
-    // both widths replayed independently over one token stream — the
-    // engine derives 16 from 64 by bit compression; the oracle votes
-    // each width from scratch, so a drift in the derivation would
-    // hash-mismatch here
-    "simhash_both" ->
+    // both widths from one tokenize/md5/kernel pass (simhash16From64)
+    QuerySpec("simhash_both", (s, d) => simhashBoth(Tables(s, d, "documents")),
+      // both widths replayed independently over one token stream — the
+      // engine derives 16 from 64 by bit compression; the oracle votes
+      // each width from scratch, so a drift in the derivation would
+      // hash-mismatch here
       s"""SELECT doc_id, CAST($simhash64Terms AS BIGINT) AS simhash64,
          |  CAST($simhashTerms AS BIGINT) AS simhash
          |FROM (SELECT doc_id, l, list_transform(l, t -> md5(t)) AS lh
          |      FROM (SELECT doc_id,
          |              list_distinct(string_split($N, ' ')) AS l
          |            FROM documents))
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
 
-    // audit view over the persisted-store population (doc_id % 10 < 8)
-    // — engine reads 8-byte signatures, oracle re-votes from text
-    "simhash_audit_staged" ->
+    // 16-bit audit view derived from the PERSISTED 64-bit store — zero
+    // text reads (the 8-byte signature already contains the audit bits)
+    QuerySpec("simhash_audit_staged", (s, d) => simhashAuditFromSigs(
+      SimHashStore.read(s, SimHashStore.fixtureCorpusStore(s, d))),
+      // audit view over the persisted-store population (doc_id % 10 < 8)
+      // — engine reads 8-byte signatures, oracle re-votes from text
       s"""SELECT doc_id, CAST($simhashTerms AS BIGINT) AS simhash
          |FROM (SELECT doc_id, l, list_transform(l, t -> md5(t)) AS lh
          |      FROM (SELECT doc_id,
          |              list_distinct(string_split($N, ' ')) AS l
          |            FROM documents WHERE doc_id % 10 < 8))
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
 
-    // the banded candidate join replayed naively, width/cap/gate shared
-    // with the engine registration via the parameterized builder
-    "dedup_simhash" ->
+    QuerySpec("dedup_simhash", (s, d) =>
+      simhashNearDup(Tables(s, d, "documents")),
+      // the banded candidate join replayed naively, width/cap/gate shared
+      // with the engine registration via the parameterized builder
       simhashPairOracle(simhashTerms, nBands = 2, bandBits = 8,
-        cap = MaxBucket, maxHamming = 2),
+        cap = MaxBucket, maxHamming = 2)),
 
-    // one group per signature, keeper = min doc_id — dedup_exact's
-    // shape on the fingerprint key
-    "dedup_simhash_keep" -> simhashKeepOracle(simhashTerms, "simhash"),
+    QuerySpec("dedup_simhash_keep", (s, d) =>
+      simhashDedup(Tables(s, d, "documents")),
+      // one group per signature, keeper = min doc_id — dedup_exact's
+      // shape on the fingerprint key
+      simhashKeepOracle(simhashTerms, "simhash")),
 
-    "simhash64" ->
+    QuerySpec("simhash64", (s, d) => simhash64(Tables(s, d, "documents")),
       s"""SELECT doc_id, CAST($simhash64Terms AS BIGINT) AS simhash64
          |FROM (SELECT doc_id, l, list_transform(l, t -> md5(t)) AS lh
          |      FROM (SELECT doc_id,
          |              list_distinct(string_split($N, ' ')) AS l
          |            FROM documents))
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
 
-    // 4×16-bit bands of the 64-bit signature — exact recall at the
-    // default Hamming<=3 radius by the pigeonhole (no straddle gap)
-    "dedup_simhash64" ->
+    QuerySpec("dedup_simhash64", (s, d) =>
+      simhashNearDup64(Tables(s, d, "documents")),
+      // 4×16-bit bands of the 64-bit signature — exact recall at the
+      // default Hamming<=3 radius by the pigeonhole (no straddle gap)
       simhashPairOracle(simhash64Terms, nBands = 4, bandBits = 16,
-        cap = MaxBucket, maxHamming = 3),
+        cap = MaxBucket, maxHamming = 3)),
 
-    // radius-derived 8×8-bit banding at Hamming<=7 — the oracle takes
-    // the ENGINE's own bandLayout(7), so both sides band identically
-    "dedup_simhash64_h7" ->
+    // radius-derived banding: the deep-Hamming escalation path (8×8-bit
+    // bands at radius 7) the fixed-band forms refuse
+    QuerySpec("dedup_simhash64_h7", (s, d) =>
+      simhashNearDup64Radius(Tables(s, d, "documents"), maxHamming = 7),
+      // radius-derived 8×8-bit banding at Hamming<=7 — the oracle takes
+      // the ENGINE's own bandLayout(7), so both sides band identically
       simhashPairOracleLayout(simhash64Terms, bandLayout(7),
-        cap = MaxBucket, maxHamming = 7),
+        cap = MaxBucket, maxHamming = 7)),
 
-    // store-served twin: same radius-7 banding over the PERSISTED
-    // population only (doc_id % 10 < 8) — the engine reads 8-byte
-    // signatures, the oracle re-votes them from text
-    "dedup_simhash64_h7_staged" ->
+    // the deep audit served FROM THE STORE: re-bands persisted 8-byte
+    // signatures (doc_id % 10 < 8 population) — zero text reads
+    QuerySpec("dedup_simhash64_h7_staged", (s, d) =>
+      simhashNearDup64RadiusFromSigs(
+        SimHashStore.read(s, SimHashStore.fixtureCorpusStore(s, d)),
+        maxHamming = 7),
+      // store-served twin: same radius-7 banding over the PERSISTED
+      // population only (doc_id % 10 < 8) — the engine reads 8-byte
+      // signatures, the oracle re-votes them from text
       simhashPairOracleLayout(simhash64Terms, bandLayout(7),
-        cap = MaxBucket, maxHamming = 7, where = "doc_id % 10 < 8"),
+        cap = MaxBucket, maxHamming = 7, where = "doc_id % 10 < 8")),
 
-    "dedup_simhash64_keep" -> simhashKeepOracle(simhash64Terms, "simhash64"),
+    QuerySpec("dedup_simhash64_keep", (s, d) =>
+      simhashDedup64(Tables(s, d, "documents")),
+      simhashKeepOracle(simhash64Terms, "simhash64")),
 
-    // chunk-granularity keeper: the shared chunk CTEs render the same
-    // slice arithmetic as chunkDocs, each chunk re-votes the 64-bit
-    // signature from its own token set, one group per signature. The
-    // lexicographic (doc_id, chunk_idx) keeper is replayed two-step:
-    // min doc_id per signature, then min chunk_idx within that doc.
-    "chunk_dedup" ->
+    // chunk-granularity keeper dedup + cross-doc duplicate-window flag
+    // (32-token windows at stride 24, the chunk_docs fixture convention)
+    QuerySpec("chunk_dedup", (s, d) => chunkDedup64(Tables(s, d, "documents")),
+      // chunk-granularity keeper: the shared chunk CTEs render the same
+      // slice arithmetic as chunkDocs, each chunk re-votes the 64-bit
+      // signature from its own token set, one group per signature. The
+      // lexicographic (doc_id, chunk_idx) keeper is replayed two-step:
+      // min doc_id per signature, then min chunk_idx within that doc.
       s"""WITH ${Curation.chunkCtesSql(32, 24)},
          |csig AS (
          |  ${chunkSigCteSql("chunks")}),
@@ -2460,11 +2314,64 @@ object NearDup {
          |FROM grp g JOIN csig c
          |  ON c.sig = g.sig AND c.doc_id = g.keep_doc_id
          |GROUP BY g.sig, g.keep_doc_id, g.dup_count, g.n_docs
-         |ORDER BY g.keep_doc_id, keep_chunk_idx""".stripMargin,
+         |ORDER BY g.keep_doc_id, keep_chunk_idx""".stripMargin),
 
-    // min-label components over the Hamming<=3 pair graph, replayed as
-    // recursive reachability — same shape as the LSH clusters oracle
-    "dedup_simhash64_clusters" ->
+    // batch-vs-corpus chunk dedup on the % 10 convention, corpus
+    // chunk-signed in-session
+    QuerySpec("chunk_dedup_incremental", (s, d) => {
+      val docs = Tables(s, d, "documents")
+      chunkDedupIncremental(
+        chunkSigs64(docs.filter(col("doc_id") % 10 < 8)),
+        docs.filter(col("doc_id") % 10 >= 8))
+    },
+      // batch-vs-corpus chunk dedup: both splits chunked with the shared
+      // CTEs, per-chunk signatures, exact-signature equality join, count
+      // of distinct corpus docs per incoming chunk; shared verbatim by
+      // the staged variant (the store only changes WHERE the corpus
+      // signatures come from)
+      chunkIncrementalOracle),
+    // identical semantics from the PERSISTED chunk-signature store —
+    // the corpus is never re-chunked or re-tokenized
+    QuerySpec("chunk_dedup_staged", (s, d) => {
+      val docs = Tables(s, d, "documents")
+      chunkDedupIncremental(
+        ChunkSigStore.read(s, ChunkSigStore.fixtureCorpusStore(s, d)),
+        docs.filter(col("doc_id") % 10 >= 8))
+    },
+      chunkIncrementalOracle),
+
+    // NEAR-dup window matching (Hamming<=3 banded) + keeper election
+    // per transitive family — catches lightly-EDITED duplicated
+    // windows the exact chunk signature misses (memoized fixpoint)
+    QuerySpec("chunk_dedup_near", (s, d) => fixtureChunkNearClusters(s, d),
+      chunkNearClustersOracle),
+    // the staged near judge: batch windows banded against the
+    // PERSISTED chunk-signature store at Hamming<=3
+    QuerySpec("chunk_dedup_near_staged", (s, d) => {
+      val docs = Tables(s, d, "documents")
+      chunkDedupNearFromSigs(
+        ChunkSigStore.read(s, ChunkSigStore.fixtureCorpusStore(s, d)),
+        docs.filter(col("doc_id") % 10 >= 8))
+    },
+      chunkNearStagedOracle),
+
+    // the family's batch-vs-corpus ingestion form, on the incremental
+    // fixture convention (accumulated = doc_id % 10 < 8)
+    QuerySpec("dedup_simhash64_incremental", (s, d) => {
+      val docs = Tables(s, d, "documents")
+      simhashIncremental64(docs.filter(col("doc_id") % 10 < 8),
+        docs.filter(col("doc_id") % 10 >= 8))
+    },
+      // batch-vs-corpus: 4-band candidates between the splits, Hamming
+      // gate, count of distinct existing near-docs per incoming doc
+      simhash64IncrementalOracle),
+
+    // transitive near-dup families over the Hamming<=3 pair graph —
+    // the clustering view of the 64-bit family (memoized fixpoint)
+    QuerySpec("dedup_simhash64_clusters", (s, d) =>
+      fixtureSimhashClusters(s, d),
+      // min-label components over the Hamming<=3 pair graph, replayed as
+      // recursive reachability — same shape as the LSH clusters oracle
       s"""WITH RECURSIVE ${simhashPairCtes(simhash64Terms, 4, 16, MaxBucket)},
          |sp AS (
          |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
@@ -2483,28 +2390,36 @@ object NearDup {
          |clusters AS (
          |  SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id)
          |SELECT doc_id, cluster_id, cluster_id = doc_id AS is_keeper
-         |FROM clusters ORDER BY doc_id""".stripMargin,
+         |FROM clusters ORDER BY doc_id""".stripMargin),
+    // identical semantics from the PERSISTED signature store — the
+    // corpus side is a parquet scan of (doc_id, simhash64) longs
+    QuerySpec("dedup_simhash64_staged", (s, d) => {
+      val docs = Tables(s, d, "documents")
+      simhashIncremental64FromSigs(
+        SimHashStore.read(s, SimHashStore.fixtureCorpusStore(s, d)),
+        docs.filter(col("doc_id") % 10 >= 8))
+    },
+      // byte-identical semantics: the staged variant only changes WHERE
+      // the corpus signatures come from (parquet store vs in-session)
+      simhash64IncrementalOracle),
 
-    // fuzzy decontamination: same banded judge with the benchmark
-    // split (doc_id < 10, the exact decontaminate's exclusive
-    // convention) as the existing side, corpus unsorted
-    "decontaminate_fuzzy" ->
+    // fuzzy benchmark decontamination (Hamming<=3 vs the doc_id<10
+    // benchmark split, the exact-decontaminate fixture convention)
+    QuerySpec("decontaminate_fuzzy", (s, d) =>
+      decontaminateFuzzy(Tables(s, d, "documents")),
+      // fuzzy decontamination: same banded judge with the benchmark
+      // split (doc_id < 10, the exact decontaminate's exclusive
+      // convention) as the existing side, corpus unsorted
       simhash64SplitOracle("doc_id < 10", "doc_id >= 10",
-        "n_benchmark_matches", "is_clean", sorted = false),
+        "n_benchmark_matches", "is_clean", sorted = false)),
 
-    // batch-vs-corpus chunk dedup: both splits chunked with the shared
-    // CTEs, per-chunk signatures, exact-signature equality join, count
-    // of distinct corpus docs per incoming chunk; shared verbatim by
-    // the staged variant (the store only changes WHERE the corpus
-    // signatures come from)
-    "chunk_dedup_incremental" -> chunkIncrementalOracle,
-    "chunk_dedup_staged" -> chunkIncrementalOracle,
-
-    // chunk-granularity leakage: both splits chunked with the shared
-    // CTEs, per-chunk 64-bit signatures, 4-band candidate join against
-    // the benchmark chunks, Hamming<=3 gate, then the per-chunk verdict
-    // and per-doc contaminated fraction
-    "decontaminate_chunks" ->
+    // chunk-granularity leakage: per-window verdicts + per-doc fraction
+    QuerySpec("decontaminate_chunks", (s, d) =>
+      decontaminateChunks(Tables(s, d, "documents")),
+      // chunk-granularity leakage: both splits chunked with the shared
+      // CTEs, per-chunk 64-bit signatures, 4-band candidate join against
+      // the benchmark chunks, Hamming<=3 gate, then the per-chunk verdict
+      // and per-doc contaminated fraction
       s"""WITH bsrc AS (SELECT doc_id, text FROM documents WHERE doc_id < 10),
          |csrc AS (SELECT doc_id, text FROM documents WHERE doc_id >= 10),
          |${Curation.chunkCtesSql(32, 24, "bsrc", "bchunks")},
@@ -2539,15 +2454,27 @@ object NearDup {
          |  FROM pc GROUP BY doc_id)
          |SELECT pc.doc_id, pc.chunk_idx, pc.n_benchmark_matches,
          |  pc.is_clean, pd.doc_contaminated_frac
-         |FROM pc JOIN pd USING (doc_id)""".stripMargin,
+         |FROM pc JOIN pd USING (doc_id)""".stripMargin),
 
-    // the decontamination lane replayed end to end: benchmark chunks
-    // signed and collapsed to DISTINCT signatures (the grouped-judge
-    // unit), 4-band candidates against the incoming split's windows,
-    // Hamming<=3 gate, per-doc contaminated fraction, the >maxFrac
-    // whole-doc drop, flagged-window excision — output is exactly the
-    // clean chunks the lane would append
-    "decontam_lane_twin" ->
+    // the decontamination LANE's batch twin: the staged benchmark
+    // chunk store (doc_id < 10, signed once) judges the incoming
+    // split's windows; docs >50% contaminated drop whole, flagged
+    // windows excise, clean chunks pass — the composed operational
+    // form of the decontaminate_chunks report
+    QuerySpec("decontam_lane_twin", (s, d) =>
+      decontamBatch(
+        ChunkSigStore.read(s, ChunkSigStore.fixtureBenchmarkStore(s, d)),
+        Tables(s, d, "documents")
+          .filter(col("doc_id") >= 10 && col("doc_id") % 10 >= 8),
+        // the twin consumes ONE output in ONE action over read-only
+        // fixture stores — no append can feed back, so the pins defer
+        eager = false)._1,
+      // the decontamination lane replayed end to end: benchmark chunks
+      // signed and collapsed to DISTINCT signatures (the grouped-judge
+      // unit), 4-band candidates against the incoming split's windows,
+      // Hamming<=3 gate, per-doc contaminated fraction, the >maxFrac
+      // whole-doc drop, flagged-window excision — output is exactly the
+      // clean chunks the lane would append
       s"""WITH bsrc AS (SELECT doc_id, text FROM documents WHERE doc_id < 10),
          |isrc AS (SELECT doc_id, text FROM documents
          |         WHERE doc_id >= 10 AND doc_id % 10 >= 8),
@@ -2584,16 +2511,70 @@ object NearDup {
          |SELECT pc.doc_id, pc.chunk_idx, pc.chunk_text,
          |  pc.n_chunk_tokens, pd.doc_contaminated_frac
          |FROM pc JOIN pd USING (doc_id)
-         |WHERE pd.doc_contaminated_frac <= 0.5 AND pc.nb = 0""".stripMargin,
+         |WHERE pd.doc_contaminated_frac <= 0.5 AND pc.nb = 0""".stripMargin),
+    // the benchmark-REFRESH lifecycle: the persisted curated store
+    // (built under the BASE suite) re-judged against only the DELTA's
+    // signatures — per-doc re-verdicts with the recovered ingest
+    // ledger folded into the combined contaminated fraction
+    QuerySpec("decontam_retro", (s, d) => retroSweep(
+      ChunkSigStore.read(s, ChunkSigStore.fixtureBenchmarkDeltaStore(s, d)),
+      s.read.parquet(fixtureRetroCleanStore(s, d)))._2.orderBy("doc_id"),
+      s"""WITH $retroCtes,
+         |rnn AS (SELECT doc_id, count(*) AS n_new FROM rnm GROUP BY doc_id)
+         |SELECT k.doc_id, CAST(k.n_chunks AS INTEGER) AS n_chunks,
+         |  CAST(k.f0 AS INTEGER) AS n_flagged_ingest,
+         |  CAST(coalesce(n.n_new, 0) AS INTEGER) AS n_new_flags,
+         |  CAST(k.f0 + coalesce(n.n_new, 0) AS DOUBLE)
+         |    / CAST(k.n_chunks AS DOUBLE) AS doc_contaminated_frac,
+         |  (CAST(k.f0 + coalesce(n.n_new, 0) AS DOUBLE)
+         |    / CAST(k.n_chunks AS DOUBLE)) <= 0.5 AS is_new
+         |FROM rkept k LEFT JOIN rnn n ON n.doc_id = k.doc_id
+         |ORDER BY k.doc_id""".stripMargin),
 
-    // batch-vs-corpus: 4-band candidates between the splits, Hamming
-    // gate, count of distinct existing near-docs per incoming doc
-    "dedup_simhash64_incremental" -> simhash64IncrementalOracle,
-    // byte-identical semantics: the staged variant only changes WHERE
-    // the corpus signatures come from (parquet store vs in-session)
-    "dedup_simhash64_staged" -> simhash64IncrementalOracle,
+    // the delete-set a store compaction applies: store windows within
+    // Hamming range of a delta signature
+    QuerySpec("decontam_retro_excisions", (s, d) => retroSweep(
+      ChunkSigStore.read(s, ChunkSigStore.fixtureBenchmarkDeltaStore(s, d)),
+      s.read.parquet(fixtureRetroCleanStore(s, d)))._1
+      .orderBy("doc_id", "chunk_idx"),
+      s"""WITH $retroCtes
+         |SELECT doc_id, chunk_idx, CAST(nb AS INTEGER) AS n_delta_matches
+         |FROM rnm ORDER BY doc_id, chunk_idx""".stripMargin),
 
-    "ngram_jaccard" ->
+    // the refresh APPLIED (pure frame form of refreshStore — the query
+    // surface must not mutate the staged fixture): the store content a
+    // rebuild under base UNION delta would have produced, certified
+    // window-for-window including the advanced per-doc fraction
+    QuerySpec("decontam_retro_refresh", (s, d) => {
+      val (exc, docV) = retroSweep(
+        ChunkSigStore.read(s, ChunkSigStore.fixtureBenchmarkDeltaStore(s, d)),
+        s.read.parquet(fixtureRetroCleanStore(s, d)))
+      refreshApply(s.read.parquet(fixtureRetroCleanStore(s, d)), exc, docV)
+        .orderBy("doc_id", "chunk_idx")
+    },
+      // the refreshed store = rebuild(base UNION delta): kept docs'
+      // surviving windows with the COMBINED fraction, delta-flagged
+      // windows excised (base-flagged ones never reached the store)
+      s"""WITH $retroCtes,
+         |rnn AS (SELECT doc_id, count(*) AS n_new FROM rnm GROUP BY doc_id),
+         |rk2 AS (
+         |  SELECT k.doc_id,
+         |    CAST(k.f0 + coalesce(n.n_new, 0) AS DOUBLE)
+         |      / CAST(k.n_chunks AS DOUBLE) AS cfrac
+         |  FROM rkept k LEFT JOIN rnn n ON n.doc_id = k.doc_id
+         |  WHERE CAST(k.f0 + coalesce(n.n_new, 0) AS DOUBLE)
+         |      / CAST(k.n_chunks AS DOUBLE) <= 0.5)
+         |SELECT s.doc_id, s.chunk_idx, c.chunk_text, c.n_chunk_tokens,
+         |  k.cfrac AS doc_contaminated_frac
+         |FROM rstore s
+         |JOIN rk2 k ON k.doc_id = s.doc_id
+         |JOIN rcch c ON c.doc_id = s.doc_id AND c.chunk_idx = s.chunk_idx
+         |WHERE NOT EXISTS (SELECT 1 FROM rnm m
+         |  WHERE m.doc_id = s.doc_id AND m.chunk_idx = s.chunk_idx)
+         |ORDER BY s.doc_id, s.chunk_idx""".stripMargin),
+
+    QuerySpec("ngram_jaccard", (s, d) =>
+      bigramJaccard(Tables(s, d, "documents")),
       s"""WITH bg AS (
          |  SELECT doc_id, list_distinct(list_transform(
          |    generate_series(1, len(l) - 1),
@@ -2604,5 +2585,5 @@ object NearDup {
          |  CAST(len(list_intersect(a.bigrams, b.bigrams)) AS DOUBLE)
          |    / len(list_distinct(list_concat(a.bigrams, b.bigrams))) AS jaccard
          |FROM bg a JOIN bg b ON b.doc_id = a.doc_id + 1
-         |ORDER BY doc_a""".stripMargin)
+         |ORDER BY doc_a""".stripMargin))
 }

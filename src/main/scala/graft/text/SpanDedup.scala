@@ -1,9 +1,10 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.{QueryModule, QuerySpec}
 import graft.sources.Tables
 import graft.text.TextOps.norm
 
@@ -32,9 +33,7 @@ import graft.text.TextOps.norm
   * so replay stays byte-exact; raw-string key kept in `dedup_span_clean`
   * as the collision-free reference).
   */
-object SpanDedup {
-  type Q = (SparkSession, String) => DataFrame
-
+object SpanDedup extends QueryModule {
   /** Window width in tokens. The corpus is short-document synthetic
     * text, so 8 (vs the 50-BPE-token literature setting) keeps span
     * statistics non-degenerate; see the scaladoc on scale posture. */
@@ -230,18 +229,6 @@ object SpanDedup {
           .as("cleaned_hash"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "dup_spans" -> ((s, d) => dupSpans(Tables(s, d, "documents"))),
-    "dedup_span_clean" -> ((s, d) => spanClean(Tables(s, d, "documents"))),
-    "dedup_span_hashed" -> ((s, d) =>
-      spanClean(Tables(s, d, "documents"), hashKey = true)),
-    // same corpus/batch split convention as dedup_incremental
-    "dedup_span_incremental" -> ((s, d) => {
-      val docs = Tables(s, d, "documents")
-      spanCleanIncremental(docs.filter(col("doc_id") % 10 < 8),
-        docs.filter(col("doc_id") % 10 >= 8))
-    }))
-
   private val N = "regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')"
 
   /** Positional W-token windows (1-based pos), mirroring
@@ -261,8 +248,8 @@ object SpanDedup {
   private val winCte = winCteWith(gramSlice)
   private val winCteHashed = winCteWith(s"md5($gramSlice)")
 
-  val oracle: Map[String, String] = Map(
-    "dup_spans" ->
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("dup_spans", (s, d) => dupSpans(Tables(s, d, "documents")),
       s"""WITH $winCte,
          |m AS (
          |  SELECT doc_id, pos,
@@ -288,11 +275,23 @@ object SpanDedup {
          |    THEN e - s + $W END), 0) AS BIGINT) AS max_span_tokens,
          |  sum(CASE WHEN isl IS NOT NULL THEN nw ELSE 0 END)::DOUBLE
          |    / sum(nw)::DOUBLE AS dup_frac
-         |FROM s GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+         |FROM s GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
-    // incoming windows covered iff their gram exists in the corpus side;
-    // the rebuild mirrors dedup_span_clean's
-    "dedup_span_incremental" ->
+    QuerySpec("dedup_span_clean", (s, d) =>
+      spanClean(Tables(s, d, "documents")),
+      spanCleanSql(winCte)),
+    QuerySpec("dedup_span_hashed", (s, d) =>
+      spanClean(Tables(s, d, "documents"), hashKey = true),
+      spanCleanSql(winCteHashed)),
+
+    // same corpus/batch split convention as dedup_incremental
+    QuerySpec("dedup_span_incremental", (s, d) => {
+      val docs = Tables(s, d, "documents")
+      spanCleanIncremental(docs.filter(col("doc_id") % 10 < 8),
+        docs.filter(col("doc_id") % 10 >= 8))
+    },
+      // incoming windows covered iff their gram exists in the corpus side;
+      // the rebuild mirrors dedup_span_clean's
       s"""WITH $winCte,
          |iw AS (SELECT * FROM g WHERE doc_id % 10 >= 8),
          |mg AS (
@@ -327,10 +326,7 @@ object SpanDedup {
          |    AS n_removed,
          |  coalesce(cl.h, md5('')) AS cleaned_hash
          |FROM base b LEFT JOIN cl ON b.doc_id = cl.doc_id
-         |ORDER BY b.doc_id""".stripMargin,
-
-    "dedup_span_clean" -> spanCleanSql(winCte),
-    "dedup_span_hashed" -> spanCleanSql(winCteHashed))
+         |ORDER BY b.doc_id""".stripMargin))
 
   /** The keep-one-copy replay over a window CTE — shared by the raw-key
     * and hashed-key twins (they differ only in the window key). */

@@ -1,8 +1,9 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.{QueryModule, QuerySpec}
 import graft.sources.Tables
 
 /** Text-analysis operators over the `documents` table — the
@@ -16,9 +17,7 @@ import graft.sources.Tables
   * mirrored exactly in the DuckDB oracle (same patterns, same collation
   * on ASCII tokens).
   */
-object TextOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object TextOps extends QueryModule {
   /** Whitespace-collapsed lowercase normalization — the native one-pass
     * `norm_text` kernel (`functions/NormText.scala`), byte-exact with
     * `regexp_replace(lower(trim(text)), "\\s+", " ")` (NormTextSpec
@@ -407,50 +406,6 @@ object TextOps {
         (lit(1.0) - col("distinct_sh").cast("double")
           / (size(col("toks")) - 2)).as("repetition_ratio"))
 
-  val queries: Map[String, Q] = Map(
-    "text_normalize" -> ((s, d) => normalized(Tables(s, d, "documents"))),
-    "dedup_exact" -> ((s, d) => dedupExact(Tables(s, d, "documents"))),
-    "token_count" -> ((s, d) => tokenCounts(Tables(s, d, "documents"))),
-    // greedy-subword counting against the STAGED corpus-trained merge
-    // vocab (BpeVocab: vocab as data, trie matching in the kernel)
-    "token_count_bpe" -> ((s, d) =>
-      tokenCountsBpe(Tables(s, d, "documents"), BpeVocab.pieces(s, d))),
-    // the tokenization itself: one row per consumed subword unit, in
-    // walk order — the frame numericalization joins against the vocab
-    "token_split_bpe" -> ((s, d) =>
-      tokenizeBpe(Tables(s, d, "documents"), BpeVocab.pieces(s, d))),
-    // tokenize -> deterministic vocab ids (OOV = |V| + code point)
-    "token_ids_bpe" -> ((s, d) =>
-      tokenIdsBpe(Tables(s, d, "documents"),
-        BpeVocab.read(s, BpeVocab.fixtureStore(s, d)))),
-    // per-source OOV rate — the tokenizer retrain signal
-    "vocab_coverage" -> ((s, d) =>
-      vocabCoverage(Tables(s, d, "documents"), BpeVocab.pieces(s, d))),
-    "quality_score" -> ((s, d) => qualityScore(Tables(s, d, "documents"))),
-    "lang_id" -> ((s, d) => langId(Tables(s, d, "documents"))),
-    // quality with the detected language's stopword model
-    "quality_score_lang" -> ((s, d) =>
-      qualityScoreLang(Tables(s, d, "documents"))),
-    "doc_fingerprint" -> ((s, d) => fingerprints(Tables(s, d, "documents"))),
-    "doc_repetition" -> ((s, d) => repetition(Tables(s, d, "documents"))),
-    // the SQL surface itself: a user-written spark.sql statement over a
-    // registered view, calling the extension-registered native kernels
-    // (norm_text, word_shingles, jaccard_sim) by name — certifies the
-    // GraftExtensions registration end-to-end through the oracle, not
-    // just through Column-API call_function plumbing
-    "sql_surface" -> ((s, d) => {
-      Tables(s, d, "documents").createOrReplaceTempView("graft_documents")
-      s.sql(
-        """SELECT doc_id,
-          |  size(word_shingles(norm_text(text), 3)) AS n_shingles,
-          |  jaccard_sim(word_shingles(norm_text(text), 3),
-          |    word_shingles(norm_text(substring(text, 1, 200)), 3))
-          |    AS prefix_jaccard
-          |FROM graft_documents
-          |WHERE size(word_shingles(norm_text(text), 3)) > 0
-          |ORDER BY doc_id""".stripMargin)
-    }))
-
   private val N = "regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')"
   private def inList(l: Seq[String]) = l.map("'" + _ + "'").mkString("(", ",", ")")
   private def hits(l: Seq[String]) =
@@ -504,57 +459,44 @@ object TextOps {
        |bpe AS (SELECT doc_id, max(cnt) AS n FROM bwalk GROUP BY doc_id)"""
       .stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "sql_surface" ->
-      s"""WITH f AS (
-         |  SELECT doc_id, list_distinct(list_transform(
-         |    generate_series(1, len(l) - 2),
-         |    i -> array_to_string(l[i:i+2], ' '))) AS sh
-         |  FROM (SELECT doc_id, string_split($N, ' ') AS l FROM documents)
-         |  WHERE len(l) >= 3),
-         |p AS (
-         |  SELECT doc_id, list_distinct(list_transform(
-         |    generate_series(1, greatest(len(lp) - 2, 0)),
-         |    i -> array_to_string(lp[i:i+2], ' '))) AS shp
-         |  FROM (SELECT doc_id, string_split($NP, ' ') AS lp
-         |        FROM documents))
-         |SELECT f.doc_id, CAST(len(f.sh) AS INTEGER) AS n_shingles,
-         |  CAST(len(list_intersect(f.sh, p.shp)) AS DOUBLE)
-         |    / len(list_distinct(list_concat(f.sh, p.shp)))
-         |    AS prefix_jaccard
-         |FROM f JOIN p USING (doc_id) ORDER BY doc_id""".stripMargin,
-
-    "text_normalize" ->
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("text_normalize", (s, d) => normalized(Tables(s, d, "documents")),
       s"""SELECT doc_id, md5($N) AS content_hash,
          |CAST(length($N) AS INTEGER) AS n_chars_norm
-         |FROM documents ORDER BY doc_id""".stripMargin,
+         |FROM documents ORDER BY doc_id""".stripMargin),
 
-    "dedup_exact" ->
+    QuerySpec("dedup_exact", (s, d) => dedupExact(Tables(s, d, "documents")),
       s"""SELECT md5($N) AS content_hash, min(doc_id) AS keep_doc_id,
          |count(*) AS dup_count
-         |FROM documents GROUP BY 1 ORDER BY keep_doc_id""".stripMargin,
+         |FROM documents GROUP BY 1 ORDER BY keep_doc_id""".stripMargin),
 
-    "token_count" ->
+    QuerySpec("token_count", (s, d) => tokenCounts(Tables(s, d, "documents")),
       s"""SELECT doc_id, CAST(len(string_split($N, ' ')) AS INTEGER) AS ws_tokens,
          |CAST(len(regexp_extract_all($N, '[a-z]+|[0-9]+|[^a-z0-9 ]'))
          |  AS INTEGER) AS bpe_segments
-         |FROM documents ORDER BY doc_id""".stripMargin,
+         |FROM documents ORDER BY doc_id""".stripMargin),
 
-    // the greedy longest-match walk replayed via precomputed advance
-    // lists + a recursive step CTE — see bpeWalkCtes
-    "token_count_bpe" ->
+    // greedy-subword counting against the STAGED corpus-trained merge
+    // vocab (BpeVocab: vocab as data, trie matching in the kernel)
+    QuerySpec("token_count_bpe", (s, d) =>
+      tokenCountsBpe(Tables(s, d, "documents"), BpeVocab.pieces(s, d)),
+      // the greedy longest-match walk replayed via precomputed advance
+      // lists + a recursive step CTE — see bpeWalkCtes
       s"""WITH RECURSIVE $bpeWalkCtes
          |SELECT b.doc_id,
          |  CAST(len(string_split(d.s, ' ')) AS INTEGER) AS ws_tokens,
          |  CAST(b.n AS INTEGER) AS bpe_tokens
          |FROM bpe b JOIN bd d ON d.doc_id = b.doc_id
-         |ORDER BY b.doc_id""".stripMargin,
+         |ORDER BY b.doc_id""".stripMargin),
 
-    // the same advance walk, emitting each consumed slice: a walk row
-    // is the state BEFORE consuming at pos, so its cnt is the 0-based
-    // index of the piece about to be consumed; space steps (adv = -1)
-    // emit nothing
-    "token_split_bpe" ->
+    // the tokenization itself: one row per consumed subword unit, in
+    // walk order — the frame numericalization joins against the vocab
+    QuerySpec("token_split_bpe", (s, d) =>
+      tokenizeBpe(Tables(s, d, "documents"), BpeVocab.pieces(s, d)),
+      // the same advance walk, emitting each consumed slice: a walk row
+      // is the state BEFORE consuming at pos, so its cnt is the 0-based
+      // index of the piece about to be consumed; space steps (adv = -1)
+      // emit nothing
       s"""WITH RECURSIVE $bpeWalkCtes
          |SELECT w.doc_id, CAST(w.cnt AS INTEGER) AS token_idx,
          |  substr(d.s, w.pos, m.adv[w.pos]) AS piece
@@ -562,34 +504,19 @@ object TextOps {
          |JOIN bml m ON m.doc_id = w.doc_id
          |JOIN bd d ON d.doc_id = w.doc_id
          |WHERE w.pos <= len(m.adv) AND m.adv[w.pos] != -1
-         |ORDER BY w.doc_id, token_idx""".stripMargin,
+         |ORDER BY w.doc_id, token_idx""".stripMargin),
 
-    // per-source OOV telemetry: a consumed unit with advance 1 is the
-    // single-code-point fallback (learned pieces start at 2 chars)
-    "vocab_coverage" ->
-      s"""WITH RECURSIVE $bpeWalkCtes,
-         |oo AS (
-         |  SELECT w.doc_id,
-         |    sum(CASE WHEN m.adv[w.pos] = 1 THEN 1 ELSE 0 END) AS n_oov
-         |  FROM bwalk w JOIN bml m ON m.doc_id = w.doc_id
-         |  WHERE w.pos <= len(m.adv) AND m.adv[w.pos] != -1
-         |  GROUP BY w.doc_id)
-         |SELECT d.source, CAST(sum(b.n) AS BIGINT) AS n_tokens,
-         |  CAST(sum(coalesce(o.n_oov, 0)) AS BIGINT) AS n_oov,
-         |  CAST(sum(coalesce(o.n_oov, 0)) AS DOUBLE)
-         |    / nullif(CAST(sum(b.n) AS DOUBLE), 0) AS oov_rate
-         |FROM documents d JOIN bpe b ON b.doc_id = d.doc_id
-         |LEFT JOIN oo o ON o.doc_id = d.doc_id
-         |GROUP BY d.source ORDER BY d.source""".stripMargin,
-
-    // tokenization + id assignment: ids are the 0-based rank of the
-    // derived vocab by (count DESC, piece ASC) — the exact total order
-    // the training LIMIT cut on — and unmatched (single-code-point
-    // fallback) units map into the reserved range above the
-    // vocabulary: |V| + code point (DuckDB unicode() == the engine's
-    // UTF-32BE-derived code point), so OOV units stay distinguishable
-    // and the id stream reconstructs the text
-    "token_ids_bpe" ->
+    // tokenize -> deterministic vocab ids (OOV = |V| + code point)
+    QuerySpec("token_ids_bpe", (s, d) =>
+      tokenIdsBpe(Tables(s, d, "documents"),
+        BpeVocab.read(s, BpeVocab.fixtureStore(s, d))),
+      // tokenization + id assignment: ids are the 0-based rank of the
+      // derived vocab by (count DESC, piece ASC) — the exact total order
+      // the training LIMIT cut on — and unmatched (single-code-point
+      // fallback) units map into the reserved range above the
+      // vocabulary: |V| + code point (DuckDB unicode() == the engine's
+      // UTF-32BE-derived code point), so OOV units stay distinguishable
+      // and the id stream reconstructs the text
       s"""WITH RECURSIVE $bpeWalkCtes,
          |vid AS (
          |  SELECT piece, CAST(row_number() OVER (
@@ -606,9 +533,30 @@ object TextOps {
          |JOIN bd d ON d.doc_id = w.doc_id
          |LEFT JOIN vid v ON v.piece = substr(d.s, w.pos, m.adv[w.pos])
          |WHERE w.pos <= len(m.adv) AND m.adv[w.pos] != -1
-         |ORDER BY w.doc_id, token_idx""".stripMargin,
+         |ORDER BY w.doc_id, token_idx""".stripMargin),
 
-    "quality_score" ->
+    // per-source OOV rate — the tokenizer retrain signal
+    QuerySpec("vocab_coverage", (s, d) =>
+      vocabCoverage(Tables(s, d, "documents"), BpeVocab.pieces(s, d)),
+      // per-source OOV telemetry: a consumed unit with advance 1 is the
+      // single-code-point fallback (learned pieces start at 2 chars)
+      s"""WITH RECURSIVE $bpeWalkCtes,
+         |oo AS (
+         |  SELECT w.doc_id,
+         |    sum(CASE WHEN m.adv[w.pos] = 1 THEN 1 ELSE 0 END) AS n_oov
+         |  FROM bwalk w JOIN bml m ON m.doc_id = w.doc_id
+         |  WHERE w.pos <= len(m.adv) AND m.adv[w.pos] != -1
+         |  GROUP BY w.doc_id)
+         |SELECT d.source, CAST(sum(b.n) AS BIGINT) AS n_tokens,
+         |  CAST(sum(coalesce(o.n_oov, 0)) AS BIGINT) AS n_oov,
+         |  CAST(sum(coalesce(o.n_oov, 0)) AS DOUBLE)
+         |    / nullif(CAST(sum(b.n) AS DOUBLE), 0) AS oov_rate
+         |FROM documents d JOIN bpe b ON b.doc_id = d.doc_id
+         |LEFT JOIN oo o ON o.doc_id = d.doc_id
+         |GROUP BY d.source ORDER BY d.source""".stripMargin),
+
+    QuerySpec("quality_score", (s, d) =>
+      qualityScore(Tables(s, d, "documents")),
       s"""SELECT doc_id, CAST(length($N) AS INTEGER) AS n_chars,
          |CAST(len(string_split($N, ' ')) AS INTEGER) AS n_tokens,
          |CAST(length($N) AS DOUBLE) / len(string_split($N, ' '))
@@ -616,9 +564,9 @@ object TextOps {
          |CAST(${hits(enStop)} AS DOUBLE) / len(string_split($N, ' '))
          |  AS stopword_ratio,
          |$qualityExprSql AS quality
-         |FROM documents ORDER BY doc_id""".stripMargin,
+         |FROM documents ORDER BY doc_id""".stripMargin),
 
-    "lang_id" ->
+    QuerySpec("lang_id", (s, d) => langId(Tables(s, d, "documents")),
       s"""SELECT doc_id,
          |CAST(${hits(enStop)} AS INTEGER) AS en_hits,
          |CAST(${hits(esStop)} AS INTEGER) AS es_hits,
@@ -630,11 +578,13 @@ object TextOps {
          |       AND ${hits(esStop)} > 0 THEN 'es'
          |     WHEN ${hits(frStop)} > 0 THEN 'fr'
          |     ELSE 'und' END AS predicted_lang
-         |FROM documents ORDER BY doc_id""".stripMargin,
+         |FROM documents ORDER BY doc_id""".stripMargin),
 
-    // the argmax hit count is greatest() of the per-language hits; the
-    // composite reuses the quality formula with that ratio
-    "quality_score_lang" ->
+    // quality with the detected language's stopword model
+    QuerySpec("quality_score_lang", (s, d) =>
+      qualityScoreLang(Tables(s, d, "documents")),
+      // the argmax hit count is greatest() of the per-language hits; the
+      // composite reuses the quality formula with that ratio
       s"""SELECT doc_id,
          |CASE WHEN ${hits(enStop)} >= ${hits(esStop)}
          |       AND ${hits(enStop)} >= ${hits(frStop)}
@@ -651,15 +601,16 @@ object TextOps {
          |        ${hits(frStop)}) AS DOUBLE)
          |      / len(string_split($N, ' ')))
          |  AS quality_lang
-         |FROM documents ORDER BY doc_id""".stripMargin,
+         |FROM documents ORDER BY doc_id""".stripMargin),
 
-    "doc_fingerprint" ->
+    QuerySpec("doc_fingerprint", (s, d) =>
+      fingerprints(Tables(s, d, "documents")),
       s"""SELECT doc_id,
          |md5(array_to_string(list_sort(list_distinct(
          |  string_split($N, ' '))), ' ')) AS fingerprint
-         |FROM documents ORDER BY doc_id""".stripMargin,
+         |FROM documents ORDER BY doc_id""".stripMargin),
 
-    "doc_repetition" ->
+    QuerySpec("doc_repetition", (s, d) => repetition(Tables(s, d, "documents")),
       s"""SELECT doc_id,
          |CAST(len(l) - 2 AS INTEGER) AS total_shingles,
          |CAST(len(list_distinct(list_transform(
@@ -672,5 +623,39 @@ object TextOps {
          |  AS repetition_ratio
          |FROM (SELECT doc_id, string_split($N, ' ') AS l FROM documents)
          |WHERE len(l) >= 3
-         |ORDER BY doc_id""".stripMargin)
+         |ORDER BY doc_id""".stripMargin),
+    // the SQL surface itself: a user-written spark.sql statement over a
+    // registered view, calling the extension-registered native kernels
+    // (norm_text, word_shingles, jaccard_sim) by name — certifies the
+    // GraftExtensions registration end-to-end through the oracle, not
+    // just through Column-API call_function plumbing
+    QuerySpec("sql_surface", (s, d) => {
+      Tables(s, d, "documents").createOrReplaceTempView("graft_documents")
+      s.sql(
+        """SELECT doc_id,
+          |  size(word_shingles(norm_text(text), 3)) AS n_shingles,
+          |  jaccard_sim(word_shingles(norm_text(text), 3),
+          |    word_shingles(norm_text(substring(text, 1, 200)), 3))
+          |    AS prefix_jaccard
+          |FROM graft_documents
+          |WHERE size(word_shingles(norm_text(text), 3)) > 0
+          |ORDER BY doc_id""".stripMargin)
+    },
+      s"""WITH f AS (
+         |  SELECT doc_id, list_distinct(list_transform(
+         |    generate_series(1, len(l) - 2),
+         |    i -> array_to_string(l[i:i+2], ' '))) AS sh
+         |  FROM (SELECT doc_id, string_split($N, ' ') AS l FROM documents)
+         |  WHERE len(l) >= 3),
+         |p AS (
+         |  SELECT doc_id, list_distinct(list_transform(
+         |    generate_series(1, greatest(len(lp) - 2, 0)),
+         |    i -> array_to_string(lp[i:i+2], ' '))) AS shp
+         |  FROM (SELECT doc_id, string_split($NP, ' ') AS lp
+         |        FROM documents))
+         |SELECT f.doc_id, CAST(len(f.sh) AS INTEGER) AS n_shingles,
+         |  CAST(len(list_intersect(f.sh, p.shp)) AS DOUBLE)
+         |    / len(list_distinct(list_concat(f.sh, p.shp)))
+         |    AS prefix_jaccard
+         |FROM f JOIN p USING (doc_id) ORDER BY doc_id""".stripMargin))
 }

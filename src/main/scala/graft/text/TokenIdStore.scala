@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.{QueryModule, QuerySpec}
 import graft.sinks.StoreMaintenance
 import graft.sources.{Staging, Tables}
 
@@ -42,7 +43,7 @@ import graft.sources.{Staging, Tables}
   * ordinary compaction cadence.
   */
 object TokenIdStore extends graft.sinks.KeyedStore(
-  Seq("doc_id", "token_idx", "vocab_version")) {
+  Seq("doc_id", "token_idx", "vocab_version")) with QueryModule {
 
   /** Numericalize `docs` under `vocab`, tagging every id row with the
     * id-space version it was minted under — the append-side derivation
@@ -141,9 +142,7 @@ object TokenIdStore extends graft.sinks.KeyedStore(
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
     }
 
-  type Q = (SparkSession, String) => DataFrame
-
-  val queries: Map[String, Q] = Map(
+  val specs: Seq[QuerySpec] = Seq(
     // the vocab-version lifecycle end to end: ids seeded under the
     // frequency vocab (v1), the learned merge vocab swapped in (v2),
     // the sweep re-numericalized — output must equal a fresh
@@ -152,32 +151,29 @@ object TokenIdStore extends graft.sinks.KeyedStore(
     // per corpus token under a tiny learned vocab), and a global
     // ordering is no part of the store's contract — a training job
     // reads per-shard order from epoch_shuffle, never a corpus sort
-    "token_ids_renumber" -> ((s, d) =>
-      read(s, fixtureRenumberedStore(s, d))),
+    QuerySpec("token_ids_renumber", (s, d) =>
+      read(s, fixtureRenumberedStore(s, d)),
+      // the fresh numericalization under the LEARNED vocabulary,
+      // re-derived from the merge chain: ids are the 0-based rank of
+      // distinct learned pieces by earliest merge rank (== idFrame's
+      // (n_occurrences DESC, piece ASC) under mergeVocab's rank-derived
+      // counts), OOV units map to |V| + code point
+      BpeMerges.learnedIdsSql),
     // the store's LOSSLESSNESS contract as an operator: the renumbered
     // store's ids — no piece strings, ids alone — decoded under the
     // learned vocabulary and compared against each doc's normalized
     // text (spaces stripped: the walk consumes them tokenlessly).
     // ok = true everywhere IS the "ids reconstruct the text" scaladoc
     // claim, machine-checked per doc
-    "token_decode" -> ((s, d) =>
+    QuerySpec("token_decode", (s, d) =>
       TextOps.decodeRoundTrip(
         read(s, fixtureRenumberedStore(s, d)),
         Tables(s, d, "documents"),
-        BpeMerges.mergeVocab(s, d)).orderBy(col("doc_id"))))
-
-  val oracle: Map[String, String] = Map(
-    // the fresh numericalization under the LEARNED vocabulary,
-    // re-derived from the merge chain: ids are the 0-based rank of
-    // distinct learned pieces by earliest merge rank (== idFrame's
-    // (n_occurrences DESC, piece ASC) under mergeVocab's rank-derived
-    // counts), OOV units map to |V| + code point
-    "token_ids_renumber" -> BpeMerges.learnedIdsSql,
-    // decode replay: the learned-id stream joined back to the piece
-    // table (OOV ids through chr(id − |V|) — the codepoint_char
-    // kernel's DuckDB twin), reassembled in token order, compared to
-    // the space-stripped normalization
-    "token_decode" ->
+        BpeMerges.mergeVocab(s, d)).orderBy(col("doc_id")),
+      // decode replay: the learned-id stream joined back to the piece
+      // table (OOV ids through chr(id − |V|) — the codepoint_char
+      // kernel's DuckDB twin), reassembled in token order, compared to
+      // the space-stripped normalization
       s"""WITH RECURSIVE ${BpeMerges.learnedIdsCtes},
          |dec AS (
          |  SELECT l.doc_id, count(*) AS n_tokens,
@@ -190,5 +186,5 @@ object TokenIdStore extends graft.sinks.KeyedStore(
          |SELECT dec.doc_id, CAST(n_tokens AS INTEGER) AS n_tokens,
          |  (decoded = replace(d.s, ' ', '')) AS ok
          |FROM dec JOIN lbd d ON d.doc_id = dec.doc_id
-         |ORDER BY dec.doc_id""".stripMargin)
+         |ORDER BY dec.doc_id""".stripMargin))
 }

@@ -1,8 +1,9 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.{QueryModule, QuerySpec}
 import graft.sources.Tables
 import graft.text.TextOps.norm
 
@@ -14,9 +15,7 @@ import graft.text.TextOps.norm
   * O(vocabulary), not O(tokens)); the histogram is one bucketed
   * aggregate.
   */
-object Vocab {
-  type Q = (SparkSession, String) => DataFrame
-
+object Vocab extends QueryModule {
   /** Top-k corpus terms by document frequency and total count,
     * tie-broken by token for determinism. */
   def topTerms(docs: DataFrame, k: Int): DataFrame =
@@ -284,20 +283,6 @@ object Vocab {
         (col("pred_source") === col("source")).as("is_match"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "domain_classify" -> ((s, d) =>
-      domainClassify(Tables(s, d, "documents"))),
-    "domain_classify_bucketed" -> ((s, d) =>
-      domainClassify(Tables(s, d, "documents"), broadcastModel = false)),
-    "source_logodds" -> ((s, d) =>
-      sourceLogOdds(Tables(s, d, "documents"))),
-    "lm_bigram_score" -> ((s, d) =>
-      lmBigramScore(Tables(s, d, "documents"))),
-    "vocab_topk" -> ((s, d) => topTerms(Tables(s, d, "documents"), 50)),
-    "tfidf_topk" -> ((s, d) => tfidfTopK(Tables(s, d, "documents"), 20, 3)),
-    "length_histogram" -> ((s, d) =>
-      lengthHistogram(Tables(s, d, "documents"))))
-
   private val N = "regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')"
 
   // NB domain classification replayed exactly: same add-one unigram
@@ -335,11 +320,16 @@ object Vocab {
          |        ORDER BY score_e6 DESC, s ASC) AS rn FROM sc)
          |WHERE rn = 1 ORDER BY doc_id""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "domain_classify" -> domainClassifySql,
-    "domain_classify_bucketed" -> domainClassifySql,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("domain_classify", (s, d) =>
+      domainClassify(Tables(s, d, "documents")),
+      domainClassifySql),
+    QuerySpec("domain_classify_bucketed", (s, d) =>
+      domainClassify(Tables(s, d, "documents"), broadcastModel = false),
+      domainClassifySql),
 
-    "source_logodds" ->
+    QuerySpec("source_logodds", (s, d) =>
+      sourceLogOdds(Tables(s, d, "documents")),
       s"""WITH toks AS (
          |  SELECT source, unnest(string_split($N, ' ')) AS w
          |  FROM documents),
@@ -365,11 +355,12 @@ object Vocab {
          |  w AS token, cws AS n_in_source, lor
          |FROM l
          |QUALIFY rank <= 3
-         |ORDER BY source, rank""".stripMargin,
+         |ORDER BY source, rank""".stripMargin),
 
-    // aligned-slice zip-unnest generates per-occurrence bigrams; the
-    // quantize-then-sum discipline mirrors the engine exactly
-    "lm_bigram_score" ->
+    QuerySpec("lm_bigram_score", (s, d) =>
+      lmBigramScore(Tables(s, d, "documents")),
+      // aligned-slice zip-unnest generates per-occurrence bigrams; the
+      // quantize-then-sum discipline mirrors the engine exactly
       s"""WITH t AS (SELECT doc_id, string_split($N, ' ') AS l
          |           FROM documents),
          |uni AS (
@@ -394,18 +385,19 @@ object Vocab {
          |  CAST(sum(q) AS BIGINT) AS logprob_e6,
          |  CAST(sum(q) AS DOUBLE) / (1000000.0 * count(*))
          |    AS avg_logprob
-         |FROM q GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+         |FROM q GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
-    "vocab_topk" ->
+    QuerySpec("vocab_topk", (s, d) => topTerms(Tables(s, d, "documents"), 50),
       s"""SELECT token, count(*) AS occurrences,
          |count(DISTINCT doc_id) AS doc_freq
          |FROM (SELECT doc_id, unnest(string_split($N, ' ')) AS token
          |      FROM documents)
          |GROUP BY token
          |ORDER BY occurrences DESC, doc_freq DESC, token ASC
-         |LIMIT 50""".stripMargin,
+         |LIMIT 50""".stripMargin),
 
-    "tfidf_topk" ->
+    QuerySpec("tfidf_topk", (s, d) =>
+      tfidfTopK(Tables(s, d, "documents"), 20, 3),
       s"""WITH toks AS (
          |  SELECT doc_id, unnest(string_split($N, ' ')) AS token
          |  FROM documents),
@@ -425,10 +417,11 @@ object Vocab {
          |    * ln(CAST(n.n AS DOUBLE) / CAST(dfreq.df AS DOUBLE)), 6) AS tfidf
          |FROM tf JOIN dfreq USING (token), n
          |QUALIFY rank <= 3
-         |ORDER BY doc_id, rank""".stripMargin,
+         |ORDER BY doc_id, rank""".stripMargin),
 
-    "length_histogram" ->
+    QuerySpec("length_histogram", (s, d) =>
+      lengthHistogram(Tables(s, d, "documents")),
       s"""SELECT (len(string_split($N, ' ')) // 10) * 10 AS bucket,
          |count(*) AS docs
-         |FROM documents GROUP BY 1 ORDER BY bucket""".stripMargin)
+         |FROM documents GROUP BY 1 ORDER BY bucket""".stripMargin))
 }

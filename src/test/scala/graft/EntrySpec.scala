@@ -9,25 +9,16 @@ package graft
   * unsetting both confs on the shared session before the call. */
 class EntrySpec extends SparkSpec {
 
-  test("every registered query carries an oracle, and vice versa") {
-    // the CORRECTNESS gate hashes queries against oracleSql by name: a
-    // query without an oracle silently downgrades to a rows-only check,
-    // an oracle without a query never runs — both are registry bugs
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert((q -- o).isEmpty, s"queries without an oracle: ${q -- o}")
-    assert((o -- q).isEmpty, s"oracles without a query: ${o -- q}")
-  }
-
-  test("no query or oracle name is registered by two modules") {
-    // queries and oracleSql are unions of the modules' maps, and `++`
-    // keeps the last entry for a repeated key without a word
-    def repeated(names: Seq[String]) =
-      names.groupBy(identity).collect { case (n, ns) if ns.size > 1 => n }
-    val qs = repeated(SparkEntry.modules.flatMap(_._1.keys))
-    assert(qs.isEmpty, s"query names registered twice: $qs")
-    val os = repeated(SparkEntry.modules.flatMap(_._2.keys))
-    assert(os.isEmpty, s"oracle names registered twice: $os")
+  test("every query name is registered exactly once") {
+    // a QuerySpec carries its oracle, so no query can lack one; but
+    // queries and oracleSql key by name, and a repeated name (in two
+    // modules or twice in one) would silently keep only one entry
+    val names = SparkEntry.modules.flatMap(_.specs.map(_.name))
+    val repeated = names.groupBy(identity)
+      .collect { case (n, ns) if ns.size > 1 => n -> ns.size }
+    assert(repeated.isEmpty, s"query names registered more than once: $repeated")
+    assert(SparkEntry.queries.keySet == names.toSet)
+    assert(SparkEntry.oracleSql.keySet == names.toSet)
   }
 
   test("README's query and SQL function counts match the registries") {

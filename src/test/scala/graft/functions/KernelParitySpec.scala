@@ -23,9 +23,10 @@ class KernelParitySpec extends SparkSpec {
     * (codegen failures throw instead of falling back), checks the
     * kernel sits inside a whole-stage codegen stage, and compares every
     * row with `kernel(literal args).eval`, converted to the Row's
-    * external type (strings, arrays). Doubles compare by `equals`, so a
-    * NaN matches a NaN. */
-  private def assertParity(name: String, in: DataFrame, extra: String*)(
+    * external type (strings, arrays, structs). `extra` are literal
+    * values (strings, numbers, arrays) appended on both paths. Doubles
+    * compare by `equals`, so a NaN matches a NaN. */
+  private def assertParity(name: String, in: DataFrame, extra: Any*)(
       kernel: Seq[Expression] => Expression): Unit = {
     val confs = Seq("spark.sql.codegen.fallback" -> "false",
       "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
@@ -51,7 +52,8 @@ class KernelParitySpec extends SparkSpec {
           CatalystTypeConverters.convertToScala(k.eval(null), k.dataType),
           r.get(n))
       }
-      assert(bad.isEmpty, s"$name($extra): codegen != eval on " +
+      assert(bad.isEmpty, s"$name(${extra.map(lit).mkString(", ")}): " +
+        "codegen != eval on " +
         bad.take(3).map(_.get(0)).mkString("; "))
     } finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
@@ -142,5 +144,80 @@ class KernelParitySpec extends SparkSpec {
       .filter(col("id") < 0xD800 || col("id") > 0xDFFF)
       .select(col("id").cast("int").as("x"))
     assertParity("codepoint_char", cps)(c => CodePointChar(c.head))
+  }
+
+  test("word_shingles, word_shingles_all and minhash_bands: codegen equals eval on fixture text") {
+    // normalized text, checkpointed so the kernels read an RDD scan; the
+    // default width (1 argument) and explicit ones, including widths
+    // longer than some docs (empty arrays)
+    val texts = docs.select(graft.text.TextOps.norm(col("text")).as("x"))
+      .localCheckpoint()
+    assertParity("word_shingles", texts)(c => WordShingles(c.head, Literal(3)))
+    for (n <- Seq(1, 2, 5, 40)) {
+      assertParity("word_shingles", texts, n)(c => WordShingles(c(0), c(1)))
+      assertParity("word_shingles_all", texts, n)(c =>
+        WordShinglesAll(c(0), c(1)))
+    }
+    // shingle arrays with null elements mixed in, arrays of nulls only
+    // and empty arrays: both of the last give NULL
+    val sh = call_function("word_shingles", graft.text.TextOps.norm(col("text")))
+    val nul = lit(null).cast("string")
+    val arrays = docs.select(
+      when(col("doc_id") % 5 === 0, array_union(sh, array(nul)))
+        .when(col("doc_id") % 7 === 0, array(nul))
+        .when(col("doc_id") % 11 === 0, array().cast("array<string>"))
+        .otherwise(sh).as("x"))
+      .localCheckpoint()
+    assertParity("minhash_bands", arrays)(c => MinhashBands(c.head))
+  }
+
+  test("hamming_near_pairs and cosine_near_pairs: codegen equals eval on bucketed members") {
+    // one bucket per doc_id % 20: 8-bit signatures, so small Hamming
+    // limits keep some pairs; null members and null signatures skipped
+    val sig = when(col("doc_id") % 11 === 0, lit(null).cast("long"))
+      .otherwise(xxhash64(col("doc_id")).bitwiseAND(255L))
+    val hb = docs.groupBy(col("doc_id") % 20)
+      .agg(collect_list(struct(col("doc_id"), sig.as("sig"))).as("x"))
+      .select(col("x")).localCheckpoint()
+    for (h <- Seq(0, 2, 64))
+      assertParity("hamming_near_pairs", hb, h)(c => HammingNearPairs(c(0), c(1)))
+    // quantized embeddings, zero vectors (NaN cosine, never emitted)
+    // and members with a null norm among them
+    val q = transform(col("embedding"), e => round(e * 1000).cast("long"))
+    val v = when(col("vec_id") % 13 === 0, array_repeat(lit(0L), 64))
+      .otherwise(q)
+    val n2 = aggregate(v, lit(0L), (a, x) => a + x * x)
+    val cb = spark.read.parquet(s"$sf/embeddings.parquet")
+      .groupBy(col("vec_id") % 8)
+      .agg(collect_list(struct(col("vec_id"), v.as("v"),
+        when(col("vec_id") % 17 === 0, lit(null).cast("long"))
+          .otherwise(n2).as("n2"))).as("x"))
+      .select(col("x")).localCheckpoint()
+    for (t <- Seq(-1.0, 0.0, 0.1))
+      assertParity("cosine_near_pairs", cb, t)(c => CosineNearPairs(c(0), c(1)))
+  }
+
+  test("nearest_cell: codegen equals eval against constant centroids") {
+    val q = transform(col("embedding"), e => round(e * 1000).cast("long"))
+    val vecs = spark.read.parquet(s"$sf/embeddings.parquet")
+      .select(q.as("x")).localCheckpoint()
+    // three fixture vectors and a repeat of the first as centroids: the
+    // first and last cells tie on every row, and the first must win
+    val cents = vecs.head(3).map(_.getSeq[Long](0).toArray).toSeq
+    val all = cents :+ cents.head
+    val flat = all.flatten.toArray
+    val c2s = all.map(c => c.map(x => x * x).sum).toArray
+    assertParity("nearest_cell", vecs, flat, Array(2, 5, 7, 9), c2s)(c =>
+      NearestCell(c(0), c(1), c(2), c(3)))
+  }
+
+  test("bpe_count and bpe_split: codegen equals eval on fixture text") {
+    // pieces of several lengths sharing prefixes, so the longest match
+    // and the single-character fallback both occur
+    val pieces = Seq("t", "th", "the", "in", "ing", "an", "and", "er", "re", "tion")
+    val texts = docs.select(graft.text.TextOps.norm(col("text")).as("x"))
+      .localCheckpoint()
+    assertParity("bpe_count", texts, pieces: _*)(c => BpeCount(c.head, c.tail, Nil))
+    assertParity("bpe_split", texts, pieces: _*)(c => BpeSplit(c.head, c.tail, Nil))
   }
 }
