@@ -9,16 +9,27 @@ package graft
   * unsetting both confs on the shared session before the call. */
 class EntrySpec extends SparkSpec {
 
-  test("every query name is registered exactly once") {
-    // a QuerySpec carries its oracle, so no query can lack one; but
-    // queries and oracleSql key by name, and a repeated name (in two
-    // modules or twice in one) would silently keep only one entry
+  test("every registered query carries an oracle, and vice versa") {
+    // the CORRECTNESS gate hashes queries against oracleSql by name: a
+    // query without an oracle silently downgrades to a rows-only check,
+    // an oracle without a query never runs — both are registry bugs
+    val q = SparkEntry.queries.keySet
+    val o = SparkEntry.oracleSql.keySet
+    assert((q -- o).isEmpty, s"queries without an oracle: ${q -- o}")
+    assert((o -- q).isEmpty, s"oracles without a query: ${o -- q}")
+    val names = SparkEntry.modules.flatMap(_.specs.map(_.name)).toSet
+    assert(q == names, s"queries not from a spec: ${q -- names}; " +
+      s"specs missing from queries: ${names -- q}")
+  }
+
+  test("no query or oracle name is registered by two modules") {
+    // queries and oracleSql key by spec name, and building a Map keeps
+    // the last entry for a repeated name without a word — whether the
+    // name repeats in two modules or twice within one
     val names = SparkEntry.modules.flatMap(_.specs.map(_.name))
     val repeated = names.groupBy(identity)
       .collect { case (n, ns) if ns.size > 1 => n -> ns.size }
     assert(repeated.isEmpty, s"query names registered more than once: $repeated")
-    assert(SparkEntry.queries.keySet == names.toSet)
-    assert(SparkEntry.oracleSql.keySet == names.toSet)
   }
 
   test("README's query and SQL function counts match the registries") {
