@@ -15,15 +15,16 @@ import graft.functions.Books
   * (`current_kalshi_data` / `current_polymarket_data`).
   *
   * Shape: the Kalshi leg and the Polymarket leg (routed onto the Kalshi
-  * ticker through the broadcast pairs dimension) are unioned and grouped
-  * by `kalshi_ticker` into one `flatMapGroupsWithState` with an event-time
-  * timeout: one shuffle and one state store per shuffle partition. A key's
-  * state holds each leg's rows still inside `ts + W`; each new row pairs
-  * with the other leg's held rows and new rows, so the operator emits
-  * exactly the pairs `p.ts BETWEEN k.ts - W AND k.ts + W` of an interval
-  * join over the same watermarked legs. Rows behind the watermark are
-  * dropped on the way in (ST2), and a held row leaves the state once
-  * `ts + W` falls behind the watermark. Margins and thresholds are the same
+  * ticker through the pairs dimension, read once when the query is built)
+  * are unioned and grouped by `kalshi_ticker` into one
+  * `flatMapGroupsWithState` with an event-time timeout: one shuffle and
+  * one state store per shuffle partition. A key's state is one binary
+  * column ([[HeldCodec]]) holding each leg's rows still inside `ts + W`;
+  * each new row pairs with the other leg's held rows and new rows, so the
+  * operator emits exactly the pairs `p.ts BETWEEN k.ts - W AND k.ts + W`
+  * of an interval join over the same watermarked legs. Rows behind the
+  * watermark are dropped on the way in (ST2), and a held row leaves the
+  * state once `ts + W` falls behind the watermark. Margins and thresholds are the same
   * codegen'd arithmetic as the batch scanner, applied after the operator,
   * so streaming and batch scans agree row-for-row on the same inputs.
   */
@@ -58,6 +59,57 @@ object StreamScanner {
   /** A key's state: each leg's rows still inside `ts + W`. */
   case class Held(k: Seq[Leg], p: Seq[Leg])
 
+  /** [[Held]] as the bytes the state store keeps: per leg the count of
+    * held rows, then per row its event time in µs, a null mask and the
+    * non-null `yes`, `no` and `condition_id`. The key is the group key and
+    * is not stored. A flat binary state spares every task of every
+    * micro-batch generating (de)serializers for a nested `Seq[Leg]`. */
+  private[streaming] object HeldCodec {
+    private val Utf8 = java.nio.charset.StandardCharsets.UTF_8
+
+    def encode(held: Held): Array[Byte] = {
+      val bytes = new java.io.ByteArrayOutputStream()
+      val out = new java.io.DataOutputStream(bytes)
+      def leg(rows: Seq[Leg]): Unit = {
+        out.writeInt(rows.size)
+        rows.foreach { l =>
+          out.writeLong(micros(l.ts))
+          out.writeByte((if (l.yes != null) 1 else 0) | (if (l.no != null) 2 else 0) |
+            (if (l.condition_id != null) 4 else 0))
+          if (l.yes != null) out.writeDouble(l.yes)
+          if (l.no != null) out.writeDouble(l.no)
+          if (l.condition_id != null) {
+            val id = l.condition_id.getBytes(Utf8)
+            out.writeInt(id.length)
+            out.write(id)
+          }
+        }
+      }
+      leg(held.k)
+      leg(held.p)
+      out.flush()
+      bytes.toByteArray
+    }
+
+    def decode(key: String, state: Array[Byte]): Held = {
+      val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(state))
+      def leg(kalshi: Boolean): Seq[Leg] = Seq.fill(in.readInt()) {
+        val us = in.readLong()
+        val mask = in.readByte()
+        val yes = if ((mask & 1) != 0) java.lang.Double.valueOf(in.readDouble()) else null
+        val no = if ((mask & 2) != 0) java.lang.Double.valueOf(in.readDouble()) else null
+        val id = if ((mask & 4) != 0) {
+          val b = new Array[Byte](in.readInt())
+          in.readFully(b)
+          new String(b, Utf8)
+        } else null
+        Leg(key, kalshi, Instant.ofEpochSecond(Math.floorDiv(us, 1000000L),
+          Math.floorMod(us, 1000000L) * 1000L), yes, no, id)
+      }
+      Held(leg(kalshi = true), leg(kalshi = false)) // in written order
+    }
+  }
+
   /** One (Kalshi, Polymarket) pair inside the window. */
   case class Pair(kalshi_ticker: String, condition_id: String,
                   k_ts: Instant, p_ts: Instant,
@@ -77,9 +129,9 @@ object StreamScanner {
     * batch's watermark, so a row admitted this batch may still meet one
     * this batch's watermark expires. */
   private def pairUp(windowUs: Long)(key: String, rows: Iterator[Leg],
-                                     state: GroupState[Held]): Iterator[Pair] = {
+                                     state: GroupState[Array[Byte]]): Iterator[Pair] = {
     if (key == null) return Iterator.empty // an equi-key never matches null
-    val held = state.getOption.getOrElse(Held(Nil, Nil))
+    val held = state.getOption.map(HeldCodec.decode(key, _)).getOrElse(Held(Nil, Nil))
     val (newK, newP) = rows.filter(_.ts != null).toSeq.partition(_.kalshi)
     val allK = held.k ++ newK
     val allP = held.p ++ newP
@@ -93,7 +145,7 @@ object StreamScanner {
     val keep = Held(allK.filter(live), allP.filter(live))
     if (keep.k.isEmpty && keep.p.isEmpty) state.remove()
     else {
-      state.update(keep)
+      state.update(HeldCodec.encode(keep))
       // fires once the watermark reaches the earliest `ts + W` (ms)
       val expiryUs = (keep.k ++ keep.p).map(l => micros(l.ts)).min + windowUs
       state.setTimeoutTimestamp(math.max(1L, Math.floorDiv(expiryUs - 1, 1000L)))
@@ -101,18 +153,43 @@ object StreamScanner {
     out.iterator
   }
 
+  /** Most `pairs` rows [[scan]] routes on. The dimension is collected to
+    * the driver and travels in the plan as a literal map, so it must stay
+    * small; the reference subscribes to tens of pairs. */
+  val MaxPairs = 10000
+
+  /** The pairs dimension as `condition_id → kalshi tickers`, one ticker per
+    * row: a duplicated row routes twice and a null condition id routes
+    * nothing, as the equi-join it replaces. Fails above [[MaxPairs]]
+    * rows, having collected at most one more. */
+  private[streaming] def routes(pairs: DataFrame): Map[String, Seq[String]] = {
+    val rows = pairs.select(col("polymarket_condition_id").cast("string"),
+        col("kalshi_ticker").cast("string"))
+      .filter(col("polymarket_condition_id").isNotNull)
+      .limit(MaxPairs + 1).collect()
+    if (rows.length > MaxPairs)
+      throw new IllegalArgumentException(s"the pairs dimension has more than " +
+        s"$MaxPairs rows with a condition id (StreamScanner.MaxPairs); route " +
+        "a larger dimension per micro-batch with Replay.routedStream")
+    rows.toSeq.groupMap(_.getString(0))(_.getString(1))
+  }
+
   /** Stream-stream scan: route the Polymarket leg onto the Kalshi ticker
-    * through the (broadcast) pairs dimension, pair the legs within
-    * ±`windowSec` of event time in one keyed operator, emit thresholded
-    * best-side opportunities. `pairs` maps kalshi_ticker ↔
-    * polymarket_condition_id (static dimension). */
+    * through the pairs dimension, pair the legs within ±`windowSec` of
+    * event time in one keyed operator, emit thresholded best-side
+    * opportunities. `pairs` maps kalshi_ticker ↔ polymarket_condition_id
+    * (static dimension). It is read once, when the query is built, and
+    * routes through a literal map (no per-batch broadcast join); a
+    * dimension that must refresh every micro-batch goes through
+    * [[Replay.routedStream]]. */
   def scan(kalshi: DataFrame, poly: DataFrame, pairs: DataFrame,
            windowSec: Long = 60, minProfitThreshold: Double = 0.02)
   : DataFrame = {
     import kalshi.sparkSession.implicits._
-    // route the poly leg onto the kalshi ticker via the dimension (J2/J3)
-    val routedPoly = poly.join(broadcast(pairs),
-      col("condition_id") === col("polymarket_condition_id"))
+    // route the poly leg onto the kalshi ticker via the dimension (J2/J3):
+    // one output row per ticker the condition id maps to, none if unmapped
+    val routedPoly = poly.withColumn("kalshi_ticker",
+      explode(element_at(typedLit(routes(pairs)), col("condition_id"))))
     val legs = kalshi.select(col("kalshi_ticker"), lit(true).as("kalshi"),
       col("k_ts").as("ts"), col("k_yes_bid").as("yes"),
       col("k_no_bid").as("no"), lit(null).cast("string").as("condition_id"))
@@ -121,7 +198,7 @@ object StreamScanner {
         col("condition_id")))
 
     legs.as[Leg].groupByKey(_.kalshi_ticker)
-      .flatMapGroupsWithState(OutputMode.Append(),
+      .flatMapGroupsWithState[Array[Byte], Pair](OutputMode.Append(),
         GroupStateTimeout.EventTimeTimeout())(pairUp(windowSec * 1000000L))
       .withColumn("m_yes", (col("k_yes_bid") - col("p_yes")) / col("p_yes"))
       .withColumn("m_no", (col("k_no_bid") - col("p_no")) / col("p_no"))

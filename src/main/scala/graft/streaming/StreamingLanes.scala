@@ -1229,12 +1229,29 @@ object StreamingLanes {
     }
   }
 
+  /** `df` coalesced to one partition per `spark.sql.files.maxPartitionBytes`
+    * (the split size Spark reads files with) of its estimated size, so a
+    * small micro-batch appends one file per partition directory and a
+    * large one keeps a task per split. The partition count never rises,
+    * and a frame whose size the optimizer does not know is left as it is. */
+  private def sizedByBytes(df: DataFrame): DataFrame = {
+    val conf = df.sparkSession.sessionState.conf
+    val size = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (size >= conf.defaultSizeInBytes) df
+    else {
+      val split = BigInt(conf.filesMaxPartitionBytes)
+      df.coalesce(((size + split - 1) / split).max(1).min(Int.MaxValue).toInt)
+    }
+  }
+
   /** S5/S6: dual-lane bifurcation — one foreachBatch, two sinks. The
     * storage lane appends Parquet partitioned by (source, date) (the
     * low-cardinality layout the reference chose for series pruning); the
     * trading lane is any batch callback (the scanner in production,
-    * an assertion buffer in tests). 5 s trigger mirrors the reference's
-    * flush interval. */
+    * an assertion buffer in tests). Each micro-batch is first sized by
+    * its bytes ([[sizedByBytes]]): a small batch writes one file per
+    * (source, date), so the store's readers list and open fewer. 5 s
+    * trigger mirrors the reference's flush interval. */
   def bifurcated(stream: DataFrame, storageDir: String,
                  tradingLane: (DataFrame, Long) => Unit,
                  trigger: Trigger = Trigger.ProcessingTime("5 seconds"))
@@ -1243,9 +1260,9 @@ object StreamingLanes {
       .trigger(trigger)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val enriched = withIngestStamps(batch, batchId)
+        val enriched = sizedByBytes(withIngestStamps(batch, batchId)
           .withColumn("date", to_date(col("ts")))
-          .withColumn("batch_id", lit(batchId))
+          .withColumn("batch_id", lit(batchId)))
         enriched.persist()
         try {
           // storage lane: partitioned append. A replayed batch (failure

@@ -279,6 +279,84 @@ class StreamScannerSpec extends SparkSpec {
     assert(stateRows.last === 0L, stateRows)
   }
 
+  // --- routing through the pairs dimension ----------------------------
+  // The expected pairs are literals: the broadcast equi-join the literal
+  // routing map replaced emitted exactly these on the same inputs.
+
+  /** Feeds each of `batches` as one micro-batch of the scan routed by
+    * `dim` and returns the emitted (kalshi_ticker, condition_id, k_ts,
+    * p_ts) rows, times in µs, sorted. */
+  private def routedBatches(name: String, dim: DataFrame, batches: Seq[Seq[Snap]])
+  : Seq[(String, String, Long, Long)] = {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Snap]
+    val df = mem.toDF()
+    val q = StreamScanner.scan(
+      StreamScanner.kalshiLeg(df), StreamScanner.polyLeg(df), dim)
+      .writeStream.format("memory").queryName(name)
+      .outputMode(OutputMode.Append()).start()
+    try batches.foreach { b => mem.addData(b); q.processAllAvailable() }
+    finally q.stop()
+    def us(t: Timestamp) = Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
+    spark.table(name).collect().toSeq.map(r => (r.getAs[String]("kalshi_ticker"),
+      r.getAs[String]("condition_id"), us(r.getAs[Timestamp]("k_ts")),
+      us(r.getAs[Timestamp]("p_ts")))).sorted
+  }
+
+  test("a condition id mapped to two Kalshi tickers pairs on both") {
+    val dim = Seq(("K1", "0xc1"), ("K2", "0xc1"))
+      .toDF("kalshi_ticker", "polymarket_condition_id")
+    val out = routedBatches("route_two", dim,
+      Seq(Seq(kAt(T0), kAt(T0, "K2")), Seq(pAt(T0 + 1000000L))))
+    assert(out === Seq(("K1", "0xc1", T0, T0 + 1000000L),
+      ("K2", "0xc1", T0, T0 + 1000000L)))
+  }
+
+  test("a duplicated dimension row duplicates its pairs") {
+    val dim = Seq(("K1", "0xc1"), ("K1", "0xc1"))
+      .toDF("kalshi_ticker", "polymarket_condition_id")
+    // one routed row held across a batch, one met in its own batch
+    val out = routedBatches("route_dup", dim,
+      Seq(Seq(pAt(T0)), Seq(kAt(T0 + 1000000L), pAt(T0 + 2000000L))))
+    assert(out === Seq(("K1", "0xc1", T0 + 1000000L, T0),
+      ("K1", "0xc1", T0 + 1000000L, T0),
+      ("K1", "0xc1", T0 + 1000000L, T0 + 2000000L),
+      ("K1", "0xc1", T0 + 1000000L, T0 + 2000000L)))
+  }
+
+  test("a null polymarket_condition_id routes nothing") {
+    val dim = Seq[(String, String)](("K1", null), ("K2", "0xc1"))
+      .toDF("kalshi_ticker", "polymarket_condition_id")
+    val out = routedBatches("route_null", dim,
+      Seq(Seq(kAt(T0), kAt(T0, "K2"), pAt(T0, null), pAt(T0 + 1000000L))))
+    assert(out === Seq(("K2", "0xc1", T0, T0 + 1000000L)))
+  }
+
+  test("a pairs dimension above the row bound fails with the bound in the message") {
+    import org.apache.spark.sql.functions.{concat, lit}
+    val dim = spark.range(StreamScanner.MaxPairs + 1L).select(
+      concat(lit("K"), $"id".cast("string")).as("kalshi_ticker"),
+      concat(lit("0x"), $"id".cast("string")).as("polymarket_condition_id"))
+    val df = Seq(kAt(T0)).toDF()
+    val e = intercept[IllegalArgumentException](StreamScanner.scan(
+      StreamScanner.kalshiLeg(df), StreamScanner.polyLeg(df), dim))
+    assert(e.getMessage.contains(StreamScanner.MaxPairs.toString), e.getMessage)
+  }
+
+  test("the state codec round-trips nulls, pre-epoch times and non-ASCII ids") {
+    import java.time.Instant
+    import StreamScanner.{Held, HeldCodec, Leg}
+    val t = Instant.ofEpochSecond(-86401L, 999999000L) // 1 µs before a second
+    val held = Held(
+      Seq(Leg("K1", kalshi = true, t, 0.45, null, null),
+        Leg("K1", kalshi = true, Instant.ofEpochSecond(1700000000L), null, 0.54, null)),
+      Seq(Leg("K1", kalshi = false, Instant.EPOCH, 0.4, 0.6, "0xc1"),
+        Leg("K1", kalshi = false, t.plusNanos(1000L), null, null, "条件-é"),
+        Leg("K1", kalshi = false, t, 0.4, 0.6, null)))
+    assert(HeldCodec.decode("K1", HeldCodec.encode(held)) === held)
+    assert(HeldCodec.decode("K1", HeldCodec.encode(Held(Nil, Nil))) === Held(Nil, Nil))
+  }
+
   test("flatMapGroupsWithState keeps the newest value per series (TTL state)") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[SnapIn]

@@ -119,6 +119,49 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("the storage append writes one file per (source, date) per maxPartitionBytes of batch") {
+    // 40 rows on two venues and two dates, dealt round-robin into four
+    // files, so every (source, date) has rows in more than one file and a
+    // task per file writes more than one part file into its directory
+    val in = Files.createTempDirectory("graft_sized_in").toString
+    val rows = (0 until 40).map(i => snap(i * 4000L, i.toLong,
+      source = if (i % 2 == 0) "kalshi" else "polymarket"))
+    Replay.stage(rows.toDF(), in, slices = 4)
+    val schema = spark.read.parquet(in).schema
+    def append(tag: String): (Long, Long, Seq[Int]) = {
+      val outDir = Files.createTempDirectory(s"graft_sized_$tag").toString
+      val ck = Files.createTempDirectory(s"graft_sized_ck_$tag").toString
+      var traded = 0L
+      val q = StreamingLanes.bifurcated(
+        Replay.paced(spark, in, schema, maxFilesPerTrigger = 4), outDir,
+        tradingLane = (df, _) => traded += df.count(),
+        trigger = Trigger.AvailableNow())
+        .option("checkpointLocation", ck).start()
+      try assert(q.awaitTermination(60000), "bifurcated lane did not drain")
+      finally q.stop()
+      val parts = for {
+        src <- new java.io.File(outDir).listFiles().toSeq if src.isDirectory
+        date <- src.listFiles().toSeq if date.isDirectory
+      } yield date.listFiles().count(f => f.getName.startsWith("part-") &&
+        f.getName.endsWith(".parquet"))
+      (traded, spark.read.parquet(outDir).count(), parts)
+    }
+    val (traded, stored, parts) = append("small")
+    assert(traded === 40L)
+    assert(stored === traded)
+    assert(parts === Seq(1, 1, 1, 1))
+
+    val key = "spark.sql.files.maxPartitionBytes"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "512")
+    val (tradedSplit, storedSplit, partsSplit) =
+      try append("split")
+      finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(tradedSplit === 40L)
+    assert(storedSplit === tradedSplit)
+    assert(partsSplit.size === 4 && partsSplit.forall(_ > 1), partsSplit)
+  }
+
   test("streaming dedup drops repeated content within the watermark horizon") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Doc]
