@@ -9,10 +9,10 @@ import graft.sources.Tables
   * Catalyst cannot prune the projection down to a row count — measured time
   * reflects the real operator work (full expression evaluation, shuffles,
   * codegen), which is what the 100 TB design target cares about.
-  * The suite runs TWICE and reports the second lap (lap 1 absorbs
-  * per-query-shape codegen/JIT first-use cost the fixture warm-up can't
-  * reach). Failures are reported distinctly (negative sentinel +
-  * "failed" list) instead of polluting the timing sum.
+  * A warm-up lap runs first (it absorbs per-query-shape codegen/JIT
+  * first-use cost the fixture warm-up can't reach), then two measured
+  * laps. Failures are reported distinctly (negative sentinel + "failed"
+  * list) instead of polluting the timing sum.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -67,7 +67,11 @@ object Bench {
     // warm-up lap + TWO measured laps, report the per-query MIN of the
     // measured pair: lap 1 absorbs per-query first-use cost (plan-shape
     // codegen compilation, operator JIT — a 4.4 s first-lap artifact vs
-    // 0.95 s warm, r7), and min-of-two defends the steady-state claim
+    // 0.95 s warm, r7). For code generation that holds only since
+    // Tables.session sized the generated-code cache to a lap: with Spark's
+    // default of 100 classes, three laps at sf0.01 compiled 4,583 / 4,103 /
+    // 4,110 classes, and now compile 1,932 / 14 / 2 (`Probe compiles`).
+    // Min-of-two defends the steady-state claim
     // against transient box load (the r8 driver artifact carried
     // ~+0.3-1.8 s of concurrent-load inflation on ~1/3 of queries that
     // the judge's re-run measured at or below r7). A query that failed

@@ -17,8 +17,12 @@ object SparkEntry {
     * `chmod`/`readlink` process per local file it creates or renames.
     * Setting the fork-free one here would do nothing once anything has
     * touched `file:`, because Hadoop's `FileSystem` cache keeps the
-    * instance it made first. Build the session with `Tables.session` to
-    * get the fork-free filesystem. */
+    * instance it made first. The generated-code cache is the same: its
+    * size (`spark.sql.codegen.cache.maxEntries`) is a static conf, read
+    * once per JVM when the first plan compiles, so a caller's session keeps
+    * Spark's 100 classes and recompiles graft's plans as they cycle
+    * through it. Build the session with `Tables.session` to get the
+    * fork-free filesystem and a cache sized to graft's working set. */
   def entry(spark: SparkSession): DataFrame = {
     // the driver may hand us a session built without Tables.session's
     // confs. events.parquet is TIMESTAMP(NANOS): older Spark 4.x builds

@@ -50,10 +50,21 @@ object Tables {
       .withColumn("ts", timestamp_micros(expr("ts_ns DIV 1000")))
   }
 
+  /** Generated classes Spark keeps compiled per JVM
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). One lap of the
+    * 221 registered queries at sf0.01 generates 1,932 distinct classes
+    * (`Probe compiles`, lap 1); with the default cache each lap evicted
+    * every class before its next use and compiled it again. This is the
+    * smallest power of two at least twice that count, so a lap and the
+    * stream lanes fit with room for new queries. */
+  val CodegenCacheEntries: Int = 4096
+
   /** Session defaults shared by Verify / Bench / tests: UTC, modest shuffle
     * parallelism for local mode, AQE on (scale-out posture: skew joins and
-    * runtime coalescing matter at 100 TB, cost nothing here), and
-    * `LocalFs.scala`'s fork-free filesystem for `file:` paths.
+    * runtime coalescing matter at 100 TB, cost nothing here),
+    * `LocalFs.scala`'s fork-free filesystem for `file:` paths, and a
+    * generated-code cache that holds graft's working set
+    * ([[CodegenCacheEntries]]).
     */
   def session(master: String, shufflePartitions: Int): SparkSession = {
     val spark = SparkSession.builder()
@@ -81,6 +92,12 @@ object Tables {
       .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
         classOf[ForkFreeLocalFs].getName)
+      // static: read once per JVM, when the first plan is compiled
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      // AQE numbers a query's codegen stages as it plans them, in an order
+      // that follows which shuffle finished first; with the number in the
+      // class name a rerun of the same plan compiled its stages anew
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.Row
 
+import graft.functions.BatchConstant
+
 /** Structured-Streaming restatement of the reference's live pipeline
   * (§3.1/§3.2 of SURVEY): ingest enrichment → dual-lane bifurcation →
   * watermarked stateful views.
@@ -27,8 +29,8 @@ object StreamingLanes {
     * `virginia/coordinator.py:271,311-315`). The stamp is the batch
     * boundary's clock, injected so tests stay deterministic. */
   def withIngestStamps(df: DataFrame, receivedNs: Long): DataFrame =
-    df.withColumn("virginia_received_ns", lit(receivedNs))
-      .withColumn("virginia_enriched_ns", lit(receivedNs))
+    df.withColumn("virginia_received_ns", BatchConstant.column(receivedNs))
+      .withColumn("virginia_enriched_ns", BatchConstant.column(receivedNs))
 
   /** ST2+ST5: watermarked latest-value state per series key. Late rows
     * (older than `lateness` behind the max event time) are dropped, the
@@ -220,7 +222,8 @@ object StreamingLanes {
         lit(0L)).as("n_admitted"),
       coalesce(sum(when(!col("is_new") && col("n_dups") === 0, lit(1L))
         .otherwise(lit(0L))), lit(0L)).as("n_intra_batch"))
-      .select(lit(lane).as("lane"), lit(batchId).as("batch_id"),
+      .select(lit(lane).as("lane"),
+        BatchConstant.column(batchId).as("batch_id"),
         col("n_in"), col("n_admitted"),
         (col("n_in") - col("n_admitted")).as("n_rejected"),
         lit(compacted).as("compacted"), col("n_intra_batch"))
@@ -909,8 +912,8 @@ object StreamingLanes {
       if (onOovStats != null && vocabPieces != null)
         onOovStats(graft.text.TextOps.vocabCoverage(batch, vocabPieces)
           .select(lit("curation_store").as("lane"),
-            lit(batchId).as("batch_id"), col("source"), col("n_tokens"),
-            col("n_oov"), col("oov_rate")), batchId)
+            BatchConstant.column(batchId).as("batch_id"), col("source"),
+            col("n_tokens"), col("n_oov"), col("oov_rate")), batchId)
       process(curated, batchId)
       ()
     }
@@ -1126,8 +1129,8 @@ object StreamingLanes {
       // layout — one telemetry consumer serves both lanes
       onStats(TextOps.vocabCoverage(b, pieces)
         .select(lit("tokenizer_ingest").as("lane"),
-          lit(batchId).as("batch_id"), col("source"), col("n_tokens"),
-          col("n_oov"), col("oov_rate")), batchId)
+          BatchConstant.column(batchId).as("batch_id"), col("source"),
+          col("n_tokens"), col("n_oov"), col("oov_rate")), batchId)
       // ids minted BEFORE the cadence check, under the same store the
       // stats read: a swap takes effect from the next batch, and the
       // old-version rows this ordering leaves behind are exactly the
@@ -1170,8 +1173,9 @@ object StreamingLanes {
             onStaleness(graft.text.Curation.sequenceShardStaleness(
               spark, sp, VocabMaintenance.currentVersion(spark, vocabPath))
               .select(lit("tokenizer_ingest").as("lane"),
-                lit(batchId).as("batch_id"), col("artifact_version"),
-                col("current_version"), col("stale")), batchId)
+                BatchConstant.column(batchId).as("batch_id"),
+                col("artifact_version"), col("current_version"),
+                col("stale")), batchId)
         }
       }
       ()
@@ -1213,7 +1217,8 @@ object StreamingLanes {
         .compactIfNeeded(spark, corpusPath, m, Seq("doc_id")))
       onStats(LmStore.driftBySource(b, LmStore.readUni(spark, modelRoot),
         LmStore.readBi(spark, modelRoot))
-        .select(lit("lm_ingest").as("lane"), lit(batchId).as("batch_id"),
+        .select(lit("lm_ingest").as("lane"),
+          BatchConstant.column(batchId).as("batch_id"),
           col("source"), col("n_docs"), col("n_bigrams"),
           col("n_oov_bigrams"), col("avg_logprob"),
           col("oov_bigram_rate")), batchId)
@@ -1262,7 +1267,7 @@ object StreamingLanes {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val enriched = sizedByBytes(withIngestStamps(batch, batchId)
           .withColumn("date", to_date(col("ts")))
-          .withColumn("batch_id", lit(batchId)))
+          .withColumn("batch_id", BatchConstant.column(batchId)))
         enriched.persist()
         try {
           // storage lane: partitioned append. A replayed batch (failure

@@ -119,6 +119,42 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("bifurcated compiles its plans once: batches 2 and 3 compile no class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Snap]
+    val outDir = Files.createTempDirectory("graft_stamp_storage").toString
+    val ckDir = Files.createTempDirectory("graft_stamp_ck").toString
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME
+    var stamps = Seq.empty[org.apache.spark.sql.types.StructField]
+    val q = StreamingLanes.bifurcated(mem.toDF(), outDir,
+      tradingLane = (df, _) => {
+        stamps = Seq("batch_id", "virginia_received_ns",
+          "virginia_enriched_ns").map(df.schema(_))
+        df.count()
+      },
+      trigger = Trigger.ProcessingTime(0))
+      .option("checkpointLocation", ckDir).start()
+    // one micro-batch per addData: two rows on two venues each time
+    val perBatch = try (0 until 3).map { b =>
+      val c0 = compiled.getCount
+      mem.addData(snap(b * 100L + 10, b * 2L),
+        snap(b * 100L + 20, b * 2L + 1, "0xc1", "polymarket"))
+      q.processAllAvailable()
+      compiled.getCount - c0
+    } finally q.stop()
+    assert(perBatch.head > 0L && perBatch.tail === Seq(0L, 0L), perBatch)
+    // the stamps still carry each batch's id, on every stored row
+    val stored = spark.read.parquet(outDir)
+      .select("snapshot_id", "batch_id", "virginia_received_ns",
+        "virginia_enriched_ns")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getLong(3))).sortBy(_._1).toSeq
+    assert(stored === (0L until 6L).map(id => (id, id / 2, id / 2, id / 2)))
+    assert(stamps.map(f => (f.dataType, f.nullable)) ===
+      Seq.fill(3)((org.apache.spark.sql.types.LongType, false)))
+  }
+
   test("the storage append writes one file per (source, date) per maxPartitionBytes of batch") {
     // 40 rows on two venues and two dates, dealt round-robin into four
     // files, so every (source, date) has rows in more than one file and a
